@@ -21,7 +21,11 @@ from pyspark.sql import functions as F
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    """Table `name` of the sf directory, resolved once per session by
+    the source catalog (agnes_spark/sources/catalog.py)."""
+    from agnes_spark.sources.catalog import read_source
+
+    return read_source(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1926,7 +1930,10 @@ def stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _os.path.join(sf_dir, "documents.parquet"),
         _os.path.join(src, "part-0.parquet"),
     )
-    schema = spark.read.parquet(src).schema
+    # the symlinked file is documents.parquet itself, whose schema the
+    # catalog already holds, and the sink writes the accepted stream
+    # rows: neither read below runs a schema-inference job
+    schema = _t(spark, sf_dir, "documents").schema
     stream = spark.readStream.schema(schema).parquet(src)
     run_ingest_dedup(
         stream,
@@ -1936,7 +1943,7 @@ def stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "text",
     )
-    return spark.read.parquet(_os.path.join(base, "out")).select("doc_id", "n_chars")
+    return spark.read.schema(schema).parquet(_os.path.join(base, "out")).select("doc_id", "n_chars")
 
 
 _QC_MODEL_CACHE: dict[tuple, object] = {}
@@ -2023,8 +2030,7 @@ def stream_ingest_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _os.path.join(sf_dir, "documents.parquet"),
         _os.path.join(src, "part-0.parquet"),
     )
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
+    stream = spark.readStream.schema(_t(spark, sf_dir, "documents").schema).parquet(src)
     run_ingest_neardup(
         stream,
         _os.path.join(base, "state"),

@@ -62,7 +62,8 @@ def kmeans_assign(
 
     Deterministic by construction (see module docstring): same
     answer on any engine, any partitioning, any run. A cluster that
-    empties keeps its previous centroid.
+    empties keeps its previous centroid. Raises ValueError on NULL,
+    empty or ragged vectors and on fewer than `k` rows.
     """
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1 (got {rounds})")
@@ -77,6 +78,21 @@ def kmeans_assign(
     # one materialization: every round re-scans this frame, and
     # localCheckpoint survives catalog cache clears (bench isolation)
     qdf = qdf.localCheckpoint(eager=True)
+
+    # the fold pads a ragged pair with NULL and an empty vector sits at
+    # distance 0 from everything, so either would silently undercount
+    # clusters: check the width once, over the checkpointed blocks
+    n, n_vec, lo, hi = qdf.agg(
+        F.count(F.lit(1)), F.count("q"), F.min(F.size("q")), F.max(F.size("q"))
+    ).first()
+    if n_vec < n:
+        raise ValueError(f"{vec_col} has {n - n_vec} NULL vectors")
+    if n and lo == 0:
+        raise ValueError(f"{vec_col} has empty vectors")
+    if lo != hi:
+        raise ValueError(f"{vec_col} is ragged: widths {lo}..{hi}")
+    if n < k:
+        raise ValueError(f"k={k} needs at least k rows (got {n})")
 
     init = qdf.orderBy(id_col).limit(k).collect()
     centroids = [[float(v) for v in row["q"]] for row in init]

@@ -60,44 +60,46 @@ def field_stats(df: DataFrame, label: str) -> dict:
     return field_stats_df(df, label).collect()[0].asDict()
 
 
+# view_stats' output columns after `field`, in order, with their types
+_VIEW_STATS_COLS = (
+    ("num_na", "long"),
+    ("num_exists", "long"),
+    ("sum", "double"),
+    ("mean", "double"),
+    ("stdev", "double"),
+    ("min", "double"),
+    ("max", "double"),
+)
+
+
 def view_stats(df: DataFrame, labels: list[str] | None = None) -> DataFrame:
     """Per-numeric-field summary (field, num_na, num_exists, sum, mean,
     stdev, min, max) — agnes src/view_stats.rs ViewStats table.
 
-    One wide aggregate over all fields (single scan) reshaped to one
-    row per field driver-side (output is nfields rows — tiny).
+    One wide aggregate over all fields (single scan), reshaped to one
+    row per field in Catalyst: `inline` over an array of per-field
+    structs, each cast to the output schema. The result is a lazy plan
+    like any other view; nothing runs until the caller's action.
     """
     numeric = {"int", "bigint", "smallint", "tinyint", "float", "double", "decimal"}
     if labels is None:
         labels = [c for c, t in df.dtypes if t in numeric or t.startswith("decimal")]
     dtypes = dict(df.dtypes)
     aggs = []
-    for c in labels:
+    for i, c in enumerate(labels):
         aggs.extend(
-            _stat_aggs(
-                c, prefix=f"{c}::", integral=dtypes.get(c) in _INTEGRAL_TYPES
+            _stat_aggs(c, prefix=f"_{i}_", integral=dtypes.get(c) in _INTEGRAL_TYPES)
+        )
+    per_field = F.array(
+        *[
+            F.struct(
+                F.lit(c).alias("field"),
+                *[F.col(f"_{i}_{s}").cast(t).alias(s) for s, t in _VIEW_STATS_COLS],
             )
-        )
-    row = df.agg(*aggs).collect()[0].asDict()
-    spark = df.sparkSession
-    out = [
-        (
-            c,
-            int(row[f"{c}::num_na"]),
-            int(row[f"{c}::num_exists"]),
-            float(row[f"{c}::sum"]),
-            None if row[f"{c}::mean"] is None else float(row[f"{c}::mean"]),
-            float(row[f"{c}::stdev"]),
-            None if row[f"{c}::min"] is None else float(row[f"{c}::min"]),
-            None if row[f"{c}::max"] is None else float(row[f"{c}::max"]),
-        )
-        for c in labels
-    ]
-    return spark.createDataFrame(
-        out,
-        "field string, num_na long, num_exists long, sum double, "
-        "mean double, stdev double, min double, max double",
+            for i, c in enumerate(labels)
+        ]
     )
+    return df.agg(*aggs).select(F.inline(per_field))
 
 
 def welch_ttest(

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from agnes_spark.sources.catalog import read_source
+
 
 def normalize_event_ts(
     spark: SparkSession, df: DataFrame, col: str = "ts"
@@ -53,4 +55,4 @@ def read_events(spark: SparkSession, path: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass
-    return normalize_event_ts(spark, spark.read.parquet(path))
+    return normalize_event_ts(spark, read_source(spark, path))

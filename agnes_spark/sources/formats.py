@@ -11,9 +11,14 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from agnes_spark.sources.catalog import read_source
+
 
 def read_parquet(spark: SparkSession, path: str, columns: Sequence[str] | None = None) -> DataFrame:
-    df = spark.read.parquet(path)
+    """Read a parquet file or directory through the session's source
+    catalog (sources/catalog.py): resolved once, again only after the
+    input changes."""
+    df = read_source(spark, path)
     return df.select(*columns) if columns else df
 
 

@@ -76,3 +76,19 @@ def test_kmeans_rejects_degenerate_parameters(spark):
         kmeans_assign(df, "vid", "v", k=2, rounds=0)
     with pytest.raises(ValueError, match="k must be >= 2"):
         kmeans_assign(df, "vid", "v", k=1, rounds=1)
+
+
+def test_kmeans_rejects_empty_ragged_and_null_vectors(spark):
+    import pytest
+
+    def df(vecs):
+        return spark.createDataFrame(list(enumerate(vecs)), "vid long, v array<double>")
+
+    with pytest.raises(ValueError, match="ragged"):
+        kmeans_assign(df([[0.0, 1.0], [1.0], [2.0, 2.0]]), "vid", "v", k=2, rounds=2)
+    with pytest.raises(ValueError, match="empty"):
+        kmeans_assign(df([[], [], []]), "vid", "v", k=2, rounds=2)
+    with pytest.raises(ValueError, match="NULL"):
+        kmeans_assign(df([[0.0], None, [1.0]]), "vid", "v", k=2, rounds=2)
+    with pytest.raises(ValueError, match="at least k rows"):
+        kmeans_assign(df([[0.0], [1.0]]), "vid", "v", k=3, rounds=1)

@@ -768,3 +768,81 @@ def test_gini_coefficient_known_values(spark):
     ref = (2 * sum((i + 1) * x for i, x in enumerate(s)) - (n + 1) * tot) / (n * tot)
     assert got.n == n and got.total == tot
     assert abs(got.gini - ref) < 1e-12
+
+
+def test_view_stats_all_na_column(spark):
+    df = spark.createDataFrame([(None, 1.0), (None, 2.0), (None, 3.0)], "a double, b double")
+    (a,) = view_stats(df, ["a"]).collect()
+    assert (a.field, a.num_na, a.num_exists) == ("a", 3, 0)
+    assert a.sum == 0.0 and a.stdev == 0.0
+    assert a.mean is None and a.min is None and a.max is None
+
+
+def test_view_stats_integral_sum_past_int64(spark):
+    """bigint sums go through decimal(19,0): 3 x 4e18 passes 2^63
+    without an ANSI overflow error."""
+    big = 4_000_000_000_000_000_000
+    df = spark.createDataFrame([(big,), (big,), (big,), (None,)], "k bigint")
+    (k,) = view_stats(df).collect()
+    assert (k.field, k.num_na, k.num_exists) == ("k", 1, 3)
+    assert k.sum == float(3 * big)
+    assert k.mean == float(big) and k.min == float(big) and k.max == float(big)
+    assert k.stdev == 0.0
+
+
+def test_view_stats_decimal_column(spark):
+    from decimal import Decimal
+
+    vals = [Decimal("1.25"), Decimal("2.50"), None, Decimal("-0.75")]
+    df = spark.createDataFrame([(v,) for v in vals], "d decimal(10,2)")
+    (d,) = view_stats(df).collect()
+    xs = [float(v) for v in vals if v is not None]
+    mean = sum(xs) / len(xs)
+    stdev = math.sqrt(sum((x - mean) ** 2 for x in xs) / (len(xs) - 1))
+    assert (d.field, d.num_na, d.num_exists) == ("d", 1, 3)
+    assert math.isclose(d.sum, sum(xs)) and math.isclose(d.mean, mean)
+    assert math.isclose(d.stdev, stdev)
+    assert (d.min, d.max) == (-0.75, 2.5)
+
+
+def test_view_stats_schema(spark, lineitem):
+    vs = view_stats(lineitem, ["l_quantity", "l_linenumber"])
+    assert vs.schema.simpleString() == (
+        "struct<field:string,num_na:bigint,num_exists:bigint,sum:double,"
+        "mean:double,stdev:double,min:double,max:double>"
+    )
+
+
+# the interactive workload's ops (perfbench/run.py) whose plans build
+# without running a job; merge_views' positional index checkpoints once
+INTERACTIVE_LAZY = (
+    "subview", "filter_pred", "sort_two_keys", "join_equal", "join_band",
+    "melt_wide", "aggregate_sum", "view_stats", "q1_pricing_summary",
+)
+
+
+def test_interactive_ops_build_without_a_job(spark, sf_dir):
+    """With the source catalog warm, building an interactive op's plan
+    launches no Spark job; merge_views, the positive control, does."""
+    import __spark_entry__ as entry
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    registry = entry.queries()
+
+    def jobs_while_building(name):
+        group = f"build-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            before = set(tracker.getJobIdsForGroup(group))
+            registry[name](spark, sf_dir)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return set(tracker.getJobIdsForGroup(group)) - before
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    for name in INTERACTIVE_LAZY:
+        registry[name](spark, sf_dir)  # warms the catalog
+    assert {n: jobs_while_building(n) for n in INTERACTIVE_LAZY} == {n: set() for n in INTERACTIVE_LAZY}
+    assert jobs_while_building("merge_views")

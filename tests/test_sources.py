@@ -259,3 +259,61 @@ def test_load_csv_tolerant_quarantines_malformed_rows(spark, tmp_path):
     assert len(raws) == 2
     assert any("broken quote" in r for r in raws)
     assert any(r.startswith("4,date") for r in raws)
+
+
+def test_catalog_sees_a_file_rewritten_at_the_same_path(spark, tmp_path):
+    """The catalog reuses a resolved source only while the file's stat
+    stamp holds: a rewrite with other rows and an added column is
+    resolved again on the next read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"id": [1, 2]}), p)
+    first = read_parquet(spark, p)
+    assert sorted(r.id for r in first.collect()) == [1, 2]
+    assert sorted(r.id for r in read_parquet(spark, p).collect()) == [1, 2]
+
+    pq.write_table(pa.table({"id": [7, 8, 9], "tag": ["a", "b", "c"]}), p)
+    again = read_parquet(spark, p)
+    assert again.columns == ["id", "tag"]
+    assert sorted((r.id, r.tag) for r in again.collect()) == [(7, "a"), (8, "b"), (9, "c")]
+
+
+def test_catalog_sees_a_directory_overwritten_by_spark(spark, tmp_path):
+    out = str(tmp_path / "d")
+    write_parquet(table(spark, {"a": [1, 2]}, types={"a": "bigint"}), out)
+    assert read_parquet(spark, out).count() == 2
+    write_parquet(table(spark, {"a": [5], "b": ["x"]}, types={"a": "bigint", "b": "string"}), out)
+    back = read_parquet(spark, out)
+    assert back.columns == ["a", "b"]
+    assert [(r.a, r.b) for r in back.collect()] == [(5, "x")]
+
+
+def test_catalog_reads_are_fresh_relations(spark, tmp_path):
+    """Two catalog reads of one table self-join like two spark.read
+    calls: each is a new instance of the resolved relation."""
+    p = str(tmp_path / "s.parquet")
+    write_parquet(table(spark, {"k": [1, 2, 3], "v": [10, 20, 30]},
+                        types={"k": "bigint", "v": "bigint"}), p)
+    a, b = read_parquet(spark, p), read_parquet(spark, p)
+    j = a.join(b, a["k"] == b["k"] + 1).select(a["v"].alias("av"), b["v"].alias("bv"))
+    assert sorted((r.av, r.bv) for r in j.collect()) == [(20, 10), (30, 20)]
+
+
+def test_catalog_entries_stay_with_their_session(spark, tmp_path):
+    """An entry resolved in one session is never returned to another."""
+    from agnes_spark.sources.catalog import source_catalog
+
+    p = str(tmp_path / "x.parquet")
+    write_parquet(table(spark, {"a": [1]}, types={"a": "bigint"}), p)
+    read_parquet(spark, p)
+    assert len(source_catalog(spark)) >= 1
+
+    other = spark.newSession()
+    assert source_catalog(other) is not source_catalog(spark)
+    assert len(source_catalog(other)) == 0
+    df = read_parquet(other, p)
+    assert df.sparkSession is other
+    assert len(source_catalog(other)) == 1
+    assert read_parquet(spark, p).sparkSession is spark
