@@ -1,17 +1,17 @@
-"""Session-scoped source catalog: resolve each input once per session.
+"""Session-scoped source catalog: resolve each parquet input once per session.
 
 `spark.read.parquet(path)` lists the input's files and runs a
 schema-inference job on every call, so a session that reads the same
 tables again and again pays that planning cost on every query. The
-catalog resolves a source once and hands the resolved `DataFrame` back
-on later reads. Each read, hit or miss, gets a new instance of the
-resolved relation (fresh attribute ids over the same file index), so
-two reads of one table self-join exactly as two `spark.read` calls do,
-without the listing or the inference job.
+catalog resolves a path once and hands the resolved relation back on
+later reads of the same path in the same `SparkSession`; that repeat is
+the only case it speeds up. Each read, hit or miss, gets a new instance
+of the resolved relation (fresh attribute ids over the same file
+index), so two reads of one table self-join exactly as two `spark.read`
+calls do, without the listing or the inference job.
 
-Staleness key. An entry is keyed on the absolute path, the reader
-format and its options, and is reused only while the input's `os.stat`
-stamp is unchanged:
+Staleness key. An entry is keyed on the absolute path and is reused
+only while the input's `os.stat` stamp is unchanged:
 
 - a file: its `(st_size, st_mtime_ns)`;
 - a directory: the sorted `(relative name, st_size, st_mtime_ns)` of
@@ -20,11 +20,13 @@ stamp is unchanged:
 A rewritten file gets a new stamp, is resolved again, and replaces the
 superseded entry for its path. An input that cannot be stamped (a
 missing path, a glob, a non-local URI) is never reused: Spark resolves
-it on every read and raises for a missing path as before.
+it on every read and raises for a missing path as before. Every miss
+also drops the entries whose path no longer exists, so reads of
+throwaway temp directories do not pile up.
 
-Scope. The catalog lives on its `SparkSession`, so a `DataFrame` bound
-to one session is never handed to another, and a stopped session's
-entries go with it.
+Scope. The entries live on their `SparkSession`, so a `DataFrame`
+bound to one session is never handed to another, and a stopped
+session's entries go with it.
 """
 
 from __future__ import annotations
@@ -34,6 +36,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
+# attribute of the SparkSession holding path -> (stamp, analyzed JVM plan)
 _ATTR = "_agnes_source_catalog"
 
 
@@ -58,50 +61,25 @@ def _stamp(path: str) -> tuple | None:
     return tuple(listing)
 
 
-class SourceCatalog:
-    """One session's resolved sources; get it with `source_catalog`."""
-
-    def __init__(self, spark: SparkSession):
-        self._spark = spark
-        # key -> (stamp, the resolved relation's analyzed JVM plan)
-        self._entries: dict[tuple, tuple[tuple, object]] = {}
-
-    def read(self, path: str, fmt: str = "parquet", **options) -> DataFrame:
-        """A new instance of the resolved relation of `path`, resolved
-        again only when its stamp has changed since the last read."""
-        if "://" not in path:
-            path = os.path.abspath(path)
-        key = (path, fmt, tuple(sorted((k, str(v)) for k, v in options.items())))
-        # stamp before reading: a write racing the read leaves an older
-        # stamp, so the next read resolves again rather than going stale
-        stamp = _stamp(path)
-        hit = self._entries.get(key)
-        if stamp is not None and hit is not None and hit[0] == stamp:
-            spark = self._spark
-            jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-                spark._jsparkSession, hit[1].newInstance()
-            )
-            return ClassicDataFrame(jdf, spark)
-        df = self._spark.read.format(fmt).options(**options).load(path)
-        if stamp is None:
-            self._entries.pop(key, None)
-        else:
-            self._entries[key] = (stamp, df._jdf.queryExecution().analyzed())
-        return df
-
-    def __len__(self) -> int:
-        return len(self._entries)
-
-
-def source_catalog(spark: SparkSession) -> SourceCatalog:
-    """The catalog held by `spark`, created on first use."""
-    cat = spark.__dict__.get(_ATTR)
-    if cat is None:
-        cat = SourceCatalog(spark)
-        setattr(spark, _ATTR, cat)
-    return cat
-
-
-def read_source(spark: SparkSession, path: str, fmt: str = "parquet", **options) -> DataFrame:
-    """Read `path` through the session's source catalog."""
-    return source_catalog(spark).read(path, fmt, **options)
+def read_source(spark: SparkSession, path: str) -> DataFrame:
+    """A new instance of the resolved parquet relation of `path`,
+    resolved again only when its stamp has changed since the last read
+    in this session."""
+    if "://" not in path:
+        path = os.path.abspath(path)
+    entries = spark.__dict__.setdefault(_ATTR, {})
+    # stamp before reading: a write racing the read leaves an older
+    # stamp, so the next read resolves again rather than going stale
+    stamp = _stamp(path)
+    hit = entries.get(path)
+    if stamp is not None and hit is not None and hit[0] == stamp:
+        jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, hit[1].newInstance()
+        )
+        return ClassicDataFrame(jdf, spark)
+    df = spark.read.parquet(path)
+    for p in [p for p in entries if p == path or not os.path.exists(p)]:
+        entries.pop(p, None)
+    if stamp is not None:
+        entries[path] = (stamp, df._jdf.queryExecution().analyzed())
+    return df

@@ -303,17 +303,42 @@ def test_catalog_reads_are_fresh_relations(spark, tmp_path):
 
 def test_catalog_entries_stay_with_their_session(spark, tmp_path):
     """An entry resolved in one session is never returned to another."""
-    from agnes_spark.sources.catalog import source_catalog
+    from agnes_spark.sources.catalog import _ATTR
 
     p = str(tmp_path / "x.parquet")
     write_parquet(table(spark, {"a": [1]}, types={"a": "bigint"}), p)
     read_parquet(spark, p)
-    assert len(source_catalog(spark)) >= 1
+    assert p in spark.__dict__[_ATTR]
 
     other = spark.newSession()
-    assert source_catalog(other) is not source_catalog(spark)
-    assert len(source_catalog(other)) == 0
+    assert _ATTR not in other.__dict__
     df = read_parquet(other, p)
     assert df.sparkSession is other
-    assert len(source_catalog(other)) == 1
+    assert list(other.__dict__[_ATTR]) == [p]
+    assert other.__dict__[_ATTR] is not spark.__dict__[_ATTR]
     assert read_parquet(spark, p).sparkSession is spark
+
+
+def test_catalog_drops_entries_of_deleted_inputs(spark, tmp_path):
+    """Reads of throwaway directories do not pile up: the next miss
+    drops every entry whose path is gone."""
+    import shutil
+
+    from agnes_spark.sources.catalog import _ATTR
+
+    df = table(spark, {"a": [1, 2]}, types={"a": "bigint"})
+    tmps = [str(tmp_path / f"tmp{i}") for i in range(5)]
+    for d in tmps:
+        write_parquet(df, d)
+        assert read_parquet(spark, d).count() == 2
+    entries = spark.__dict__[_ATTR]
+    assert all(d in entries for d in tmps)
+    for d in tmps:
+        shutil.rmtree(d)
+
+    keep = str(tmp_path / "keep")
+    write_parquet(df, keep)
+    read_parquet(spark, keep)
+    assert not any(d in entries for d in tmps)
+    assert keep in entries
+    assert all(os.path.exists(p) for p in entries)
