@@ -1946,12 +1946,9 @@ def stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.schema(schema).parquet(_os.path.join(base, "out")).select("doc_id", "n_chars")
 
 
-_QC_MODEL_CACHE: dict[tuple, object] = {}
-
-
 def _quality_classifier(spark: SparkSession, sf_dir: str):
-    """Fit (or reuse) the embeddings quality classifier for this
-    corpus — build-once/score-many, like the IVF caches.
+    """Fit the embeddings quality classifier for this corpus; returns
+    (model, holdout).
 
     The corpus's `label` column carries only weak cluster signal
     (within-label mean cos 0.02 vs 0.002 global — LR memorizes the
@@ -1962,18 +1959,13 @@ def _quality_classifier(spark: SparkSession, sf_dir: str):
     exercised non-vacuously, and the holdout twin has a real floor."""
     from agnes_spark.operators.mlinterop import train_quality_classifier
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    hit = _QC_MODEL_CACHE.get(ck)
-    if hit is None:
-        emb = _t(spark, sf_dir, "embeddings").withColumn(
-            "target",
-            (
-                (F.element_at("embedding", 1) + F.element_at("embedding", 2)) > 0
-            ).cast("int"),
-        )
-        hit = train_quality_classifier(emb, "vec_id", "embedding", "target")
-        _QC_MODEL_CACHE[ck] = hit
-    return hit
+    emb = _t(spark, sf_dir, "embeddings").withColumn(
+        "target",
+        (
+            (F.element_at("embedding", 1) + F.element_at("embedding", 2)) > 0
+        ).cast("int"),
+    )
+    return train_quality_classifier(emb, "vec_id", "embedding", "target")
 
 
 def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2217,36 +2209,24 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# persisted minhash corpus state per (app id, sf_dir): the production
-# shape is build-once / probe-many — repeated gate/bench invocations
-# probe the same on-disk state instead of re-banding the corpus
-_MINHASH_STATE_CACHE: dict[tuple, str] = {}
-
-
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs involving a NEW shard, found by probing the
     corpus's persisted MinHash band index + shingle table (both
     round-tripped through parquet, as they would live at scale) — no
-    corpus text rescan, no corpus re-banding; within one process the
-    state is built once and probed per call, the serving pattern.
+    corpus text rescan at probe time. Each call rebuilds the state from
+    the current corpus into one per-sf scratch directory.
     Hash-based — rows-only check; check_incremental_minhash_parity
     pins equality with the full-corpus run."""
-    import tempfile
-
     from agnes_spark.operators.dedup_incremental import (
         incremental_minhash_pairs,
         minhash_state,
     )
 
     corpus, delta = _docs_corpus_delta(spark, sf_dir)
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    path = _MINHASH_STATE_CACHE.get(ck)
-    if path is None:
-        bands, shingles = minhash_state(corpus, "doc_id", "text")
-        path = tempfile.mkdtemp(prefix="agnes_mhstate_")
-        bands.write.mode("overwrite").parquet(path + "/bands")
-        shingles.write.mode("overwrite").parquet(path + "/shingles")
-        _MINHASH_STATE_CACHE[ck] = path
+    bands, shingles = minhash_state(corpus, "doc_id", "text")
+    path = _gate_scratch("mhstate", sf_dir)
+    bands.write.mode("overwrite").parquet(path + "/bands")
+    shingles.write.mode("overwrite").parquet(path + "/shingles")
     return incremental_minhash_pairs(
         delta,
         spark.read.parquet(path + "/bands"),
@@ -2257,21 +2237,15 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# persisted embedding cell store per (app id, sf_dir) — same
-# build-once / probe-many shape as the minhash state above
-_EMB_STATE_CACHE: dict[tuple, str] = {}
-
-
 def dedup_incremental_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs involving a NEW shard (vec_id % 10 == 0)
     probed against the persisted corpus state: a corpus-trained
     IvfIndex's centers + the 2-nearest cell store, both parquet
     round-tripped (operators/dedup_incremental.py). No corpus vector
-    rescan, no KMeans retrain per shard. Iterative training underneath
-    — rows-only check; check_incremental_embedding pins
+    rescan at probe time. Each call rebuilds the state from the current
+    corpus into one per-sf scratch directory. Iterative training
+    underneath — rows-only check; check_incremental_embedding pins
     no-false-positives + recall vs the exhaustive pairs."""
-    import tempfile
-
     from agnes_spark.operators.dedup_incremental import (
         embedding_cell_store,
         incremental_embedding_pairs,
@@ -2281,19 +2255,13 @@ def dedup_incremental_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") % 10 != 0)
     delta = emb.filter(F.col("vec_id") % 10 == 0)
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    path = _EMB_STATE_CACHE.get(ck)
-    if path is None:
-        index = IvfIndex.build(
-            corpus, "vec_id", "embedding", n_cells=8, max_iter=4
-        )
-        path = tempfile.mkdtemp(prefix="agnes_embstate_")
-        index.centers.write.mode("overwrite").parquet(path + "/centers")
-        embedding_cell_store(index).write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(path + "/cells")
-        index.unpersist()
-        _EMB_STATE_CACHE[ck] = path
+    index = IvfIndex.build(corpus, "vec_id", "embedding", n_cells=8, max_iter=4)
+    path = _gate_scratch("embstate", sf_dir)
+    index.centers.write.mode("overwrite").parquet(path + "/centers")
+    embedding_cell_store(index).write.mode("overwrite").partitionBy(
+        "cell"
+    ).parquet(path + "/cells")
+    index.unpersist()
     return incremental_embedding_pairs(
         delta,
         spark.read.parquet(path + "/centers"),
@@ -2400,8 +2368,7 @@ def dedup_embedding_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agnes_spark.operators.dedup import embedding_dedup_auto
 
     return embedding_dedup_auto(
-        _t(spark, sf_dir, "embeddings"), "vec_id", "embedding", threshold=0.35,
-        cache_key=sf_dir,
+        _t(spark, sf_dir, "embeddings"), "vec_id", "embedding", threshold=0.35
     )
 
 
@@ -2432,7 +2399,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     return ivf_topk(
         emb.filter(F.col("vec_id") < 10), emb, "vec_id", "vec_id",
-        k=5, n_cells=8, n_probe=3, cache_key=sf_dir,
+        k=5, n_cells=8, n_probe=3,
     )
 
 
@@ -3598,26 +3565,30 @@ def moment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GATE_SCRATCH: list[str] = []
 
 
-def _gate_scratch(sub: str) -> str:
-    """Per-process scratch subdirectory for gates that write dataset
-    copies (Z-order / compaction / schema-evolution / bucketed
-    layouts), removed at interpreter exit — repeated gate invocations
-    across bench/test/check processes must not accumulate /tmp copies
-    (same pattern as mlinterop._scratch_dir)."""
+def _gate_scratch(name: str, sf_dir: str) -> str:
+    """An empty per-process scratch subdirectory `<name>_<sf dir
+    basename>` for gates that write dataset copies or state (Z-order /
+    compaction / schema-evolution / partitioned layouts,
+    incremental-dedup state, binary fixtures). Each call clears it, so
+    a gate rewrites its files from its current inputs and never reads
+    back a file of an earlier call; the parent directory is removed at
+    interpreter exit, so repeated gate invocations across processes do
+    not accumulate /tmp copies (same pattern as
+    mlinterop._scratch_dir)."""
+    import shutil
+
     if not _GATE_SCRATCH:
         import atexit
-        import shutil
         import tempfile
 
         d = tempfile.mkdtemp(prefix="agnes_gates_")
         atexit.register(shutil.rmtree, d, ignore_errors=True)
         _GATE_SCRATCH.append(d)
+    sub = f"{name}_{os.path.basename(sf_dir.rstrip('/'))}"
     path = os.path.join(_GATE_SCRATCH[0], sub)
-    os.makedirs(path, exist_ok=True)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
     return path
-
-
-_ZORDER_SCAN_CACHE: dict[tuple, str] = {}
 
 
 def zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3629,13 +3600,9 @@ def zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max pruning is what makes it fast at 100 TB)."""
     from agnes_spark.operators.partitioning import write_zordered
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    path = _ZORDER_SCAN_CACHE.get(ck)
-    if path is None:
-        ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type", "value")
-        path = _gate_scratch(f"zord_{os.path.basename(sf_dir.rstrip('/'))}") + "/events_z"
-        write_zordered(ev, path, ["user_id", "event_id"], bits=12, num_files=16)
-        _ZORDER_SCAN_CACHE[ck] = path
+    ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type", "value")
+    path = _gate_scratch("zord", sf_dir) + "/events_z"
+    write_zordered(ev, path, ["user_id", "event_id"], bits=12, num_files=16)
     back = spark.read.parquet(path)
     return (
         back.filter(
@@ -3649,46 +3616,39 @@ def zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BUCKETED_JOIN_CACHE: dict[tuple, str] = {}
-
-
 def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed-table co-located join (partitioning.py write_bucketed):
     orders and customer both bucketed 8 ways on custkey, so the join
     reads co-located buckets with NO shuffle on either side — the
     persistent-layout answer to the most repeated join in a warehouse.
     Plan-pinned shuffle-free in tests/test_plans.py."""
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    suffix = _BUCKETED_JOIN_CACHE.get(ck)
-    if suffix is None:
-        import re as _re
+    import re as _re
 
-        from agnes_spark.operators.partitioning import write_bucketed
+    from agnes_spark.operators.partitioning import write_bucketed
 
-        # DETERMINISTIC name from the sf dir (not Python's per-process
-        # salted hash()): reruns overwrite the same two tables instead
-        # of leaking a fresh bucketed copy of orders+customer into the
-        # warehouse per process. The in-memory catalog forgets tables
-        # between processes while the managed directory survives, so
-        # creation would fail with LOCATION_ALREADY_EXISTS — drop any
-        # registration AND delete the orphan location first.
-        suffix = _re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-        wh = spark.conf.get(
-            "spark.sql.warehouse.dir", "spark-warehouse"
-        ).removeprefix("file:")
-        jvm = spark.sparkContext._jvm  # noqa: SLF001
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
-        for t in (f"orders_b_{suffix}", f"cust_b_{suffix}"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            jpath = jvm.org.apache.hadoop.fs.Path(os.path.join(wh, t))
-            fs = jpath.getFileSystem(hconf)
-            if fs.exists(jpath):
-                fs.delete(jpath, True)
-        o = _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-        c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-        write_bucketed(o, f"orders_b_{suffix}", ["o_custkey"], num_buckets=8)
-        write_bucketed(c, f"cust_b_{suffix}", ["c_custkey"], num_buckets=8)
-        _BUCKETED_JOIN_CACHE[ck] = suffix
+    # DETERMINISTIC name from the sf dir (not Python's per-process
+    # salted hash()): reruns overwrite the same two tables instead
+    # of leaking a fresh bucketed copy of orders+customer into the
+    # warehouse per process. The in-memory catalog forgets tables
+    # between processes while the managed directory survives, so
+    # creation would fail with LOCATION_ALREADY_EXISTS — drop any
+    # registration AND delete the orphan location first.
+    suffix = _re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
+    wh = spark.conf.get(
+        "spark.sql.warehouse.dir", "spark-warehouse"
+    ).removeprefix("file:")
+    jvm = spark.sparkContext._jvm  # noqa: SLF001
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
+    for t in (f"orders_b_{suffix}", f"cust_b_{suffix}"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        jpath = jvm.org.apache.hadoop.fs.Path(os.path.join(wh, t))
+        fs = jpath.getFileSystem(hconf)
+        if fs.exists(jpath):
+            fs.delete(jpath, True)
+    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    write_bucketed(o, f"orders_b_{suffix}", ["o_custkey"], num_buckets=8)
+    write_bucketed(c, f"cust_b_{suffix}", ["c_custkey"], num_buckets=8)
     o = spark.table(f"orders_b_{suffix}")
     c = spark.table(f"cust_b_{suffix}")
     return (
@@ -4147,9 +4107,6 @@ def decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COMPACT_CACHE: dict[tuple, str] = {}
-
-
 def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction parity (partitioning.py
     compact_small_files): events fragmented into 64 files, compacted
@@ -4159,15 +4116,11 @@ def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming-ingested 100 TB table scannable."""
     from agnes_spark.operators.partitioning import compact_small_files
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    out = _COMPACT_CACHE.get(ck)
-    if out is None:
-        ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type", "value")
-        base = _gate_scratch(f"compact_{os.path.basename(sf_dir.rstrip('/'))}")
-        frag, out = base + "/fragmented", base + "/compacted"
-        ev.repartition(64).write.mode("overwrite").parquet(frag)
-        compact_small_files(spark, frag, out, target_file_bytes=8 * 1024 * 1024)
-        _COMPACT_CACHE[ck] = out
+    ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type", "value")
+    base = _gate_scratch("compact", sf_dir)
+    frag, out = base + "/fragmented", base + "/compacted"
+    ev.repartition(64).write.mode("overwrite").parquet(frag)
+    compact_small_files(spark, frag, out, target_file_bytes=8 * 1024 * 1024)
     back = spark.read.parquet(out)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -4175,9 +4128,6 @@ def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("event_id").alias("min_event"),
         F.max("event_id").alias("max_event"),
     )
-
-
-_SCHEMA_EVO_CACHE: dict[tuple, tuple] = {}
 
 
 def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4188,29 +4138,21 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact rows). Long-lived ingest directories always end up here."""
     from agnes_spark.sources.formats import read_parquet_merged
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    paths = _SCHEMA_EVO_CACHE.get(ck)
-    if paths is None:
-        o = _t(spark, sf_dir, "orders")
-        base = _gate_scratch(f"schemaevo_{os.path.basename(sf_dir.rstrip('/'))}")
-        p_old, p_new = base + "/b1", base + "/b2"
-        o.filter(F.col("o_orderkey") % 2 == 0).select(
-            "o_orderkey", "o_totalprice"
-        ).write.mode("overwrite").parquet(p_old)
-        o.filter(F.col("o_orderkey") % 2 == 1).select(
-            "o_orderkey", "o_totalprice", "o_orderpriority"
-        ).write.mode("overwrite").parquet(p_new)
-        paths = (p_old, p_new)
-        _SCHEMA_EVO_CACHE[ck] = paths
-    merged = read_parquet_merged(spark, *paths)
+    o = _t(spark, sf_dir, "orders")
+    base = _gate_scratch("schemaevo", sf_dir)
+    p_old, p_new = base + "/b1", base + "/b2"
+    o.filter(F.col("o_orderkey") % 2 == 0).select(
+        "o_orderkey", "o_totalprice"
+    ).write.mode("overwrite").parquet(p_old)
+    o.filter(F.col("o_orderkey") % 2 == 1).select(
+        "o_orderkey", "o_totalprice", "o_orderpriority"
+    ).write.mode("overwrite").parquet(p_new)
+    merged = read_parquet_merged(spark, p_old, p_new)
     return merged.select(
         "o_orderkey",
         F.round("o_totalprice", 2).alias("price"),
         F.coalesce("o_orderpriority", F.lit("<pre-evolution>")).alias("priority"),
     )
-
-
-_BLOOM_WORDS_CACHE: dict[tuple, tuple] = {}
 
 
 def bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4238,14 +4180,8 @@ def bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1997-01-01") & (F.col("o_orderdate") < "1997-03-01")
     )
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    cached = _BLOOM_WORDS_CACHE.get(ck)
-    if cached is None:
-        num_bits, num_hashes = size_bloom(o.count(), 0.01)
-        words = build_bloom(o, "o_orderkey", num_bits, num_hashes)
-        cached = (words, num_bits, num_hashes)
-        _BLOOM_WORDS_CACHE[ck] = cached
-    words, num_bits, num_hashes = cached
+    num_bits, num_hashes = size_bloom(o.count(), 0.01)
+    words = build_bloom(o, "o_orderkey", num_bits, num_hashes)
     pruned = li.filter(
         bloom_might_contain(F.col("l_orderkey"), words, num_bits, num_hashes)
     )
@@ -4258,21 +4194,14 @@ def bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PART_WRITE_CACHE: dict[tuple, str] = {}
-
-
 def _orders_by_year_path(spark: SparkSession, sf_dir: str) -> str:
-    """Write-once orders partitioned by o_year (shared by the static
-    and dynamic partition-pruning gates)."""
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    path = _PART_WRITE_CACHE.get(ck)
-    if path is None:
-        o = _t(spark, sf_dir, "orders")
-        path = _gate_scratch(f"partw_{os.path.basename(sf_dir.rstrip('/'))}") + "/orders_by_year"
-        o.withColumn("o_year", F.year("o_orderdate")).write.mode(
-            "overwrite"
-        ).partitionBy("o_year").parquet(path)
-        _PART_WRITE_CACHE[ck] = path
+    """Write orders partitioned by o_year (the layout the static and
+    dynamic partition-pruning gates read back); returns its path."""
+    o = _t(spark, sf_dir, "orders")
+    path = _gate_scratch("partw", sf_dir) + "/orders_by_year"
+    o.withColumn("o_year", F.year("o_orderdate")).write.mode(
+        "overwrite"
+    ).partitionBy("o_year").parquet(path)
     return path
 
 
@@ -4410,97 +4339,28 @@ def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PAGERANK_CACHE: dict[tuple, tuple] = {}
-
-
 def _copurchase_pagerank(spark: SparkSession, sf_dir: str) -> tuple:
     """PageRank over the co-purchase part graph (parts in the same
     order, both directions, distinct): 12 fixed rounds, tol=0 so the
     parity twin's numpy reference can follow the identical schedule.
-    Returns (ranks, edges), BOTH cached per (app, sf_dir): ranks is
-    the terminal frame of an iterative job and edges is the dominant
-    self-join — gate and twin must each run neither twice.
-
-    Both frames materialize via localCheckpoint, NOT persist():
-    bench.py isolates queries with spark.catalog.clearCache(), which
-    unpersists every cacheManager entry — a persist()-backed
-    cross-invocation cache silently recomputes its whole lineage
-    (the co-purchase self-join + 12 pagerank rounds) inside every
-    timed run (measured: labelprop 133s -> ~12s after this change).
-    localCheckpoint blocks live outside the cacheManager and survive
-    as long as this dict holds the Python reference."""
+    Returns (ranks, edges): ranks is pagerank's own checkpointed
+    terminal frame, edges the lazy edge plan it ran on."""
     from agnes_spark.operators.graph import pagerank
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    out = _PAGERANK_CACHE.get(ck)
-    if out is None:
-        edges = _copurchase_edges(spark, sf_dir)
-        ranks = pagerank(edges, max_iter=12, tol=0.0).localCheckpoint(eager=True)
-        out = (ranks, edges)
-        _PAGERANK_CACHE[ck] = out
-    return out
+    edges = _copurchase_edges(spark, sf_dir)
+    return pagerank(edges, max_iter=12, tol=0.0), edges
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The symmetrized co-purchase edge frame alone, cached
-    separately from the pagerank ranks so edge-only consumers (khop
-    reach, kcore first touch) don't pay for 12 power-iteration
-    rounds they never read."""
+    """The symmetrized co-purchase edge frame (src, dst), a lazy plan;
+    the graph operators persist and release their own copy of it."""
     from agnes_spark.operators.graph import within_group_pairs
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    edges = _COPURCHASE_EDGE_CACHE.get(ck)
-    if edges is None:
-        li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        und = within_group_pairs(li, "l_orderkey", "l_partkey").distinct()
-        edges = (
-            und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-            .unionByName(und.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-            .localCheckpoint(eager=True)
-        )
-        _COPURCHASE_EDGE_CACHE[ck] = edges
-    return edges
-
-
-_COPURCHASE_EDGE_CACHE: dict = {}
-
-# Build-once caches shared across queries() invocations, keyed by the
-# gate that depends on them. bench.py prewarms a key's deps BEFORE its
-# timed runs and stamps the build seconds as cache_build_s — so
-# in-session numbers (cache warm from an earlier key) and standalone
-# AGNES_BENCH_ONLY numbers are both warm and directly comparable.
-# (The r8 AND r9 drift investigations both traced to this ambiguity:
-# itemitem 2.2s in-session vs 8.2s standalone with zero code change.)
-# itemitem_parts has no shared cache; it is listed so the whole graph
-# family carries an explicit cache_build_s (0.0) in bench entries.
-SHARED_CACHE_DEPS: dict[str, tuple[str, ...]] = {
-    "pagerank_copurchase": ("copurchase_pagerank",),
-    "check_pagerank_parity": ("copurchase_pagerank",),
-    "labelprop_communities": ("copurchase_edges",),
-    "kcore_copurchase": ("copurchase_edges",),
-    "khop_reach_copurchase": ("copurchase_edges",),
-    "ppr_copurchase": ("copurchase_edges",),
-    "assortativity_copurchase": ("copurchase_edges",),
-    "link_prediction_copurchase": ("linkpred_edges",),
-    "itemitem_parts": (),
-}
-
-
-def prewarm_shared_caches(spark: SparkSession, sf_dir: str, key: str) -> float:
-    """Build the shared caches `key` depends on (SHARED_CACHE_DEPS);
-    returns wall seconds spent building — 0.0-ish when already warm
-    this session, the real build cost on first touch."""
-    import time as _tm
-
-    builders = {
-        "copurchase_edges": _copurchase_edges,
-        "copurchase_pagerank": _copurchase_pagerank,
-        "linkpred_edges": _linkpred_edges,
-    }
-    t0 = _tm.perf_counter()
-    for dep in SHARED_CACHE_DEPS.get(key, ()):
-        builders[dep](spark, sf_dir)
-    return round(_tm.perf_counter() - t0, 3)
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    und = within_group_pairs(li, "l_orderkey", "l_partkey").distinct()
+    return und.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
+        und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    )
 
 
 def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4568,7 +4428,7 @@ def check_pagerank_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     ranks, edges_df = _copurchase_pagerank(spark, sf_dir)
-    edges = edges_df.collect()  # served from the shared persisted frame
+    edges = edges_df.collect()
     ids = sorted({r["src"] for r in edges} | {r["dst"] for r in edges})
     idx = {n: i for i, n in enumerate(ids)}
     n = len(ids)
@@ -5507,46 +5367,32 @@ def pmi_collocations_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pmi_collocations(d, "text", min_count=5, k=50)
 
 
-_LINKPRED_EDGE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _linkpred_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The top-16-neighbor kNN-sparsified co-purchase edge frame for
-    link prediction, cached per (app, sf_dir) like _copurchase_edges
-    (localCheckpoint so it survives bench.py's clearCache isolation).
-    Factored out so bench.py can prewarm + stamp the build cost."""
+    link prediction (src, dst), a lazy plan."""
     from pyspark.sql import Window
 
     from agnes_spark.operators.graph import within_group_pairs
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    edges = _LINKPRED_EDGE_CACHE.get(ck)
-    if edges is None:
-        li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        wt = within_group_pairs(li, "l_orderkey", "l_partkey").groupBy("a", "b").agg(
-            F.count(F.lit(1)).cast("long").alias("w")
-        )
-        dirs = wt.select(F.col("a").alias("u"), F.col("b").alias("v"), "w").unionByName(
-            wt.select(F.col("b").alias("u"), F.col("a").alias("v"), "w")
-        )
-        wn = Window.partitionBy("u").orderBy(F.col("w").desc(), F.col("v").asc())
-        top = (
-            dirs.withColumn("__rn", F.row_number().over(wn))
-            .filter(F.col("__rn") <= 16)
-            .select("u", "v")
-        )
-        und_k = top.select(
-            F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
-        ).distinct()
-        edges = (
-            und_k.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-            .unionByName(und_k.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-            # localCheckpoint, not persist: survives the bench's
-            # clearCache query isolation (see _copurchase_pagerank)
-            .localCheckpoint(eager=True)
-        )
-        _LINKPRED_EDGE_CACHE[ck] = edges
-    return edges
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    wt = within_group_pairs(li, "l_orderkey", "l_partkey").groupBy("a", "b").agg(
+        F.count(F.lit(1)).cast("long").alias("w")
+    )
+    dirs = wt.select(F.col("a").alias("u"), F.col("b").alias("v"), "w").unionByName(
+        wt.select(F.col("b").alias("u"), F.col("a").alias("v"), "w")
+    )
+    wn = Window.partitionBy("u").orderBy(F.col("w").desc(), F.col("v").asc())
+    top = (
+        dirs.withColumn("__rn", F.row_number().over(wn))
+        .filter(F.col("__rn") <= 16)
+        .select("u", "v")
+    )
+    und_k = top.select(
+        F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
+    ).distinct()
+    return und_k.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
+        und_k.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    )
 
 
 def link_prediction_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5779,9 +5625,6 @@ def data_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BINARY_INGEST_CACHE: dict[tuple, str] = {}
-
-
 def binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal ingestion parity (sources/formats.read_binary_files):
     every 25th document's utf-8 bytes land as one opaque .bin file
@@ -5794,20 +5637,16 @@ def binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     image/audio pipeline builds on."""
     from agnes_spark.sources.formats import read_binary_files
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    d = _BINARY_INGEST_CACHE.get(ck)
-    if d is None:
-        docs = (
-            _t(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 25 == 0)
-            .select("doc_id", "text")
-            .collect()
-        )
-        d = _gate_scratch(f"binfiles_{os.path.basename(sf_dir.rstrip('/'))}")
-        for r in docs:
-            with open(os.path.join(d, f"{r.doc_id}.bin"), "wb") as fh:
-                fh.write(r.text.encode("utf-8"))
-        _BINARY_INGEST_CACHE[ck] = d
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 25 == 0)
+        .select("doc_id", "text")
+        .collect()
+    )
+    d = _gate_scratch("binfiles", sf_dir)
+    for r in docs:
+        with open(os.path.join(d, f"{r.doc_id}.bin"), "wb") as fh:
+            fh.write(r.text.encode("utf-8"))
     files = read_binary_files(spark, d, glob="*.bin")
     fname = F.element_at(F.split(F.col("path"), "/"), -1)
     return files.select(
@@ -5815,9 +5654,6 @@ def binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("length").cast("bigint").alias("n_bytes"),
         F.md5("content").alias("md5_hex"),
     ).orderBy("doc_id")
-
-
-_IMAGE_CENSUS_CACHE: dict[tuple, str] = {}
 
 
 def image_header_census(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5846,38 +5682,34 @@ def image_header_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         make_webp_bytes,
     )
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    d = _IMAGE_CENSUS_CACHE.get(ck)
-    if d is None:
-        ids = [
-            r.doc_id
-            for r in _t(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 25 == 0)
-            .select("doc_id")
-            .collect()
-        ]
-        d = _gate_scratch(f"imgfiles_{os.path.basename(sf_dir.rstrip('/'))}")
-        for i in ids:
-            w, h = 16 + (i * 7) % 2048, 16 + (i * 13) % 2048
-            v = (i // 25) % 8
-            if v == 0:
-                payload = make_png_bytes(w, h, extra_payload=i % 41)
-            elif v in (1, 4):
-                payload = make_jpeg_bytes(
-                    w, h, app0_pad=i % 32, com_len=i % 57, trailing=i % 23,
-                    exif_pad=(i % 13) if v == 4 else None,
-                )
-            elif v in (2, 5):
-                payload = make_gif_bytes(
-                    w, h, version="87a" if v == 2 else "89a", trailing=i % 19
-                )
-            else:
-                payload = make_webp_bytes(
-                    w, h, flavor={3: "vp8", 6: "vp8l", 7: "vp8x"}[v], pad=i % 29
-                )
-            with open(os.path.join(d, f"{i}.img"), "wb") as fh:
-                fh.write(payload)
-        _IMAGE_CENSUS_CACHE[ck] = d
+    ids = [
+        r.doc_id
+        for r in _t(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 25 == 0)
+        .select("doc_id")
+        .collect()
+    ]
+    d = _gate_scratch("imgfiles", sf_dir)
+    for i in ids:
+        w, h = 16 + (i * 7) % 2048, 16 + (i * 13) % 2048
+        v = (i // 25) % 8
+        if v == 0:
+            payload = make_png_bytes(w, h, extra_payload=i % 41)
+        elif v in (1, 4):
+            payload = make_jpeg_bytes(
+                w, h, app0_pad=i % 32, com_len=i % 57, trailing=i % 23,
+                exif_pad=(i % 13) if v == 4 else None,
+            )
+        elif v in (2, 5):
+            payload = make_gif_bytes(
+                w, h, version="87a" if v == 2 else "89a", trailing=i % 19
+            )
+        else:
+            payload = make_webp_bytes(
+                w, h, flavor={3: "vp8", 6: "vp8l", 7: "vp8x"}[v], pad=i % 29
+            )
+        with open(os.path.join(d, f"{i}.img"), "wb") as fh:
+            fh.write(payload)
     from agnes_spark.sources.formats import read_binary_files
 
     files = read_binary_files(spark, d, glob="*.img")
@@ -6898,8 +6730,8 @@ def khop_reach_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi on node ids (never a cartesian); frontiers localCheckpoint
     between rounds so no round re-runs its predecessors. Exact
     integer counts; seeds with an empty hop emit no row (mirrored).
-    Edges reuse the edge-only cache (_copurchase_edges — the
-    pagerank rounds are NOT built for edge-only consumers).
+    Edges come from _copurchase_edges (the pagerank rounds are NOT
+    built for edge-only consumers).
     Oracle: the identical 3 rounds unrolled with EXCEPT."""
     edges = _copurchase_edges(spark, sf_dir)
     seeds = (
@@ -7226,26 +7058,18 @@ def markov_next_event_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BPE_MERGES_CACHE: dict[tuple, list] = {}
-
-
-def _bpe_merges_cached(spark: SparkSession, sf_dir: str, lang: str = "en") -> list:
-    """Train-once-per-session BPE merges over one language's documents
-    (the bounded tokenizer artifact the BPE gates share; en for the
+def _bpe_merges(spark: SparkSession, sf_dir: str, lang: str = "en") -> list:
+    """Train BPE merges over one language's documents (the bounded
+    tokenizer artifact the BPE gates share; en for the
     train/encode/fertility gates, every corpus language for
     bpe_fertility_delta's retrain comparison)."""
     from agnes_spark.operators.bpe import bpe_train
 
-    ck = (spark.sparkContext.applicationId, sf_dir, lang)
-    m = _BPE_MERGES_CACHE.get(ck)
-    if m is None:
-        d = _t(spark, sf_dir, "documents").filter(F.col("lang") == lang)
-        m = [
-            (r["left"], r["right"])
-            for r in bpe_train(d, "text", merges=5).orderBy("round").collect()
-        ]
-        _BPE_MERGES_CACHE[ck] = m
-    return m
+    d = _t(spark, sf_dir, "documents").filter(F.col("lang") == lang)
+    return [
+        (r["left"], r["right"])
+        for r in bpe_train(d, "text", merges=5).orderBy("round").collect()
+    ]
 
 
 def bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7263,7 +7087,7 @@ def bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agnes_spark.operators.bpe import bpe_encode_counts
 
     d = _t(spark, sf_dir, "documents").filter(F.col("lang") == "en")
-    enc = bpe_encode_counts(d, "text", _bpe_merges_cached(spark, sf_dir))
+    enc = bpe_encode_counts(d, "text", _bpe_merges(spark, sf_dir))
     docw = d.select(
         "doc_id", F.explode(ws_tokens(F.lower(F.col("text")))).alias("w")
     ).filter(F.col("w").rlike("^[a-z]+$"))
@@ -7476,7 +7300,7 @@ def token_fertility_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer-efficiency audit (tokens per word / chars per token,
     e.g. Rust et al., ACL'21): encode EVERY language's word
     vocabulary with the ENGLISH-trained BPE merges
-    (_bpe_merges_cached — the same 5-round artifact bpe_merges_docs /
+    (_bpe_merges — the same 5-round artifact bpe_merges_docs /
     bpe_encode_docs grade) and aggregate exact token/word/char totals
     per lang. The merge replay runs on the bounded all-lang vocab
     (operators/bpe.py bpe_encode_counts); per-corpus work is one
@@ -7488,7 +7312,7 @@ def token_fertility_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agnes_spark.operators.bpe import bpe_encode_counts
 
     d = _t(spark, sf_dir, "documents")
-    enc = bpe_encode_counts(d, "text", _bpe_merges_cached(spark, sf_dir))
+    enc = bpe_encode_counts(d, "text", _bpe_merges(spark, sf_dir))
     docw = d.select(
         "doc_id", "lang", F.explode(ws_tokens(F.lower(F.col("text")))).alias("w")
     ).filter(F.col("w").rlike("^[a-z]+$"))
@@ -7527,8 +7351,8 @@ _FERTILITY_LANGS = ("de", "en", "es", "fr", "zh")
 def bpe_fertility_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language tokenizer RETRAIN comparison — the follow-through
     on token_fertility_lang's audit (Rust et al., ACL'21): train BPE
-    merges on EACH language's own documents (bpe_train, session-cached
-    per lang) and report, per language, its fertility under the
+    merges on EACH language's own documents (bpe_train, once per
+    lang) and report, per language, its fertility under the
     en-trained merges vs its own-trained merges. fertility_delta =
     fertility_en - fertility_own is the price the shared (en-biased)
     vocabulary charges that language — the actual vocab-design readout.
@@ -7543,15 +7367,14 @@ def bpe_fertility_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agnes_spark.operators.bpe import bpe_encode_counts
 
     d = _t(spark, sf_dir, "documents")
-    enc_en = bpe_encode_counts(d, "text", _bpe_merges_cached(spark, sf_dir)).select(
+    merges = {lang: _bpe_merges(spark, sf_dir, lang) for lang in _FERTILITY_LANGS}
+    enc_en = bpe_encode_counts(d, "text", merges["en"]).select(
         "w", F.col("n_tokens").alias("t_en")
     )
     enc_own = None
     for lang in _FERTILITY_LANGS:
         e = bpe_encode_counts(
-            d.filter(F.col("lang") == lang),
-            "text",
-            _bpe_merges_cached(spark, sf_dir, lang),
+            d.filter(F.col("lang") == lang), "text", merges[lang]
         ).select(F.lit(lang).alias("lang"), "w", F.col("n_tokens").alias("t_own"))
         enc_own = e if enc_own is None else enc_own.unionByName(e)
     docw = (
@@ -7723,9 +7546,6 @@ def check_binary_minhash_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mh.join(ex, ["a_id", "b_id"], "left_anti")
 
 
-_MEDIA_CENSUS_CACHE: dict[tuple, str] = {}
-
-
 def media_header_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio/video metadata census WITHOUT a codec library
     (operators/multimodal.media_header_meta) — the WAV/MP4 twin of
@@ -7756,69 +7576,65 @@ def media_header_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         media_header_meta,
     )
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    d = _MEDIA_CENSUS_CACHE.get(ck)
-    if d is None:
-        ids = [
-            r.doc_id
-            for r in _t(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 25 == 0)
-            .select("doc_id")
-            .collect()
-        ]
-        d = _gate_scratch(f"mediafiles_{os.path.basename(sf_dir.rstrip('/'))}")
-        for i in ids:
-            ch = 1 + i % 3
-            sr = (8000, 16000, 44100, 48000)[i % 4]
-            bits = 8 * (1 + i % 4)
-            data = 2 * (500 + i % 488)
-            junk = 2 * (1 + i % 18)
-            v = (i // 25) % 10
-            if v == 0:
-                payload = make_wav_bytes(ch, sr, bits, data)
-            elif v == 1:
-                payload = make_wav_bytes(ch, sr, bits, data, junk_pad=junk)
-            elif v == 2:
-                payload = make_mp4_bytes(
-                    "isom", 600, 600 * (1 + i % 120) + i % 600, version=0
-                )
-            elif v == 3:
-                payload = make_mp4_bytes(
-                    "mp42", 1000, 1000 * (1 + i % 90) + i % 1000, version=1
-                )
-            elif v == 4:
-                payload = make_mp4_bytes(
-                    "avc1",
-                    90000,
-                    90000 * (1 + i % 30) + i % 90000,
-                    version=0,
-                    free_pad=2 * (1 + i % 11),
-                )
-            elif v == 5:
-                payload = make_wav_bytes(ch, sr, bits, data)[:14]
-            elif v == 6:
-                payload = make_mp4_bytes("dash", 1, 1, ftyp_only=True)
-            elif v == 7:
-                payload = make_flac_bytes(
-                    (8000, 16000, 44100, 48000)[i % 4],
-                    ch,
-                    (8, 16, 24, 32)[i % 4],
-                    (8000, 16000, 44100, 48000)[i % 4] * (1 + i % 20)
-                    + i % 1000,
-                    trailing=i % 50,
-                )
-            elif v == 8:
-                payload = make_mp3_bytes(
-                    (112, 128, 160, 192, 224, 256, 320)[i % 7],
-                    (44100, 48000, 32000)[i % 3],
-                    audio_pad=400 + i % 500,
-                    id3_size=100 + i % 200,
-                )
-            else:
-                payload = b"notamedia" + bytes(i % 7)
-            with open(os.path.join(d, f"{i}.med"), "wb") as fh:
-                fh.write(payload)
-        _MEDIA_CENSUS_CACHE[ck] = d
+    ids = [
+        r.doc_id
+        for r in _t(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 25 == 0)
+        .select("doc_id")
+        .collect()
+    ]
+    d = _gate_scratch("mediafiles", sf_dir)
+    for i in ids:
+        ch = 1 + i % 3
+        sr = (8000, 16000, 44100, 48000)[i % 4]
+        bits = 8 * (1 + i % 4)
+        data = 2 * (500 + i % 488)
+        junk = 2 * (1 + i % 18)
+        v = (i // 25) % 10
+        if v == 0:
+            payload = make_wav_bytes(ch, sr, bits, data)
+        elif v == 1:
+            payload = make_wav_bytes(ch, sr, bits, data, junk_pad=junk)
+        elif v == 2:
+            payload = make_mp4_bytes(
+                "isom", 600, 600 * (1 + i % 120) + i % 600, version=0
+            )
+        elif v == 3:
+            payload = make_mp4_bytes(
+                "mp42", 1000, 1000 * (1 + i % 90) + i % 1000, version=1
+            )
+        elif v == 4:
+            payload = make_mp4_bytes(
+                "avc1",
+                90000,
+                90000 * (1 + i % 30) + i % 90000,
+                version=0,
+                free_pad=2 * (1 + i % 11),
+            )
+        elif v == 5:
+            payload = make_wav_bytes(ch, sr, bits, data)[:14]
+        elif v == 6:
+            payload = make_mp4_bytes("dash", 1, 1, ftyp_only=True)
+        elif v == 7:
+            payload = make_flac_bytes(
+                (8000, 16000, 44100, 48000)[i % 4],
+                ch,
+                (8, 16, 24, 32)[i % 4],
+                (8000, 16000, 44100, 48000)[i % 4] * (1 + i % 20)
+                + i % 1000,
+                trailing=i % 50,
+            )
+        elif v == 8:
+            payload = make_mp3_bytes(
+                (112, 128, 160, 192, 224, 256, 320)[i % 7],
+                (44100, 48000, 32000)[i % 3],
+                audio_pad=400 + i % 500,
+                id3_size=100 + i % 200,
+            )
+        else:
+            payload = b"notamedia" + bytes(i % 7)
+        with open(os.path.join(d, f"{i}.med"), "wb") as fh:
+            fh.write(payload)
     from agnes_spark.sources.formats import read_binary_files
 
     files = read_binary_files(spark, d, glob="*.med")

@@ -461,15 +461,6 @@ def simhash_pairs(
     )
 
 
-# Built IVF indexes for embedding_dedup_auto, keyed by
-# (spark app id, caller cache key, id col, vec col, n_cells, seed).
-# The production shape is build-once / serve-many (IvfIndex.save/load);
-# this cache is the in-process equivalent so repeated gate/bench
-# invocations over the same corpus don't re-train KMeans every call —
-# the training passes were the whole cost of the auto-dedup gate.
-_AUTO_INDEX_CACHE: dict[tuple, object] = {}
-
-
 def embedding_dedup_auto(
     df: DataFrame,
     id_col: str,
@@ -477,7 +468,6 @@ def embedding_dedup_auto(
     threshold: float = 0.95,
     n_cells: int | None = None,
     seed: int = 42,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs with LEARNED blocking: KMeans cells
     (IvfIndex) replace a hand-supplied block column. Each vector is
@@ -495,29 +485,11 @@ def embedding_dedup_auto(
     as the corpus grows — sqrt(N) keeps per-cell occupancy (and the
     pair blowup) flat at ~sqrt(N) per cell whatever the scale.
 
-    `cache_key`: opt-in reuse of the built index across calls in one
-    process (pass a corpus identifier, e.g. its path). Safe because
-    the build is deterministic and layout-independent (hash-filter
-    training sample); skip it when `df` content can change between
-    calls under the same key."""
+    Each call trains its own IvfIndex (KMeans over `df`)."""
     from agnes_spark.operators.simsearch import IvfIndex
 
     if n_cells is None:
         n_cells = max(8, min(int(df.count() ** 0.5), 4096))
-    key = None
-    if cache_key is not None:
-        key = (
-            df.sparkSession.sparkContext.applicationId,
-            cache_key, id_col, vec_col, n_cells, seed,
-        )
-        index = _AUTO_INDEX_CACHE.get(key)
-        if index is not None:
-            # spark.catalog.clearCache() (the bench isolates queries
-            # with it) unpersists the assigned frame; re-mark it so the
-            # first reuse re-materializes once instead of re-scanning
-            # per downstream consumer. Training is NOT redone either way.
-            index.assigned.persist()
-            return _auto_pairs(index, threshold)
     # blocking needs rough locality, not converged centroids: every
     # emitted pair is exact-verified afterwards (no false positives
     # possible) and boundary straddlers are covered by the 2-nearest
@@ -528,8 +500,6 @@ def embedding_dedup_auto(
     index = IvfIndex.build(
         df, id_col, vec_col, n_cells=n_cells, seed=seed, max_iter=4
     )
-    if key is not None:
-        _AUTO_INDEX_CACHE[key] = index
     return _auto_pairs(index, threshold)
 
 

@@ -152,12 +152,13 @@ class IvfIndex:
             .persist()
         )
         assigned.count()  # materialize before dropping the feature cache
-        # truncate lineage: catalog.clearCache() (bench/gate isolation)
-        # unpersists SQL-cached frames, and WITHOUT this every reuse
-        # after it replays scan + vector-conversion + model.transform;
-        # localCheckpoint blocks live at the RDD layer, which
-        # clearCache does not touch. Local-mode/driver-lifetime only —
-        # cluster deployments persist via save()/load() instead.
+        # truncate lineage: every probe of a held index reads the
+        # checkpointed assignment and never replays scan +
+        # vector-conversion + model.transform, also after a
+        # catalog.clearCache() (it unpersists SQL-cached frames, while
+        # localCheckpoint blocks live at the RDD layer). Local-mode/
+        # driver-lifetime only — cluster deployments persist via
+        # save()/load() instead.
         assigned = assigned.localCheckpoint()
         feat.unpersist()
         ctrs = model.clusterCenters()
@@ -326,13 +327,6 @@ class IvfIndex:
         self.assigned.unpersist()
 
 
-# Built indexes for repeated ivf_topk calls over one corpus, keyed by
-# (spark app id, caller cache key, id col, vec col, n_cells, max_iter,
-# seed) — the in-process twin of IvfIndex.save/load, same contract as
-# dedup._AUTO_INDEX_CACHE (training dominates the one-shot cost).
-_IVF_TOPK_CACHE: dict[tuple, "IvfIndex"] = {}
-
-
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -344,37 +338,17 @@ def ivf_topk(
     n_probe: int = 3,
     max_iter: int = 10,
     seed: int = 42,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """One-shot IVF-flat approximate top-k: build the index, probe it.
     Reuse `IvfIndex.build(...)` directly when serving many query
     batches against one corpus. Recall/cost dial: n_probe/n_cells.
 
-    `cache_key`: opt-in reuse of the built index across calls in one
-    process (pass a corpus identifier, e.g. its path); safe because the
-    build is deterministic and layout-independent — skip it when the
-    corpus content can change between calls under the same key.
-
     Non-SQL-expressible (iterative training) — rows-only gate check;
     tests pin recall against brute_force_topk.
     """
-    key = None
-    if cache_key is not None:
-        key = (
-            corpus.sparkSession.sparkContext.applicationId,
-            cache_key, corpus_id, vec_col, n_cells, max_iter, seed,
-        )
-        index = _IVF_TOPK_CACHE.get(key)
-        if index is not None:
-            # re-mark after any spark.catalog.clearCache() (see
-            # embedding_dedup_auto); training is not redone either way
-            index.assigned.persist()
-            return index.topk(queries, query_id, vec_col=vec_col, k=k, n_probe=n_probe)
     index = IvfIndex.build(
         corpus, corpus_id, vec_col, n_cells=n_cells, max_iter=max_iter, seed=seed
     )
-    if key is not None:
-        _IVF_TOPK_CACHE[key] = index
     return index.topk(queries, query_id, vec_col=vec_col, k=k, n_probe=n_probe)
 
 

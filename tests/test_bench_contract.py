@@ -1,226 +1,13 @@
-"""Pin bench.py's driver contract: the LAST stdout line must be one
-self-contained JSON object with the agreed keys — r3's official bench
-number was lost because per-run samples got embedded in that line and
-the driver's tail-capture could no longer parse it.
-
-Runs bench.py as a subprocess on two cheap queries at sf0.001 so the
-whole check stays under a minute.
-"""
-
-import json
-import os
-import subprocess
-import sys
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def test_bench_last_line_is_compact_parseable_json(sf_dir, tmp_path):
-    # samples go to a temp side file so the test never clobbers the
-    # repo's committed full-scale BENCH_SAMPLES.json
-    side = str(tmp_path / "BENCH_SAMPLES.json")
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_SF_DIR=sf_dir,
-        SPARK_GRAFT_CPUS="4",
-        AGNES_SHUFFLE_PARTITIONS="4",
-        AGNES_BENCH_RUNS="2",
-        AGNES_BENCH_ONLY="q1_pricing_summary,aggregate_sum,khop_reach_copurchase",
-        AGNES_BENCH_SAMPLES=side,
-    )
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "bench.py")],
-        capture_output=True,
-        text=True,
-        timeout=300,
-        env=env,
-        cwd=REPO,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    lines = out.stdout.strip().splitlines()
-    last = lines[-1]
-    # EVERY stdout line is one parseable metric JSON object: the loop
-    # emits a cumulative partial line after each key (r11: the driver
-    # killed the bench at its wall clock and, with the only metric
-    # print at the very end, recorded nothing — a kill at any point
-    # must leave the last complete line parseable with per-key medians)
-    parsed_lines = [json.loads(ln) for ln in lines]
-    partials = parsed_lines[:-1]
-    assert len(partials) == 3  # one per benched key
-    for i, p in enumerate(partials):
-        assert p["partial"] is True
-        assert p["metric"] == "headline_queries_total_runtime"
-        assert p["keys_done"] == i + 1
-        assert len(p["queries"]) == i + 1
-    d = json.loads(last)  # must parse as ONE object on ONE line
-    assert "partial" not in d
-    # graceful-degradation stamps on the final line
-    assert d["budget_exhausted"] is False
-    assert d["untimed_keys"] == []
-    assert d["metric"] == "headline_queries_total_runtime"
-    assert d["unit"] == "sec"
-    assert isinstance(d["value"], (int, float))
-    assert set(d["queries"]) == {
-        "q1_pricing_summary",
-        "aggregate_sum",
-        "khop_reach_copurchase",
-    }
-    assert all(isinstance(v, (int, float)) for v in d["queries"].values())
-    # samples belong in the side file, never in the metric line
-    assert "samples" not in d
-    assert os.path.exists(side)
-    side_doc = json.load(open(side))
-    assert "q1_pricing_summary" in side_doc["samples"]
-    # host-speed canary: measured before AND after the bench, stamped
-    # into the side file, and surfaced as one boolean on the metric
-    # line so a throttle-poisoned run is self-flagging
-    canary = side_doc["canary"]
-    assert canary["pre_s"] > 0 and canary["post_s"] > 0
-    assert canary["nominal_s"] > 0
-    assert isinstance(canary["degraded"], bool)
-    # warmup-as-first-sample (r13): a NON-headline key's timed warmup
-    # execution either becomes its first sample (sub-threshold: 2
-    # samples total, lower-median = min picks the warm run) or trips
-    # the adaptive single-run path (at/above threshold: 1 sample) —
-    # either way exactly one post-warmup execution, never RUNS of
-    # them. Which path wins depends on host speed, so assert the
-    # disjunction. Headline keys keep untimed warmup + median-of-N.
-    was = side_doc["warmup_as_sample"]
-    asr = side_doc["adaptive_single_run"]
-    assert ("khop_reach_copurchase" in was) != (
-        "khop_reach_copurchase" in asr
-    )
-    assert len(side_doc["samples"]["khop_reach_copurchase"]) == (
-        2 if "khop_reach_copurchase" in was else 1
-    )
-    assert "q1_pricing_summary" not in was and "q1_pricing_summary" not in asr
-    assert len(side_doc["samples"]["q1_pricing_summary"]) == 2
-    assert d["canary_degraded"] == canary["degraded"]
-    # the first PRE-probe's state is stamped even when retries clear it
-    assert isinstance(canary["pre_degraded_at_start"], bool)
-    # mid-run MULTI-core probes: the contention axis endpoint probes
-    # are blind to — worst wall on the metric line, per-probe list
-    # (bench position + key) in the samples file
-    assert isinstance(canary["mc_degraded"], bool)
-    assert canary["mc_worst_s"] > 0
-    assert d["mc_degraded"] == canary["mc_degraded"]
-    probes = side_doc["mc_probes"]
-    assert probes and all(len(p) == 3 and p[2] > 0 for p in probes)
-    assert probes[-1][1] == "<end>"
-    # graph-family keys prewarm their shared caches OUTSIDE the timed
-    # region and stamp the build cost, so in-session (warm) and
-    # standalone ONLY-mode numbers are directly comparable
-    assert "khop_reach_copurchase" in d["cache_build_s"]
-    assert d["cache_build_s"]["khop_reach_copurchase"] >= 0
-    assert side_doc["cache_build_s"] == d["cache_build_s"]
-    # non-graph keys carry no cache_build_s entry
-    assert "q1_pricing_summary" not in d["cache_build_s"]
-
-
-def test_bench_wall_budget_degrades_gracefully(sf_dir, tmp_path):
-    """AGNES_BENCH_BUDGET exceeded -> rc 0, last line still one
-    parseable metric object, with budget_exhausted stamped and every
-    skipped key listed untimed (the fix for BENCH_r11's rc=124/no
-    record: a partial record the driver can parse beats a kill)."""
-    side = str(tmp_path / "BENCH_SAMPLES.json")
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_SF_DIR=sf_dir,
-        SPARK_GRAFT_CPUS="4",
-        AGNES_SHUFFLE_PARTITIONS="4",
-        AGNES_BENCH_RUNS="1",
-        AGNES_BENCH_ONLY="q1_pricing_summary,aggregate_sum",
-        AGNES_BENCH_SAMPLES=side,
-        AGNES_BENCH_BUDGET="0.001",
-    )
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "bench.py")],
-        capture_output=True,
-        text=True,
-        timeout=300,
-        env=env,
-        cwd=REPO,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    d = json.loads(out.stdout.strip().splitlines()[-1])
-    assert d["metric"] == "headline_queries_total_runtime"
-    assert d["budget_exhausted"] is True
-    assert set(d["untimed_keys"]) == {"q1_pricing_summary", "aggregate_sum"}
-    assert d["queries"] == {}
-    side_doc = json.load(open(side))
-    assert side_doc["budget_exhausted"] is True
-    assert side_doc["untimed_keys"] == d["untimed_keys"]
-
-
-def test_samples_path_cpus_redirect(tmp_path):
-    """A run at a DIFFERENT core count than the committed record's
-    cpus stamp must divert its samples write to a per-cpus side file —
-    the r12 driver's 8-core scaling run clobbered the committed
-    32-core record, poisoning the next round's >3x-flag baseline."""
-    import json as _json
-
-    import bench
-
-    default = str(tmp_path / "BENCH_SAMPLES.json")
-    # no record yet -> default path stands
-    assert bench._resolve_samples_path(default, default, 8) == default
-    _json.dump({"cpus": 32, "sf": 0.1, "samples": {}}, open(default, "w"))
-    committed = open(default).read()
-    # same cpus -> overwrite allowed (a newer same-shape record)
-    assert bench._resolve_samples_path(default, default, 32) == default
-    # different cpus -> diverted, record untouched
-    got = bench._resolve_samples_path(default, default, 8)
-    assert got == str(tmp_path / "BENCH_SAMPLES_c8.json")
-    assert open(default).read() == committed
-    # explicit side paths are never rewritten
-    side = str(tmp_path / "side.json")
-    assert bench._resolve_samples_path(side, default, 8) == side
-    # an unstamped (pre-r13) record is treated as unknown -> writable
-    _json.dump({"sf": 0.1, "samples": {}}, open(default, "w"))
-    assert bench._resolve_samples_path(default, default, 8) == default
-    # ...and _prior_medians rejects a cpus-mismatched record
-    _json.dump(
-        {"cpus": 32, "sf": 0.1, "samples": {"q": [1.0, 2.0, 3.0]}},
-        open(default, "w"),
-    )
-    assert bench._prior_medians(default, 0.1, 32) == {"q": 2.0}
-    assert bench._prior_medians(default, 0.1, 8) == {}
-    assert bench._prior_medians(default, 0.01, 32) == {}
+"""Static pins on the queries() registry: its key order and its oracle
+coverage (no SparkSession needed)."""
 
 
 def test_bench_registry_metadata_consistent():
-    """Static pins (no SparkSession): every BENCH_QUERIES name and
-    every SHARED_CACHE_DEPS key resolves to a real queries() entry, so
-    a registry rename can never silently drop a key from the bench or
-    orphan a prewarm; and the driver window boundary holds."""
+    """The registry dict order keeps its key-50 window boundary, and
+    nearly every key has a DuckDB oracle."""
     import __spark_entry__ as entrymod
 
-    import bench
-
     qs = entrymod.queries()
-    missing_bench = [k for k in bench.BENCH_QUERIES if k not in qs]
-    assert not missing_bench, missing_bench
-    # full-coverage rule (r10 verdict item 2): every registry key that
-    # is not a check_* twin (correctness guards, not user workloads)
-    # has a timed bench row — no other skip list exists
-    unbenched = [
-        k
-        for k in qs
-        if k not in bench.BENCH_QUERIES and not k.startswith("check_")
-    ]
-    assert not unbenched, unbenched
-    # no duplicate bench rows, and heavy single-run keys are real keys
-    assert len(bench.BENCH_QUERIES) == len(set(bench.BENCH_QUERIES))
-    assert set(bench.HEAVY_SINGLE_RUN) <= set(bench.BENCH_QUERIES)
-    missing_deps = [k for k in entrymod.SHARED_CACHE_DEPS if k not in qs]
-    assert not missing_deps, missing_deps
-    # prewarm dep names resolve to builders
-    import inspect
-
-    src = inspect.getsource(entrymod.prewarm_shared_caches)
-    for deps in entrymod.SHARED_CACHE_DEPS.values():
-        for dep in deps:
-            assert f'"{dep}"' in src, dep
     # the dict is the grading order: position 50 is the r13 boundary
     # (window = the 2 r12-staged keys + the 48 keys after them)
     assert list(qs)[0] == "html_extract_docs"

@@ -113,25 +113,20 @@ def test_embedding_dedup_auto_recall(spark, sf_dir):
 
 
 def test_embedding_dedup_auto_cache_reuses_index(spark, sf_dir):
-    """cache_key= reuses the built IvfIndex across calls (no KMeans
-    retrain) and yields identical pairs — including after a
-    clearCache(), the state bench runs in between queries."""
-    from agnes_spark.operators.dedup import _AUTO_INDEX_CACHE, embedding_dedup_auto
+    """Two calls give identical pairs, also with a clearCache() between
+    them: each call trains its own index, and the training is
+    deterministic and layout-independent."""
+    from agnes_spark.operators.dedup import embedding_dedup_auto
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    _AUTO_INDEX_CACHE.clear()
     first = {(r.a_id, r.b_id) for r in embedding_dedup_auto(
-        emb, "vec_id", threshold=0.35, n_cells=4, cache_key="t"
+        emb, "vec_id", threshold=0.35, n_cells=4
     ).collect()}
-    assert len(_AUTO_INDEX_CACHE) == 1
-    cached_index = next(iter(_AUTO_INDEX_CACHE.values()))
     spark.catalog.clearCache()
     second = {(r.a_id, r.b_id) for r in embedding_dedup_auto(
-        emb, "vec_id", threshold=0.35, n_cells=4, cache_key="t"
+        emb, "vec_id", threshold=0.35, n_cells=4
     ).collect()}
     assert second == first
-    assert next(iter(_AUTO_INDEX_CACHE.values())) is cached_index
-    _AUTO_INDEX_CACHE.clear()
 
 
 def test_exact_dedup_keep_best_argmax_and_ties(spark):

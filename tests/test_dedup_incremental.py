@@ -144,3 +144,26 @@ def test_incremental_minhash_sets_only_path_matches(spark, sf_dir):
     )
     rows = lambda df: {(r.a_id, r.b_id, r.jaccard) for r in df.collect()}
     assert rows(via_sets) == rows(base)
+
+
+def test_incremental_state_builds_leave_no_temp_dirs(spark, sf_dir):
+    """The registry's incremental minhash / embedding ops rebuild their
+    corpus state on every call into one reused scratch directory, so
+    repeated calls create no new temp directory of their own."""
+    import os
+    import tempfile
+
+    import __spark_entry__ as entrymod
+
+    def state_dirs():
+        return {
+            d
+            for d in os.listdir(tempfile.gettempdir())
+            if d.startswith(("agnes_mhstate_", "agnes_embstate_"))
+        }
+
+    before = state_dirs()
+    for _ in range(2):
+        entrymod.dedup_incremental_minhash(spark, sf_dir)
+        entrymod.dedup_incremental_embedding(spark, sf_dir)
+    assert state_dirs() == before

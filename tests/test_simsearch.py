@@ -172,28 +172,37 @@ def test_label_centroids_match_numpy(spark, sf_dir):
 
 
 def test_ivf_topk_cache_reuses_index(spark, sf_dir):
-    """cache_key= reuses the built IvfIndex across ivf_topk calls (no
-    KMeans retrain) and yields identical neighbors — including after a
-    clearCache(), the state bench runs in between queries."""
+    """Two ivf_topk calls give identical neighbors, also with a
+    clearCache() between them; and an index the caller holds
+    (IvfIndex.build once, topk twice) answers both probes alike and
+    matches the one-shot call."""
     from pyspark.sql import functions as F
 
-    from agnes_spark.operators.simsearch import _IVF_TOPK_CACHE, ivf_topk
+    from agnes_spark.operators.simsearch import IvfIndex, ivf_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 5)
-    _IVF_TOPK_CACHE.clear()
     first = {(r.q_id, r.n_id) for r in ivf_topk(
-        q, emb, "vec_id", "vec_id", k=3, n_cells=4, cache_key="t"
+        q, emb, "vec_id", "vec_id", k=3, n_cells=4
     ).collect()}
-    assert len(_IVF_TOPK_CACHE) == 1
-    cached = next(iter(_IVF_TOPK_CACHE.values()))
     spark.catalog.clearCache()
     second = {(r.q_id, r.n_id) for r in ivf_topk(
-        q, emb, "vec_id", "vec_id", k=3, n_cells=4, cache_key="t"
+        q, emb, "vec_id", "vec_id", k=3, n_cells=4
     ).collect()}
     assert second == first
-    assert next(iter(_IVF_TOPK_CACHE.values())) is cached
-    _IVF_TOPK_CACHE.clear()
+
+    index = IvfIndex.build(emb, "vec_id", "embedding", n_cells=4)
+    try:
+        probe = {(r.q_id, r.n_id) for r in index.topk(
+            q, "vec_id", k=3
+        ).collect()}
+        spark.catalog.clearCache()
+        again = {(r.q_id, r.n_id) for r in index.topk(
+            q, "vec_id", k=3
+        ).collect()}
+    finally:
+        index.unpersist()
+    assert again == probe == first
 
 
 def test_quantize_roundtrip_error_bound_and_zero_vector(spark):

@@ -113,12 +113,11 @@ def test_watermark_drops_late_data(spark, tmp_path):
 
 
 def test_bench_streaming_warmup_builds_no_state(spark, tmp_path):
-    """r8 verdict item 7: the bench's rate->noop engine warm-up must
-    only initialize the micro-batch machinery (classes, codegen), never
+    """r8 verdict item 7: a rate->noop engine warm-up must only
+    initialize the micro-batch machinery (classes, codegen), never
     pre-build state stores a first real stateful query would otherwise
-    pay for in production. Same shape as bench.py's warm-up, pinned to
-    an inspectable checkpoint: zero stateOperators reported and no
-    state/ directory materialized."""
+    pay for in production. Pinned to an inspectable checkpoint: zero
+    stateOperators reported and no state/ directory materialized."""
     import os
 
     ck = str(tmp_path / "warmup_ck")
