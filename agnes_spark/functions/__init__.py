@@ -1,8 +1,12 @@
-"""Shared Column-expression helpers (all JVM-side; no Python UDFs).
+"""Shared column helpers: the building blocks for the dedup /
+similarity / text operators.
 
-These are the building blocks for the dedup / similarity / text
-operators. Everything here compiles to Catalyst expressions so the
-hot path stays inside whole-stage codegen at 100 TB.
+The vector, tokenization, banding and bit helpers compile to Catalyst
+expressions and run JVM-side. The five `*_udf` factories (shingles,
+positional k-gram hashes, hashed shingles, MinHash signatures, SimHash
+bits) are Arrow-batched pandas UDFs: each replaced an expression form
+whose nested higher-order array lambdas are evaluated interpreted,
+per element, and measured slower in bulk.
 """
 
 from __future__ import annotations
@@ -61,40 +65,6 @@ def word_shingles(col, n: int = 3) -> Column:
     )
     return F.array_distinct(
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-    )
-
-
-def hashed_shingles(col, n: int = 3) -> Column:
-    """Shingles hashed to int64 immediately — at scale we never shuffle
-    shingle *strings*, only 8-byte hashes."""
-    return F.transform(word_shingles(col, n), lambda s: F.xxhash64(s))
-
-
-def hashed_shingles_fast(col, n: int = 3) -> Column:
-    """Distinct n-word shingle hashes as array<long>, pure Catalyst,
-    with the string work minimized: each TOKEN is hashed exactly once
-    (xxhash64), then each shingle hash combines n consecutive token
-    hashes with one more xxhash64 over longs — no per-shingle string
-    concat, no per-shingle array slice. The remaining cost is the
-    interpreted higher-order transform over ~|tokens| elements of
-    integer-only hashing.
-
-    Hash identity differs from hashed_shingles/_udf, which is fine for
-    every caller (dedup jaccard/minhash need only a consistent 64-bit
-    hash; set sizes and jaccard values are hash-independent modulo
-    ~n^2/2^64 collisions).
-    """
-    toks = ws_tokens(col)
-    th = F.transform(toks, lambda t: F.xxhash64(t))
-    k = F.size(toks) - F.lit(n - 1)
-    idx = F.when(k >= 1, F.sequence(F.lit(1), k)).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.array_distinct(
-        F.transform(
-            idx,
-            lambda i: F.xxhash64(*[F.element_at(th, i + j) for j in range(n)]),
-        )
     )
 
 
@@ -170,10 +140,9 @@ def hashed_shingles_udf(n: int = 3):
     64-bit hash yields the same set sizes / jaccard, collision odds
     ~n^2/2^64).
 
-    Measured (scripts/bench_shingles.py, sf0.1 documents, 32 cores,
-    median of 3): udf 0.63s, expression form 0.89s, token-hash-once
-    expression (hashed_shingles_fast) 4.33s — the Arrow-batched UDF
-    wins, so dedup keeps it; the interpreted higher-order transforms
+    Measured (sf0.1 documents, 32 cores, median of 3): udf 0.63s, an
+    xxhash64-over-word_shingles expression 0.89s, a hash-each-token-
+    once expression 4.33s — the interpreted higher-order transforms
     lose despite staying JVM-side."""
     import hashlib
 
@@ -201,23 +170,6 @@ def hashed_shingles_udf(n: int = 3):
     return _h
 
 
-def minhash_signature(shingle_hashes, num_perm: int = 64) -> Column:
-    """MinHash signature as pure Catalyst expressions: for seed i, min
-    over shingles of xxhash64(seed_i, h).
-
-    NOTE: nested higher-order array functions are evaluated
-    interpreted (not codegen'd) — O(num_perm * |shingles|) object
-    churn per row. Correct, but for bulk runs prefer
-    `minhash_signature_udf` (vectorized Arrow kernel, ~10x faster).
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_perm - 1)),
-        lambda seed: F.array_min(
-            F.transform(shingle_hashes, lambda h: F.xxhash64(seed, h))
-        ),
-    )
-
-
 def _splitmix64(x: int) -> int:
     x = (x + 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
     x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & 0xFFFFFFFFFFFFFFFF
@@ -231,10 +183,10 @@ def minhash_signature_udf(num_perm: int = 64):
     (multiply-shift hashing a_i*h+b_i over uint64 wraparound).
 
     Deterministic: coefficients derive from splitmix64(i), identical
-    on every executor and every run — no RNG state to ship. This is
-    the documented slow-path escape hatch used precisely because the
-    pure-expression form (minhash_signature) interprets nested array
-    lambdas per element.
+    on every executor and every run — no RNG state to ship. A
+    pure-expression form (min over shingles of xxhash64(seed, h) per
+    seed) interprets its nested array lambdas per element and ran
+    ~10x slower.
     """
     a = np.array([_splitmix64(2 * i + 1) | 1 for i in range(num_perm)], dtype=np.uint64)
     b = np.array([_splitmix64(2 * i + 2) for i in range(num_perm)], dtype=np.uint64)
@@ -264,37 +216,14 @@ def band_hashes(signature, num_bands: int, rows_per_band: int) -> Column:
     )
 
 
-def simhash_bits(col, num_bits: int = 64) -> Column:
-    """SimHash fingerprint as an array<int> of bits (index 0 = MSB).
-
-    Each token votes its xxhash64 bits; fingerprint bit i is 1 when
-    the vote is positive. Kept as a bit array rather than one int64:
-    Spark's shift functions take literal distances only, and packing
-    the top bit would overflow ANSI long arithmetic — the array form
-    stays pure-expression and chunk-packs safely (<= 32 bits each).
-    """
-    toks = ws_tokens(col)
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_bits - 1)),
-        lambda i: F.when(
-            F.aggregate(
-                hashes,
-                F.lit(0),
-                lambda acc, h: acc
-                + F.when(F.getbit(h, i) == 1, F.lit(1)).otherwise(F.lit(-1)),
-            )
-            > 0,
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-
-
 def simhash_bits_udf(num_bits: int = 64):
-    """Vectorized twin of simhash_bits: blake2b token digests unpacked
-    to bit matrices, +-1 votes summed with numpy. Deterministic
-    (keyed blake2b, no process-dependent hashing); same output shape
-    (array<int> of 0/1, index 0 = MSB of the 8-byte digest)."""
+    """SimHash fingerprint as an array<int> of 0/1 bits (index 0 = MSB
+    of the 8-byte digest): blake2b token digests unpacked to bit
+    matrices, +-1 votes summed with numpy; bit i is 1 when its vote is
+    positive. Deterministic (keyed blake2b, no process-dependent
+    hashing). Kept as a bit array rather than one int64, so callers
+    chunk-pack it (pack_bits, <= 32 bits per key) without overflowing
+    ANSI long arithmetic."""
     import hashlib
 
     @F.pandas_udf("array<int>")

@@ -24,6 +24,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from agnes_spark.functions import ws_tokens
+from agnes_spark.session import supersede
+
+# merge rounds between checkpoints of the lazily merged vocabulary
+_CHECKPOINT_EVERY = 8
 
 
 def _word_vocab(df: DataFrame, text_col: str) -> DataFrame:
@@ -78,12 +82,7 @@ def _best_pair(vocab: DataFrame):
     return row["a"], row["b"], -row["nc"]
 
 
-def bpe_train(
-    df: DataFrame,
-    text_col: str,
-    merges: int = 5,
-    checkpoint_every: int = 8,
-) -> DataFrame:
+def bpe_train(df: DataFrame, text_col: str, merges: int = 5) -> DataFrame:
     """Run `merges` BPE merge rounds over the word vocabulary of
     `text_col` and return the merge table: one row per round
     (round, left, right, pair_count) — the artifact a tokenizer
@@ -91,10 +90,10 @@ def bpe_train(
     argmax; the merge applies as one literal replace."""
     spark = df.sparkSession
     vocab = _word_vocab(df, text_col).localCheckpoint(eager=True)
+    merged = vocab  # vocab with the merges since its checkpoint applied
     out = []
-    pending = 0  # replaces applied since the last checkpoint
     for r in range(1, merges + 1):
-        best = _best_pair(vocab)
+        best = _best_pair(merged)
         if best is None:  # vocabulary fully merged — stop early
             break
         a, b, cnt = best
@@ -108,11 +107,11 @@ def bpe_train(
         # scheduling barrier). But an UNBOUNDED chain re-applies r-1
         # replaces in round r (O(merges^2) recompute) and nests
         # expressions linearly in `merges`, so every
-        # `checkpoint_every` rounds the chain is folded into a fresh
+        # `_CHECKPOINT_EVERY` rounds the chain is folded into a fresh
         # checkpoint — plan depth and recompute stay bounded at
         # realistic merge counts (hundreds+) while small trainings keep
         # the single-job rounds.
-        vocab = vocab.select(
+        merged = merged.select(
             F.replace(
                 F.col("seq"),
                 F.lit(f" {a}  {b} "),
@@ -120,10 +119,10 @@ def bpe_train(
             ).alias("seq"),
             "wc",
         )
-        pending += 1
-        if checkpoint_every > 0 and pending >= checkpoint_every:
-            vocab = vocab.localCheckpoint(eager=True)
-            pending = 0
+        if r % _CHECKPOINT_EVERY == 0:
+            vocab = merged = supersede(vocab, merged.localCheckpoint(eager=True))
+    # the merge table is driver-local: no checkpoint outlives the call
+    supersede(vocab, None)
     return spark.createDataFrame(
         out, "round int, left string, right string, pair_count long"
     )

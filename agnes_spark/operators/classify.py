@@ -41,15 +41,13 @@ def naive_bayes_top_tokens(
         F.col(class_col).alias("cls"),
         F.explode(ws_tokens(F.col(text_col))).alias("token"),
     )
-    # ONE explode+groupBy pass over the corpus; every other count is an
-    # exact-integer rollup of the bounded (class, token) frame — the
-    # class totals, token totals, corpus total and vocab size are all
-    # sums/distincts of n, so the raw token stream is scanned once.
-    ctc = (
-        tok.groupBy("cls", "token")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .persist()
-    )
+    # every count is an exact-integer rollup of the bounded (class,
+    # token) frame — the class totals, token totals, corpus total and
+    # vocab size are all sums/distincts of n. The frame is not
+    # persisted: its consumers re-derive it (Spark reuses the shared
+    # exchange where their plans match), which measured no slower than
+    # a cache that nothing released.
+    ctc = tok.groupBy("cls", "token").agg(F.count(F.lit(1)).cast("long").alias("n"))
     nc = ctc.groupBy("cls").agg(F.sum("n").cast("long").alias("nc"))
     ct = ctc.groupBy("token").agg(F.sum("n").cast("long").alias("ct"))
     totals = ctc.agg(

@@ -29,37 +29,32 @@ not a nicety: each star round references the previous edge frame
 
 from __future__ import annotations
 
-import os
 import warnings
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from agnes_spark.session import free_blocks
+from agnes_spark.session import supersede
 
 
-def broadcast_node_cap(spark) -> int:
-    """Max rows of a node-sized frame the iterative operators will
-    broadcast-hint (post-localCheckpoint lineage carries no stats, so
-    Catalyst can't make this call itself). AGNES_GRAPH_BROADCAST_MAX_NODES
-    overrides; the default is DERIVED from the session's
+def broadcast_if_small(spark, n_rows: int):
+    """`F.broadcast` when a node-sized frame of `n_rows` rows fits the
+    session's broadcast budget, else the identity.
+
+    Iterative operators hint the node-sized side of their joins
+    themselves: post-localCheckpoint lineage carries no stats, so
+    Catalyst can't make this call. The cap derives from
     autoBroadcastJoinThreshold at ~32 bytes/row (a long id + a double
-    + UnsafeRow overhead — the shape of rank/frontier/core frames), so
-    the cap tracks the deployment's declared broadcast budget instead
-    of a constant tuned on one host (64 MB threshold -> ~2M rows, the
-    r12 constant). A disabled threshold (<= 0) keeps the historical
-    2M default: the explicit hints here are independent of Catalyst's
-    auto-broadcast decision."""
-    env = os.environ.get("AGNES_GRAPH_BROADCAST_MAX_NODES")
-    if env:
-        return int(env)
+    + UnsafeRow overhead, the shape of rank/frontier/core frames), so
+    a 64 MB threshold caps at ~2M rows. A disabled threshold (<= 0)
+    keeps the 2M-row cap: these hints are independent of Catalyst's
+    own auto-broadcast decision."""
     try:
         thr = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
     except Exception:
         thr = -1
-    if thr <= 0:
-        return 2_000_000
-    return max(1, thr // 32)
+    cap = max(1, thr // 32) if thr > 0 else 2_000_000
+    return F.broadcast if n_rows <= cap else (lambda df: df)
 
 
 def connected_components(
@@ -85,7 +80,6 @@ def connected_components(
         .persist()
     )
     labels = sym.select(F.col("u").alias("id")).distinct().withColumn("lbl", F.col("id"))
-    prev_persisted: DataFrame | None = None
     changed = 0
     for i in range(max_iter):
         neighbor_min = (
@@ -122,16 +116,8 @@ def connected_components(
         # analyze while skipping two checkpoint jobs out of three. The
         # checkpoint reads the round's cache — never recomputes.
         if i % 3 == 2:
-            nxt = new_labels.localCheckpoint()
-            new_labels.unpersist()
-        else:
-            nxt = new_labels
-        if prev_persisted is not None:
-            # free_blocks, not unpersist: checkpointed rounds' blocks
-            # live at the RDD layer where unpersist() is a no-op
-            free_blocks(prev_persisted)
-        prev_persisted = nxt
-        labels = nxt
+            new_labels = supersede(new_labels, new_labels.localCheckpoint())
+        labels = supersede(labels, new_labels)
         if changed == 0:
             break
     if changed != 0:
@@ -205,7 +191,6 @@ def connected_components_star(
         .persist()
     )
     prev_sig: tuple | None = None
-    prev_persisted: DataFrame = e
     converged = False
     for i in range(max_iter):
         new_e = _small_star(_large_star(e)).persist()
@@ -227,11 +212,8 @@ def connected_components_star(
         # One star round references `e` ~12-16 times, so plan size is
         # 16^k in uncheckpointed rounds: deferring even 4 rounds put the
         # plan string at the 2 GiB cap and OOMed the driver.
-        cp = new_e.localCheckpoint()
-        new_e.unpersist()
-        free_blocks(prev_persisted)
-        prev_persisted = cp
-        e = cp
+        new_e = supersede(new_e, new_e.localCheckpoint())
+        e = supersede(e, new_e)
         if sig == prev_sig:
             converged = True
             break
@@ -347,8 +329,10 @@ def pagerank(
     uniformly each round, the standard correction — so the rank sum is
     conserved at N for any graph. tol=0 disables early exit (all
     max_iter rounds run; useful when a twin implementation must follow
-    the exact same schedule). Rounds needed in practice: ~20 for 1e-6
-    on web-like graphs; co-occurrence graphs converge faster.
+    the exact same schedule); on a graph with no dangling node it runs
+    personalized_pagerank's lazy fixed-round loop with every node a
+    seed. Rounds needed in practice: ~20 for 1e-6 on web-like graphs;
+    co-occurrence graphs converge faster.
     """
     d = float(damping)
     e0 = edges.select(
@@ -379,51 +363,20 @@ def pagerank(
     dangling_mass = float(
         base.filter(F.col("deg") == 0).count()
     )  # initial ranks are all 1.0
-    ranks = base.withColumn("rank", F.lit(1.0))
     if tol <= 0 and dangling_mass == 0.0:
         # Fixed-round schedule (tol=0) on a graph with NO dangling
-        # nodes: the per-round persist+count exists only to feed the
-        # convergence signal (unused at tol=0) and the next round's
-        # dangling mass (provably 0.0 forever when every node has an
-        # out-edge — rank only accumulates where restart/contribution
-        # lands, and deg==0 nodes don't exist). So run the rounds
-        # LAZILY with the personalized_pagerank discipline: pipeline
-        # into an eager localCheckpoint every 3rd round (plans grow
-        # ~3x/round), and broadcast the node-count-sized rank frame
-        # into each edge join — post-checkpoint lineage is a
-        # LogicalRDD with no stats, so without the hint every round
-        # re-sorts the full edge table under a sort-merge join (or
-        # worse, re-broadcasts the EDGE side). Past the cap (~40
-        # bytes/row: 2M nodes ~ 80 MB) fall back to the shuffle plan.
-        _bcast_cap = broadcast_node_cap(edges.sparkSession)
-        _hint = F.broadcast if n_nodes <= _bcast_cap else (lambda df: df)
-        _prev_ckpt: DataFrame | None = None
-        for i in range(max_iter):
-            contrib = (
-                e.join(_hint(ranks.select(F.col("id").alias("u"), "rank")), "u")
-                .select("v", (F.col("rank") / F.col("deg")).alias("c"))
-                .groupBy("v")
-                .agg(F.sum("c").alias("in_mass"))
-            )
-            nxt = ranks.join(_hint(contrib), ranks.id == contrib.v, "left").select(
-                "id",
-                "deg",
-                (
-                    F.lit(1.0 - d) + F.lit(d) * F.coalesce("in_mass", F.lit(0.0))
-                ).alias("rank"),
-            )
-            if i % 3 == 2 or i == max_iter - 1:
-                nxt = nxt.localCheckpoint(eager=True)
-                if _prev_ckpt is not None:
-                    free_blocks(_prev_ckpt)
-                _prev_ckpt = nxt
-            ranks = nxt
+        # nodes: the per-round persist+count below exists only to feed
+        # the convergence signal (unused at tol=0) and the next round's
+        # dangling mass (0.0 forever when every node has an out-edge).
+        # What is left is personalized PageRank with every node a seed.
+        out = _fixed_round_ranks(
+            e, base.withColumn("restart", F.lit(1.0)), d, max_iter, n_nodes
+        )
         e.unpersist()
         base.unpersist()
-        out = ranks.select("id", "rank")
         out._agnes_iterations = max_iter
         return out
-    prev_persisted: DataFrame | None = None
+    ranks = base.withColumn("rank", F.lit(1.0))
     for i in range(max_iter):
         contrib = (
             e.join(ranks.select(F.col("id").alias("u"), "rank"), "u")
@@ -460,14 +413,8 @@ def pagerank(
         max_delta = float(metrics["max_delta"] or 0.0)
         dangling_mass = float(metrics["dangling"] or 0.0)
         if i % 3 == 2:
-            nxt = new_ranks.localCheckpoint()
-            new_ranks.unpersist()
-        else:
-            nxt = new_ranks
-        if prev_persisted is not None:
-            free_blocks(prev_persisted)
-        prev_persisted = nxt
-        ranks = nxt
+            new_ranks = supersede(new_ranks, new_ranks.localCheckpoint())
+        ranks = supersede(ranks, new_ranks)
         if tol > 0 and max_delta < tol:
             break
     e.unpersist()
@@ -640,13 +587,10 @@ def kcore(
                 alive.withColumnRenamed("u", "v"), "v", "left_semi"
             )
         deg = restricted.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-        nxt_alive = (
-            deg.filter(F.col("deg") >= k).select("u").localCheckpoint(eager=True)
+        alive = supersede(
+            alive, deg.filter(F.col("deg") >= k).select("u").localCheckpoint(eager=True)
         )
-        n_alive = nxt_alive.count()
-        if alive is not None:
-            free_blocks(alive)
-        alive = nxt_alive
+        n_alive = alive.count()
         if n_alive == n_alive_prev:
             break  # fixpoint: further rounds are identity
         n_alive_prev = n_alive
@@ -917,7 +861,6 @@ def label_propagation(
     labels = (
         e.select(F.col("u").alias("id")).distinct().withColumn("lab", F.col("id"))
     )
-    prev: DataFrame | None = None
     for i in range(max_iter):
         counts = (
             e.join(labels.select(F.col("id").alias("v"), "lab"), "v")
@@ -939,10 +882,7 @@ def label_propagation(
         else:
             nxt = nxt.persist()
         nxt.count()  # materialize; one job per round
-        if prev is not None:
-            free_blocks(prev)
-        labels = nxt
-        prev = nxt
+        labels = supersede(labels, nxt)
     e.unpersist()
     return labels.select("id", F.col("lab").alias("community"))
 
@@ -983,56 +923,48 @@ def personalized_pagerank(
         )
         .persist()
     )
+    n_nodes = base.count()  # also materializes base's cache
+    out = _fixed_round_ranks(e, base, d, rounds, n_nodes)
+    e.unpersist()
+    base.unpersist()
+    return out
+
+
+def _fixed_round_ranks(
+    e: DataFrame, base: DataFrame, d: float, rounds: int, n_nodes: int
+) -> DataFrame:
+    """`rounds` rounds of PageRank with restart, rank' = (1-d) *
+    restart + d * in_mass, over out-edges `e` (u, v, deg) from `base`
+    (id, deg, restart) of `n_nodes` rows; starts from rank = restart
+    and returns (id, rank) as a local checkpoint, so the result
+    survives the caller unpersisting `e` and `base`.
+
+    Fixed rounds need no per-round job: three lazy rounds pipeline
+    into one eager localCheckpoint (plans grow ~3x per round, so 27x
+    between truncations stays cheap to analyze), 8 rounds cost 3
+    scheduling barriers, and the last round always checkpoints. The
+    rank and contribution frames are node-sized while `e` is
+    edge-sized, but post-checkpoint lineage is a LogicalRDD with no
+    stats, so both joins would fall back to sort-merge and re-sort the
+    edge table every round: broadcast the node-sized side while it
+    fits, else keep the shuffle plan that scales unconditionally."""
+    hint = broadcast_if_small(e.sparkSession, n_nodes)
     ranks = base.withColumn("rank", F.col("restart"))
-    # The rank/contribution frames are NODE-count-sized while e is
-    # EDGE-count-sized, but the lazy fixed-round loop gives the
-    # planner no stats (post-localCheckpoint lineage is a LogicalRDD
-    # with unknown size), so every round's two joins fall back to
-    # sort-merge: the full edge table is re-sorted and re-shuffled
-    # per round. Broadcast the node-sized side explicitly when the
-    # node count is known-small; past the cap (a rank row is ~40
-    # bytes, so the default 2M nodes is an ~80 MB broadcast) fall
-    # back to the shuffle plan that scales unconditionally.
-    _bcast_cap = broadcast_node_cap(edges.sparkSession)
-    _bcast = base.count() <= _bcast_cap  # also materializes base's cache
-    _hint = F.broadcast if _bcast else (lambda df: df)
-    _prev_ckpt = None
-    for i in range(rounds):
-        contrib = (
-            e.join(_hint(ranks.select(F.col("id").alias("u"), "rank")), "u")
-            .select("v", (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("v")
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        nxt = (
-            base.join(_hint(contrib), base.id == contrib.v, "left")
-            .select(
+    for first in range(0, rounds, 3):
+        nxt = ranks
+        for _ in range(min(3, rounds - first)):
+            contrib = (
+                e.join(hint(nxt.select(F.col("id").alias("u"), "rank")), "u")
+                .select("v", (F.col("rank") / F.col("deg")).alias("c"))
+                .groupBy("v")
+                .agg(F.sum("c").alias("in_mass"))
+            )
+            nxt = base.join(hint(contrib), base.id == contrib.v, "left").select(
                 "id",
-                "deg",
-                "restart",
                 (
                     F.lit(1.0 - d) * F.col("restart")
                     + F.lit(d) * F.coalesce("in_mass", F.lit(0.0))
                 ).alias("rank"),
             )
-        )
-        # fixed rounds, no convergence check -> no reason to run one
-        # job PER ROUND: intermediate rounds stay lazy and pipeline
-        # into every 3rd round's eager checkpoint (plans grow ~3x per
-        # round, so 27x between truncations stays cheap to analyze —
-        # the pagerank cadence), cutting 8 scheduling barriers to 3.
-        # The LAST round always checkpoints so the returned frame
-        # survives the e/base unpersist below (truncated lineage).
-        if i % 3 == 2 or i == rounds - 1:
-            nxt = nxt.localCheckpoint(eager=True)
-            # the previous checkpoint's blocks are superseded the
-            # moment this one materializes — free them, or the
-            # cached-RDD footprint grows per invocation in long
-            # bench/driver sessions (r8 advice)
-            if _prev_ckpt is not None:
-                free_blocks(_prev_ckpt)
-            _prev_ckpt = nxt
-        ranks = nxt
-    e.unpersist()
-    base.unpersist()
+        ranks = supersede(ranks, nxt.localCheckpoint(eager=True))
     return ranks.select("id", "rank")

@@ -129,7 +129,7 @@ def dbscan_grid(
     Returns (id, is_core, cluster_id) — exact integers throughout,
     so the whole clustering is engine-reproducible.
     """
-    from agnes_spark.operators.graph import connected_components_auto
+    from agnes_spark.operators.graph import broadcast_if_small, connected_components_auto
 
     # the pair frame feeds degree census, core-core edges AND border
     # attachment — materialize once or the grid join runs three times
@@ -155,12 +155,8 @@ def dbscan_grid(
     # though core/cc/core_lab are point-count-bounded while sym/pairs
     # are pair-sized. Broadcast the small side while its row count
     # (cheap: one job over materialized checkpoint blocks) stays
-    # under the shared env cap; past it, the shuffle plan stands.
-    from agnes_spark.operators.graph import broadcast_node_cap
-
-    _cap = broadcast_node_cap(df.sparkSession)
-    _small = core.count() <= _cap
-    _b = F.broadcast if _small else (lambda f: f)
+    # under the graph operators' cap; past it, the shuffle plan stands.
+    _b = broadcast_if_small(df.sparkSession, core.count())
     core_edges = (
         pairs.join(_b(core.select(F.col("id").alias("id_a"))), "id_a")
         .join(_b(core.select(F.col("id").alias("id_b"))), "id_b")

@@ -93,21 +93,14 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict:
     return {n: read_source(spark, os.path.join(sf_dir, f"{n}.parquet")) for n in names}
 
 
-def free_blocks(df) -> None:
-    """Deterministically free a superseded frame's storage blocks.
+def _free_blocks(df) -> None:
+    """Free a frame's storage blocks.
 
     `DataFrame.unpersist()` only evicts cacheManager entries; a
     `localCheckpoint()`ed frame's blocks live at the RDD layer
     (`LogicalRDD`), where they survive both `unpersist()` and
     `spark.catalog.clearCache()` and are otherwise freed only when the
-    JVM garbage-collects the RDD reference. Iterative operators call
-    this on each round's frame once its successor has materialized, so
-    long sessions (the 276-query driver run, the bench) hold at most
-    one round-frame per live query instead of one per round.
-
-    Only safe for frames no downstream plan will touch again — a
-    local checkpoint's lineage is truncated, so recomputing after the
-    blocks are gone is impossible (Spark logs a WARN to that effect).
+    JVM garbage-collects the RDD reference.
     """
     try:
         plan = df._jdf.queryExecution().analyzed()
@@ -117,3 +110,22 @@ def free_blocks(df) -> None:
     except Exception:
         pass
     df.unpersist()
+
+
+def supersede(old, new):
+    """Free `old`, the round frame that `new` replaces, and return `new`.
+
+    Iterative operators pass each round's frame here once it has
+    materialized (persisted and counted, or checkpointed), so a call
+    holds at most one round frame at a time and a long session holds
+    at most one per live result. Pass `new=None` after the last round
+    when the result keeps nothing of the round frames; `old=None`
+    (nothing superseded yet) is a no-op.
+
+    Only safe when no plan will read `old` again: a local checkpoint's
+    lineage is truncated, so its rows cannot be recomputed once its
+    blocks are gone (Spark logs a WARN to that effect).
+    """
+    if old is not None:
+        _free_blocks(old)
+    return new

@@ -377,7 +377,7 @@ def test_personalized_pagerank_localizes_to_seeds(spark):
 def test_iterative_rounds_free_superseded_checkpoint_blocks(spark):
     """r8 advice: DataFrame.unpersist() is a no-op for localCheckpoint
     blocks (they live at the RDD layer, outside the cacheManager), so
-    superseded round frames accumulated per invocation. free_blocks
+    superseded round frames accumulated per invocation. supersede
     must keep the per-invocation residue bounded: after pagerank over
     a path graph, at most the final round frame(s) may stay resident —
     not one block set per checkpointed round."""
@@ -402,3 +402,56 @@ def test_iterative_rounds_free_superseded_checkpoint_blocks(spark):
     # 9 rounds -> 3 checkpoints; only the LAST may remain (plus the
     # returned frame's own block). Pre-fix this sat at ~3 extra sets.
     assert n_stored() - base <= 2
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "pagerank_fixed_rounds",
+        "pagerank_observed",
+        "personalized_pagerank",
+        "kcore",
+        "label_propagation",
+        "connected_components",
+        "connected_components_star",
+        "bpe_train",
+    ],
+)
+def test_iterative_ops_leave_one_persistent_rdd_per_result(spark, name):
+    """An iterative operator frees every round frame its result does
+    not read: after two calls, with both results collected and still
+    referenced, the session holds at most one more persistent RDD per
+    result. bpe_train returns a driver-local table, so it holds none."""
+    from agnes_spark.operators.bpe import bpe_train
+    from agnes_spark.operators.graph import (
+        kcore,
+        label_propagation,
+        pagerank,
+        personalized_pagerank,
+    )
+
+    # a triangle with a 12-node tail, both directions: no dangling node
+    und = [(1, 2), (2, 3), (1, 3)] + [(i, i + 1) for i in range(3, 15)]
+    edges = spark.createDataFrame(und + [(b, a) for a, b in und], "src long, dst long")
+    words = ["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3
+    docs = spark.createDataFrame([(" ".join(words),)], "text string")
+    op = {
+        "pagerank_fixed_rounds": lambda: pagerank(edges, max_iter=7, tol=0.0),
+        "pagerank_observed": lambda: pagerank(edges, max_iter=7),
+        "personalized_pagerank": lambda: personalized_pagerank(edges, [1], rounds=7),
+        "kcore": lambda: kcore(edges, k=2),
+        "label_propagation": lambda: label_propagation(edges, max_iter=5),
+        "connected_components": lambda: connected_components(edges, "src", "dst"),
+        "connected_components_star": lambda: connected_components_star(
+            edges, "src", "dst"
+        ),
+        "bpe_train": lambda: bpe_train(docs, "text", merges=9),
+    }[name]
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+
+    before = persistent().size()
+    results = [op() for _ in range(2)]
+    for r in results:
+        r.collect()
+    allowed = 0 if name == "bpe_train" else len(results)
+    assert persistent().size() - before <= allowed

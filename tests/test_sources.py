@@ -370,9 +370,10 @@ def _duckdb(tables_dir, sql):
 
 def test_registry_ops_see_an_input_rewritten_at_the_same_path(spark, sf_dir, tmp_path):
     """Ops that write a derived copy of their input (schema-evolution
-    batches, a compacted layout, the co-purchase graph) rebuild it on
-    every call: after the input is overwritten at the same path with a
-    subset of its rows, the next call answers for the new rows."""
+    batches, a compacted layout, the co-purchase graph, the BM25
+    index) rebuild it on every call: after the input is overwritten at
+    the same path with a subset of its rows, the next call answers for
+    the new rows."""
     import shutil
 
     import pyarrow as pa
@@ -390,6 +391,7 @@ def test_registry_ops_see_an_input_rewritten_at_the_same_path(spark, sf_dir, tmp
         ("schema_evolution_read", "orders", "o_orderkey"),
         ("compaction_roundtrip", "events", "event_id"),
         ("khop_reach_copurchase", "lineitem", "l_orderkey"),
+        ("search_bm25_topk", "documents", "doc_id"),
     ]
     for key, table_name, id_col in cases:
         df = queries[key](spark, tables)
@@ -405,3 +407,40 @@ def test_registry_ops_see_an_input_rewritten_at_the_same_path(spark, sf_dir, tmp
         second = _to_multiset(df.columns, df.collect())
         assert second == _duckdb(tables, oracles[key]), key
         assert second != first, key
+
+
+def test_registry_write_ops_leave_no_temp_dirs(spark, sf_dir):
+    """Registry ops that write files (format round-trips, stream
+    sources and checkpoints, dedup and rollup state) write under the
+    registry's one per-process scratch directory, so repeated calls
+    create no temp directory of their own."""
+    import tempfile
+
+    import __spark_entry__ as entrymod
+
+    def agnes_dirs():
+        return {d for d in os.listdir(tempfile.gettempdir()) if d.startswith("agnes_")}
+
+    keys = [
+        "csv_roundtrip",
+        "xml_roundtrip",
+        "orc_roundtrip",
+        "serialize_roundtrip",
+        "check_incremental_rollup",
+        "dedup_incremental",
+        "stream_ingest_dedup",
+        "stream_sessionize",
+        "stream_dedup",
+        "stream_ingest_neardup",
+        "stream_windowed",
+        "stream_band_join",
+        "stream_enrich_join",
+    ]
+    queries = entrymod.queries()
+    before = agnes_dirs()
+    for key in keys:
+        for _ in range(2):
+            queries[key](spark, sf_dir).collect()
+    # the scratch parent itself is created on first use and removed at exit
+    scratch = {os.path.basename(d) for d in entrymod._GATE_SCRATCH}
+    assert agnes_dirs() - before <= scratch
