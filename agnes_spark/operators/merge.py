@@ -16,13 +16,20 @@ alignment must come from somewhere explicit:
   RDD hop); the global window is a single-partition sort, the same
   cost the reference's positional merge pays to define an order at
   all. Prefer this whenever ANY ordering column exists.
-- positional (no key, no order): each side gets a contiguous index
-  from a JVM-only two-pass numbering (per-partition local offsets
-  from monotonically_increasing_id, partition counts prefix-summed
-  and broadcast back — the zipWithIndex algorithm without the Python
-  RDD hop) and the sides join on the index. Order-sensitive by
-  definition, exactly like the reference; the documented degenerate
-  path for truly keyless, orderless input.
+- positional over one frame (no key, no order; both sides select
+  columns of the same frame, e.g. `subview`s and `relabel`s of one
+  sorted view) -> the reference's own case: the views share one row
+  order, so merging them only joins their label lists. The merge is
+  one `select` over that frame: no index, no window, no join, no Spark
+  job while building, and the frame runs once, so both sides see the
+  same physical rows.
+- positional over anything else (no key, no order): each side gets a
+  contiguous index from a JVM-only two-pass numbering (per-partition
+  local offsets from monotonically_increasing_id, partition counts
+  prefix-summed and broadcast back — the zipWithIndex algorithm
+  without the Python RDD hop) and the sides join on the index.
+  Order-sensitive by definition, exactly like the reference; the
+  documented degenerate path for truly keyless, orderless input.
 """
 
 from __future__ import annotations
@@ -31,6 +38,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 _IDX = "__agnes_row_idx"
 
@@ -83,13 +91,73 @@ def with_row_index(df: DataFrame, name: str = _IDX) -> DataFrame:
     )
 
 
+def _selected(project) -> list[tuple[int, int]] | None:
+    """(output expression id, id of the attribute it selects) per entry
+    of a `Project`; None if an entry computes anything."""
+    entries = project.projectList()
+    out = []
+    for e in (entries.apply(i) for i in range(entries.size())):
+        src = e.child() if e.getClass().getSimpleName() == "Alias" else e
+        if src.getClass().getSimpleName() != "AttributeReference":
+            return None
+        out.append((e.exprId().id(), src.exprId().id()))
+    return out
+
+
+def _projection(df: DataFrame):
+    """`(child, ordinals)` when `df` only selects and renames columns of
+    `child`: its analyzed plan is one or more `Project`s whose entries
+    are attributes or aliases of attributes, and `ordinals[i]` is the
+    position in `child`'s output of `df`'s i-th column. None otherwise."""
+    plan = df._jdf.queryExecution().analyzed()
+    ids = None  # expression ids of df's columns in `plan`'s output
+    while plan.nodeName() == "Project":
+        sel = _selected(plan)
+        if sel is None:
+            break
+        src = dict(sel)
+        ids = [s for _, s in sel] if ids is None else [src[x] for x in ids]
+        plan = plan.child()
+    if ids is None:
+        return None
+    out = plan.output()
+    child_ids = [out.apply(i).exprId().id() for i in range(out.size())]
+    if not set(ids) <= set(child_ids):
+        return None
+    return plan, [child_ids.index(x) for x in ids]
+
+
+def _merge_shared(left: DataFrame, right: DataFrame) -> DataFrame | None:
+    """The positional merge of two views over one frame as one `select`
+    over it, or None when the sides are not projections of the same
+    frame (see the module docstring)."""
+    lp, rp = _projection(left), _projection(right)
+    if lp is None or rp is None or not lp[0].sameResult(rp[0]):
+        return None
+    spark = left.sparkSession
+    frame = ClassicDataFrame(
+        spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, lp[0]),
+        spark,
+    )
+    names = frame.columns
+    if len({n.lower() for n in names}) < len(names):
+        return None  # a column of the frame cannot be named uniquely
+    # sameResult: the right frame's output matches the left's by
+    # ordinal, though its attribute ids may differ (two reads of a file)
+    picked = ["`" + names[i].replace("`", "``") + "`" for i in lp[1] + rp[1]]
+    labels = left.columns + [f"{c}_1" if c in left.columns else c for c in right.columns]
+    return frame.select(*picked).toDF(*labels)
+
+
 def merge_views(
     left: DataFrame,
     right: DataFrame,
     on: Sequence[str] | None = None,
     order_by: tuple[Sequence[str], Sequence[str]] | Sequence[str] | None = None,
 ) -> DataFrame:
-    """`on` > `order_by` > RDD positional (see module docstring).
+    """`on` > `order_by` > positional (see module docstring); a
+    positional merge of two views over one frame is one `select` over
+    that frame.
 
     `order_by` is either one column list applied to both sides or a
     (left_cols, right_cols) pair when the sides name their ordering
@@ -114,6 +182,9 @@ def merge_views(
             _IDX, F.row_number().over(Window.orderBy(*[F.col(c) for c in r_ord]))
         )
     else:
+        shared = _merge_shared(left, right)
+        if shared is not None:
+            return shared
         lhs = with_row_index(left)
         rhs = with_row_index(right)
     # rename collisions on the right, matching agnes' relabel-before-merge

@@ -144,9 +144,12 @@ class DataView:
 
     def merge(self, other: "DataView", order_by=None) -> "DataView":
         """agnes src/view.rs:644 `merge` — horizontal row-aligned
-        concat. Pass `order_by` (one column list, or a (left, right)
-        pair) whenever an ordering column exists — that keeps the
-        positional alignment in Tungsten instead of the RDD hop."""
+        concat. Two views over one frame (`subview`s and `relabel`s of
+        one view) merge as one select over that frame: they share its
+        row order, as agnes views share their store's permutation.
+        Otherwise pass `order_by` (one column list, or a (left, right)
+        pair) whenever an ordering column exists — that aligns rows by
+        a row_number window instead of the checkpointed row index."""
         from agnes_spark.operators.merge import merge_views
 
         return DataView(merge_views(self._df, other._df, order_by=order_by))

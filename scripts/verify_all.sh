@@ -4,8 +4,9 @@
 #   2. oracle gate at sf0.01 — every queries() key vs its DuckDB oracle
 #   3. full pytest (operators, plans, properties, streaming)
 #   4. [optional, slow] oracle gate at sf0.1 — scale invariance
-#   5. [optional, slow] perfbench `interactive` workload, one 20 s run
-#      (perfbench/run.py; its last line is the end-to-end metrics JSON)
+#   5. [optional, slow] perfbench `interactive` and `curation` workloads,
+#      one 20 s run each (perfbench/run.py; the last line of each run is
+#      its end-to-end metrics JSON)
 #
 # Usage: scripts/verify_all.sh [--scale] [--bench]
 set -euo pipefail
@@ -28,8 +29,10 @@ if [[ "${*}" == *--scale* ]]; then
 fi
 
 if [[ "${*}" == *--bench* ]]; then
-  echo "== 5/5 perfbench interactive =="
-  python3 perfbench/run.py --workload interactive --seed 1 --seconds 20 2>/dev/null | tail -1
+  echo "== 5/5 perfbench interactive, curation =="
+  for w in interactive curation; do
+    python3 perfbench/run.py --workload "$w" --seed 1 --seconds 20 2>/dev/null | tail -1
+  done
 fi
 
 echo "verify_all: done"

@@ -31,3 +31,24 @@ def lineitem(spark, sf_dir):
 @pytest.fixture(scope="session")
 def customer(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/customer.parquet")
+
+
+@pytest.fixture
+def jobs_run(spark):
+    """`jobs_run(build)` -> `(build(), ids of the Spark jobs it ran)`."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(build):
+        group = "jobs-run"
+        sc.setJobGroup(group, group)
+        try:
+            before = set(tracker.getJobIdsForGroup(group))
+            out = build()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return out, set(tracker.getJobIdsForGroup(group)) - before
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    return run

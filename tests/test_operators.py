@@ -813,36 +813,40 @@ def test_view_stats_schema(spark, lineitem):
     )
 
 
-# the interactive workload's ops (perfbench/run.py) whose plans build
-# without running a job; merge_views' positional index checkpoints once
+# the interactive workload's ops (perfbench/run.py): every one builds
+# its plan without running a job
 INTERACTIVE_LAZY = (
     "subview", "filter_pred", "sort_two_keys", "join_equal", "join_band",
-    "melt_wide", "aggregate_sum", "view_stats", "q1_pricing_summary",
+    "merge_views", "melt_wide", "aggregate_sum", "view_stats", "q1_pricing_summary",
 )
 
 
-def test_interactive_ops_build_without_a_job(spark, sf_dir):
+def test_interactive_ops_build_without_a_job(spark, sf_dir, jobs_run):
     """With the source catalog warm, building an interactive op's plan
-    launches no Spark job; merge_views, the positive control, does."""
+    launches no Spark job; unique_indices, the positive control, does
+    (with_row_index checkpoints eagerly)."""
     import __spark_entry__ as entry
 
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     registry = entry.queries()
 
     def jobs_while_building(name):
-        group = f"build-{name}"
-        sc.setJobGroup(group, name)
-        try:
-            before = set(tracker.getJobIdsForGroup(group))
-            registry[name](spark, sf_dir)
-            sc._jsc.sc().listenerBus().waitUntilEmpty()
-            return set(tracker.getJobIdsForGroup(group)) - before
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
+        return jobs_run(lambda: registry[name](spark, sf_dir))[1]
 
-    for name in INTERACTIVE_LAZY:
+    for name in INTERACTIVE_LAZY + ("unique_indices",):
         registry[name](spark, sf_dir)  # warms the catalog
     assert {n: jobs_while_building(n) for n in INTERACTIVE_LAZY} == {n: set() for n in INTERACTIVE_LAZY}
-    assert jobs_while_building("merge_views")
+    assert jobs_while_building("unique_indices")
+
+
+def test_merge_views_leaves_no_persistent_rdd(spark, sf_dir):
+    """Two calls of the merge_views key, each collected, leave the
+    session with no more persistent RDDs than it had."""
+    import __spark_entry__ as entry
+
+    def rdd_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = rdd_ids()
+    for _ in range(2):
+        assert entry.queries()["merge_views"](spark, sf_dir).collect()
+    assert rdd_ids() - before == set()

@@ -248,12 +248,11 @@ AUDIT_SP_ALLOWED = {
     "ewma_daily_revenue",  # ordered cumsum over the bounded daily frame (calendar days)
     "mann_whitney_cents",  # bucket-totals prefix sum (n_buckets=64 rows)
     "ks_test_cents",  # bucket-totals prefix sum (n_buckets=64 rows)
-    # Positional/total-order semantics REQUIRE a global order by
-    # definition (reference view.rs positional merge / sort-defined
-    # indices). The r7 JVM-only row index (merge.py with_row_index)
-    # surfaced the exchange the old Python-RDD zipWithIndex hop hid
-    # from the audit — the cost is unchanged, now visible and pinned:
-    "merge_views",
+    # Total-order semantics REQUIRE a global order by definition
+    # (reference sort-defined indices). The r7 JVM-only row index
+    # (merge.py with_row_index) surfaced the exchange the old
+    # Python-RDD zipWithIndex hop hid from the audit — the cost is
+    # unchanged, now visible and pinned:
     "sort_comparator",
     "unique_indices",
     "spearman_qty_price",  # bucket-totals prefix sum (n_buckets=64 rows, x2 rank frames)

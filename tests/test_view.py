@@ -110,6 +110,79 @@ def test_merge_collision_rename(spark):
     assert merged.fieldnames() == ["a", "a_1"]
 
 
+def _index_merge(left, right):
+    """The with_row_index positional merge of two frames: the reference
+    the one-frame merge must agree with, row for row and in order."""
+    from agnes_spark.operators.merge import _IDX, with_row_index
+
+    rhs = with_row_index(right)
+    for c in right.columns:
+        if c in left.columns:
+            rhs = rhs.withColumnRenamed(c, f"{c}_1")
+    return with_row_index(left).join(rhs, _IDX).orderBy(_IDX).drop(_IDX)
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_merge_views_over_one_frame_is_one_select(spark, sf_dir, jobs_run):
+    """Two views of one sorted frame (one relabeled, one sharing a
+    label) merge as one select over the frame: no job while building,
+    no checkpoint (ExistingRDD) and no window in the plan, and the rows
+    and their order of the row-index merge."""
+    from agnes_spark.sources.catalog import read_source
+
+    cust = DataView(read_source(spark, f"{sf_dir}/customer.parquet")).sort_by_label(
+        "c_acctbal", "c_custkey", ascending=[False, True]
+    )
+    left = cust.subview("c_custkey", "c_name")
+    right = cust.subview("c_name", "c_acctbal").relabel("c_acctbal", "bal")
+    merged, jobs = jobs_run(lambda: left.merge(right).df)
+    assert jobs == set()
+    assert merged.columns == ["c_custkey", "c_name", "c_name_1", "bal"]
+    assert "ExistingRDD" not in _plan(merged) and "Window" not in _plan(merged)
+    rows = merged.collect()
+    assert len(rows) == cust.nrows()
+    assert rows == _index_merge(left.df, right.df).collect()
+
+
+def test_merge_views_two_reads_of_one_file_share_the_frame(spark, sf_dir):
+    """Two catalog reads of one file carry different attribute ids but
+    are the same frame, so their views merge as one select too."""
+    from agnes_spark.sources.catalog import read_source
+
+    path = f"{sf_dir}/nation.parquet"
+    left = DataView(read_source(spark, path)).subview("n_nationkey", "n_name")
+    right = DataView(read_source(spark, path)).subview("n_regionkey")
+    merged = left.merge(right).df
+    assert "ExistingRDD" not in _plan(merged) and "Window" not in _plan(merged)
+    assert merged.collect() == read_source(spark, path).select(
+        "n_nationkey", "n_name", "n_regionkey"
+    ).collect()
+
+
+def test_merge_views_other_inputs_take_the_row_index(spark, sf_dir):
+    """Views of different frames, a filter on one side only and a
+    computed column still merge through with_row_index (its checkpoint
+    shows as ExistingRDD), row-aligned."""
+    from agnes_spark.sources.catalog import read_source
+
+    cust = DataView(read_source(spark, f"{sf_dir}/customer.parquet")).sort_by_label("c_custkey")
+    nation = DataView(read_source(spark, f"{sf_dir}/nation.parquet")).sort_by_label("n_nationkey")
+    left = cust.subview("c_custkey", "c_acctbal")
+    cases = {
+        "different frames": nation.subview("n_name"),
+        "filter on one side": cust.filter(F.col("c_acctbal") > 0).subview("c_name"),
+        "computed column": cust.with_field("twice", F.col("c_acctbal") * 2).subview("twice"),
+    }
+    for case, right in cases.items():
+        merged = left.merge(right).df
+        assert "ExistingRDD" in _plan(merged), case
+        want = [tuple(a) + tuple(b) for a, b in zip(left.df.collect(), right.df.collect())]
+        assert [tuple(r) for r in merged.collect()] == want, case
+
+
 def test_to_json_rows(spark):
     df = table(spark, {"a": [1]}, types={"a": "int"})
     assert DataView(df).to_json_rows() == ['{"a":1}']
