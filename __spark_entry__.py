@@ -130,7 +130,8 @@ def sort_comparator(spark: SparkSession, sf_dir: str) -> DataFrame:
     arbitrary comparator — here key = length(p_name) — with p_partkey
     tie-break for determinism. The produced GLOBAL order is pinned
     through the order-insensitive hash by attaching each row's 0-based
-    position (with_row_index over the sorted view)."""
+    position (with_row_index, a distributed sequence over the sorted
+    view: no Spark job while building)."""
     from agnes_spark import DataView
     from agnes_spark.operators.merge import with_row_index
 
@@ -144,9 +145,10 @@ def sort_comparator(spark: SparkSession, sf_dir: str) -> DataFrame:
 def unique_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """agnes unique_indices (src/view.rs:1016): exemplar row index per
     unique (o_orderstatus, o_orderpriority) combo. Row identity = the
-    o_orderkey-sorted order, attached via with_row_index (merge.py) —
-    first-occurrence min(index) per group, the reference's scan-order
-    semantics made explicit."""
+    o_orderkey-sorted order, attached via with_row_index (merge.py, a
+    distributed sequence: no Spark job while building) — first-occurrence
+    min(index) per group, the reference's scan-order semantics made
+    explicit."""
     from agnes_spark.operators.unique import unique_indices as _ui
 
     o = _t(spark, sf_dir, "orders").orderBy("o_orderkey").select(
@@ -3007,25 +3009,20 @@ def check_shuffle_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     same seed yields the exact same ORDER whether the input comes
     straight off the parquet files or repartitioned 13 ways — and loses
     or invents no rows. Violations -> empty."""
-    from pyspark.sql import Window
-
+    from agnes_spark.operators.merge import with_row_index
     from agnes_spark.operators.textprep import shuffle_deterministic as _sd
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
 
     def positions(df: DataFrame, alias: str) -> DataFrame:
         # capture the operator's EMITTED order, not a recomputed sort:
-        # monotonically_increasing_id is nondecreasing in (partition
-        # index, row order), and the shuffle's range sort orders the
-        # output partitions, so mono rank == emitted global position.
-        # (The old version re-sorted by the same hash expression, which
-        # passes even when the operator is broken.)
-        tagged = _sd(df, ["doc_id"], seed=7).withColumn(
-            "mono", F.monotonically_increasing_id()
+        # the row index numbers rows in partition order, and the
+        # shuffle's range sort orders the output partitions, so the
+        # index is the emitted global position. (Re-sorting by the same
+        # hash expression would pass even when the operator is broken.)
+        return with_row_index(_sd(df, ["doc_id"], seed=7), "pos").select(
+            "pos", F.col("doc_id").alias(alias)
         )
-        return tagged.withColumn(
-            "pos", F.row_number().over(Window.orderBy("mono"))
-        ).select("pos", F.col("doc_id").alias(alias))
 
     p1 = positions(docs, "id1")
     p2 = positions(docs.repartition(13), "id2")

@@ -75,8 +75,7 @@ def kmeans_assign(
         F.col(vec_col), lambda x: F.round(x.cast("double") * scale).cast("long")
     )
     qdf = df.select(F.col(id_col), q.alias("q"))
-    # one materialization: every round re-scans this frame, and
-    # localCheckpoint survives catalog cache clears (bench isolation)
+    # one materialization: every round re-scans this frame
     qdf = qdf.localCheckpoint(eager=True)
 
     # the fold pads a ragged pair with NULL and an empty vector sits at

@@ -24,10 +24,9 @@ alignment must come from somewhere explicit:
   job while building, and the frame runs once, so both sides see the
   same physical rows.
 - positional over anything else (no key, no order): each side gets a
-  contiguous index from a JVM-only two-pass numbering (per-partition
-  local offsets from monotonically_increasing_id, partition counts
-  prefix-summed and broadcast back — the zipWithIndex algorithm
-  without the Python RDD hop) and the sides join on the index.
+  contiguous index from Spark's distributed sequence (the JVM
+  `zipWithIndex` node pandas-on-Spark uses for its default index, no
+  Python RDD hop) and the sides join on the index.
   Order-sensitive by definition, exactly like the reference; the
   documented degenerate path for truly keyless, orderless input.
 """
@@ -39,6 +38,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.internal import InternalFunction
 
 _IDX = "__agnes_row_idx"
 
@@ -46,49 +46,12 @@ _IDX = "__agnes_row_idx"
 def with_row_index(df: DataFrame, name: str = _IDX) -> DataFrame:
     """Attach a 0-based contiguous row index preserving current order.
 
-    JVM-only two-pass numbering — the zipWithIndex algorithm without
-    the Python RDD hop: monotonically_increasing_id encodes
-    (partition_id << 33) + 0-based local row number, so local position
-    is mid % 2^33; per-partition row counts (numPartitions rows)
-    prefix-sum into partition offsets with one tiny window and
-    broadcast-join back on partition id. The broadcast hash join is
-    map-side, so partition-local row order is preserved; the offsets
-    impose the global order — identical semantics to zipWithIndex,
-    zero serialization out of Tungsten. The indexed frame is
-    materialized once (eager localCheckpoint) and BOTH passes read it,
-    mirroring zipWithIndex's one-execution contract (see the inline
-    comment for the sf1.0 failure a re-scanning counts pass caused)."""
-    from pyspark.sql import Window
-
-    pid = "__agnes_pid"
-    local = "__agnes_local"
-    # The counts pass and the join pass MUST observe the SAME physical
-    # execution: pid/local are execution-dependent, and re-running the
-    # lineage for the offsets branch let the two passes land on
-    # different layouts (AQE coalescing / sort handling diverge between
-    # the broadcast job and the main job) — intermittent row loss at
-    # sf1.0 (150000 -> ~65k after the index join; sf0.1 always
-    # collapsed both branches to one partition, hiding it). Eagerly
-    # localCheckpoint the indexed frame so both passes read one
-    # materialized set of blocks — zipWithIndex's one-execution
-    # contract, kept JVM-side.
-    base = (
-        df.withColumn(pid, F.spark_partition_id())
-        .withColumn(local, F.monotonically_increasing_id() % F.lit(1 << 33))
-        .localCheckpoint(eager=True)
-    )
-    w = Window.orderBy(pid).rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        base.groupBy(pid)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .withColumn("__off", F.coalesce(F.sum("__n").over(w), F.lit(0)))
-        .select(pid, "__off")
-    )
-    return (
-        base.join(F.broadcast(offsets), pid)
-        .withColumn(name, (F.col("__off") + F.col(local)).cast("long"))
-        .drop(pid, local, "__off")
-    )
+    One plan node, `AttachDistributedSequence` (the index pandas-on-Spark
+    defaults to): `zipWithIndex` over its child without a Python hop.
+    The node caches its child before counting and unpersists it after
+    the action, so the counting pass and the numbering pass read the
+    same execution."""
+    return df.select("*", InternalFunction.distributed_sequence_id().alias(name))
 
 
 def _selected(project) -> list[tuple[int, int]] | None:

@@ -133,7 +133,6 @@ def dbscan_grid(
 
     # the pair frame feeds degree census, core-core edges AND border
     # attachment — materialize once or the grid join runs three times
-    # (localCheckpoint, not persist: survives bench cache clears)
     pairs = (
         radius_pairs_grid(df, id_col, x_col, y_col, radius)
         .select("id_a", "id_b")

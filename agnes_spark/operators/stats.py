@@ -1019,8 +1019,8 @@ def theil_sen(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
         ).alias("slope"),
     )
     # the pair frame feeds bounds, bucket counts AND the median-bucket
-    # probe — materialize once (localCheckpoint: survives bench cache
-    # clears) instead of re-running the pair join three times
+    # probe — materialize once instead of re-running the pair join
+    # three times
     pairs = pairs.localCheckpoint(eager=True)
     # median SELECTION without a global sort (the trimmed/winsorized
     # bucket-offset pattern): 1-row bounds -> uniform slope buckets ->

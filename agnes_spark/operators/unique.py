@@ -10,8 +10,8 @@ pruning keeps the shuffle narrow at 100 TB).
 combination — the reference's Vec<usize> of first-occurrence indices.
 Positional identity under distributed execution comes from an explicit
 row index: the caller either names an existing index column or one is
-attached in the view's current order (with_row_index, a two-pass
-distributed numbering); the exemplar is then min(index) per group —
+attached in the view's current order (with_row_index, Spark's
+distributed sequence); the exemplar is then min(index) per group —
 "first occurrence", exactly the reference's scan order semantics.
 """
 

@@ -19,21 +19,19 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+_STATE_TARGET_BYTES = 256 * 1024  # compressed source per state-store partition
+
 
 def state_partitions_for(*paths: str, floor: int = 8) -> int:
     """Derive a stateful query's state-store partition count from the
     FEED VOLUME it will ingest (the files under `paths`), not from the
     session core count: every micro-batch pays per-partition state-store
     open/commit, so the right number tracks state volume — ~256 KB of
-    compressed source per partition (AGNES_STREAM_STATE_TARGET_BYTES
-    overrides), floored at `floor` so stream-stream joins keep their
-    parallelism on small feeds (measured at sf0.1: stream_band_join
-    20s @ 32 partitions -> 10.5s @ 8; 4 loses join parallelism again
-    at 19s). At 100 TB/day the same rule yields thousands of
+    compressed source per partition, floored at `floor` so stream-stream
+    joins keep their parallelism on small feeds (measured at sf0.1:
+    stream_band_join 20s @ 32 partitions -> 10.5s @ 8; 4 loses join
+    parallelism again at 19s). At 100 TB/day the same rule yields thousands of
     partitions — the production lever, derived instead of tuned."""
-    target = int(
-        os.environ.get("AGNES_STREAM_STATE_TARGET_BYTES", str(256 * 1024))
-    )
     total = 0
     for p in paths:
         try:
@@ -46,7 +44,7 @@ def state_partitions_for(*paths: str, floor: int = 8) -> int:
                 total += os.path.getsize(p)
         except OSError:
             pass  # unreadable feed -> fall through to the floor
-    return max(floor, math.ceil(total / max(1, target))) if total else floor
+    return max(floor, math.ceil(total / _STATE_TARGET_BYTES)) if total else floor
 
 def read_events_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     """Parquet-directory stream of the events table.

@@ -149,7 +149,7 @@ class DataView:
         row order, as agnes views share their store's permutation.
         Otherwise pass `order_by` (one column list, or a (left, right)
         pair) whenever an ordering column exists — that aligns rows by
-        a row_number window instead of the checkpointed row index."""
+        a row_number window instead of the distributed-sequence index."""
         from agnes_spark.operators.merge import merge_views
 
         return DataView(merge_views(self._df, other._df, order_by=order_by))

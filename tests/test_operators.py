@@ -6,6 +6,7 @@ Model: reference tests/dataview.rs + examples/melt_aggregate.rs
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from agnes_spark.operators.aggregate import aggregate
@@ -822,31 +823,53 @@ INTERACTIVE_LAZY = (
 
 
 def test_interactive_ops_build_without_a_job(spark, sf_dir, jobs_run):
-    """With the source catalog warm, building an interactive op's plan
-    launches no Spark job; unique_indices, the positive control, does
-    (with_row_index checkpoints eagerly)."""
+    """With the source catalog warm, building an interactive op's plan,
+    or a row-index key's (sort_comparator, unique_indices), launches no
+    Spark job; dbscan_customers, the positive control, does (it counts
+    its points and checkpoints its pair frame while building)."""
     import __spark_entry__ as entry
 
     registry = entry.queries()
+    lazy = INTERACTIVE_LAZY + ("sort_comparator", "unique_indices")
 
     def jobs_while_building(name):
         return jobs_run(lambda: registry[name](spark, sf_dir))[1]
 
-    for name in INTERACTIVE_LAZY + ("unique_indices",):
+    for name in lazy + ("dbscan_customers",):
         registry[name](spark, sf_dir)  # warms the catalog
-    assert {n: jobs_while_building(n) for n in INTERACTIVE_LAZY} == {n: set() for n in INTERACTIVE_LAZY}
-    assert jobs_while_building("unique_indices")
+    assert {n: jobs_while_building(n) for n in lazy} == {n: set() for n in lazy}
+    assert jobs_while_building("dbscan_customers")
 
 
-def test_merge_views_leaves_no_persistent_rdd(spark, sf_dir):
-    """Two calls of the merge_views key, each collected, leave the
-    session with no more persistent RDDs than it had."""
+def _different_frames_merge(spark, sf_dir):
+    """A positional merge of views over two frames: the row-index path."""
+    from agnes_spark import DataView
+    from agnes_spark.sources.catalog import read_source
+
+    cust = DataView(read_source(spark, f"{sf_dir}/customer.parquet")).sort_by_label("c_custkey")
+    nation = DataView(read_source(spark, f"{sf_dir}/nation.parquet")).sort_by_label("n_nationkey")
+    return cust.subview("c_custkey").merge(nation.subview("n_name")).df
+
+
+@pytest.mark.parametrize(
+    "name", ["merge_views", "sort_comparator", "unique_indices", "different_frames"]
+)
+def test_merge_views_leaves_no_persistent_rdd(spark, sf_dir, name):
+    """Two calls of a row-aligned op (the merge_views key, the two
+    row-index keys, a positional merge of views over different frames),
+    each collected, leave the session with no more persistent RDDs
+    than it had."""
     import __spark_entry__ as entry
+
+    if name == "different_frames":
+        build = _different_frames_merge
+    else:
+        build = entry.queries()[name]
 
     def rdd_ids():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
     before = rdd_ids()
     for _ in range(2):
-        assert entry.queries()["merge_views"](spark, sf_dir).collect()
+        assert build(spark, sf_dir).collect()
     assert rdd_ids() - before == set()

@@ -230,12 +230,10 @@ AUDIT_BNLJ_ALLOWED = {
 # values, contingency cells <= |priorities|x|statuses|, per-supplier
 # revenue <= suppliers — q15 keeps the max in the same accumulation
 # deliberately, so both sides of its equality filter round
-# identically); and the deterministic-global-order check twin, whose
-# total positions ARE its semantics. Any other key growing a
-# SinglePartition exchange outside agg-merge/top-N fails.
+# identically). Any other key growing a SinglePartition exchange
+# outside agg-merge/top-N fails.
 AUDIT_SP_ALLOWED = {
     "window_distribution",
-    "check_shuffle_deterministic",
     "revenue_dod_delta",
     "rolling_corr_daily",  # rolling window over the bounded daily frame (calendar days)
     "cumulative_reach",  # running sum over the bounded hourly first-appearance frame
@@ -248,13 +246,6 @@ AUDIT_SP_ALLOWED = {
     "ewma_daily_revenue",  # ordered cumsum over the bounded daily frame (calendar days)
     "mann_whitney_cents",  # bucket-totals prefix sum (n_buckets=64 rows)
     "ks_test_cents",  # bucket-totals prefix sum (n_buckets=64 rows)
-    # Total-order semantics REQUIRE a global order by definition
-    # (reference sort-defined indices). The r7 JVM-only row index
-    # (merge.py with_row_index) surfaced the exchange the old
-    # Python-RDD zipWithIndex hop hid from the audit — the cost is
-    # unchanged, now visible and pinned:
-    "sort_comparator",
-    "unique_indices",
     "spearman_qty_price",  # bucket-totals prefix sum (n_buckets=64 rows, x2 rank frames)
     "cusum_changepoint_revenue",  # ordered cumsum over the bounded daily frame (calendar days)
     "rolling_median_revenue",  # rolling frame median over the bounded daily frame

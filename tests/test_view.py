@@ -56,13 +56,10 @@ def test_merge_positional(spark):
 
 def test_merge_positional_stays_in_tungsten(spark):
     """Keyless/orderless positional merge: correct alignment AND no
-    Python-RDD hop — the two-pass numbering (partition offsets +
-    broadcast join-back) replaces rdd.zipWithIndex entirely. The plan
-    DOES contain `Scan ExistingRDD`: that is the eager localCheckpoint
-    with_row_index takes so the counts pass and the join pass observe
-    ONE physical execution (the sf1.0 row-loss fix) — its blocks are
-    JVM UnsafeRows, not a Python hop. What must stay absent is any
-    Python evaluation or rdd.zipWithIndex lineage."""
+    Python-RDD hop. Each side's index is Spark's distributed sequence,
+    one JVM plan node (AttachDistributedSequence) that numbers rows
+    over UnsafeRows; what must stay absent is any Python evaluation or
+    a Python rdd.zipWithIndex lineage."""
     left = spark.range(0, 100).select((F.col("id") * 2).alias("a"))
     right = spark.range(0, 100).select((F.col("id") * 3).alias("b"))
     from agnes_spark.operators.merge import merge_views as _merge
@@ -164,8 +161,9 @@ def test_merge_views_two_reads_of_one_file_share_the_frame(spark, sf_dir):
 
 def test_merge_views_other_inputs_take_the_row_index(spark, sf_dir):
     """Views of different frames, a filter on one side only and a
-    computed column still merge through with_row_index (its checkpoint
-    shows as ExistingRDD), row-aligned."""
+    computed column still merge through with_row_index (its distributed
+    sequence shows as AttachDistributedSequence, with no checkpoint
+    ExistingRDD), row-aligned."""
     from agnes_spark.sources.catalog import read_source
 
     cust = DataView(read_source(spark, f"{sf_dir}/customer.parquet")).sort_by_label("c_custkey")
@@ -178,7 +176,8 @@ def test_merge_views_other_inputs_take_the_row_index(spark, sf_dir):
     }
     for case, right in cases.items():
         merged = left.merge(right).df
-        assert "ExistingRDD" in _plan(merged), case
+        assert "AttachDistributedSequence" in _plan(merged), case
+        assert "ExistingRDD" not in _plan(merged), case
         want = [tuple(a) + tuple(b) for a, b in zip(left.df.collect(), right.df.collect())]
         assert [tuple(r) for r in merged.collect()] == want, case
 
