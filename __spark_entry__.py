@@ -47,25 +47,27 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: scan-filter-agg on lineitem; partial aggs map-side,
-    8 aggregates in one pass, whole-stage codegen end to end."""
-    li = _t(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc_price), 2).alias("sum_disc_price"),
-            F.round(F.sum(charge), 2).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
+    8 aggregates in one pass, whole-stage codegen end to end. Built from
+    SQL text that Spark parses once (the lineitem frame is a temp view
+    for the duration of the `spark.sql` call only)."""
+    return spark.sql(_Q1_SPARK_SQL, lineitem=_t(spark, sf_dir, "lineitem"))
+
+
+_Q1_SPARK_SQL = """
+SELECT l_returnflag, l_linestatus,
+       round(sum(l_quantity), 2)                                            AS sum_qty,
+       round(sum(l_extendedprice), 2)                                       AS sum_base_price,
+       round(sum(l_extendedprice * (1 - l_discount)), 2)                    AS sum_disc_price,
+       round(sum(l_extendedprice * (1 - l_discount) * (l_tax + 1)), 2)      AS sum_charge,
+       round(avg(l_quantity), 4)                                            AS avg_qty,
+       round(avg(l_extendedprice), 4)                                       AS avg_price,
+       round(avg(l_discount), 6)                                            AS avg_disc,
+       count(1)                                                             AS count_order
+FROM {lineitem}
+WHERE l_shipdate <= CAST('1998-09-02' AS TIMESTAMP)
+GROUP BY l_returnflag, l_linestatus
+ORDER BY l_returnflag, l_linestatus
+"""
 
 
 _Q1_SQL = """
@@ -184,14 +186,10 @@ def join_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join instead of a nested loop (operators/join.py band_join)."""
     from agnes_spark.operators.join import band_join
 
-    p1 = _t(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("a_key"), F.col("p_retailprice").alias("a_price")
-    )
-    p2 = _t(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("b_key"), F.col("p_retailprice").alias("b_price")
-    )
+    p1 = _t(spark, sf_dir, "part").selectExpr("p_partkey AS a_key", "p_retailprice AS a_price")
+    p2 = _t(spark, sf_dir, "part").selectExpr("p_partkey AS b_key", "p_retailprice AS b_price")
     out = band_join(p1, p2, "a_price", "b_price", width=0.02)
-    return out.filter(F.col("a_key") < F.col("b_key")).select("a_key", "b_key", "a_price", "b_price")
+    return out.filter("a_key < b_key").select("a_key", "b_key", "a_price", "b_price")
 
 
 def merge_views(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -242,17 +240,17 @@ def field_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agnes_spark.operators.stats import field_stats_df
 
     out = field_stats_df(_t(spark, sf_dir, "lineitem"), "l_extendedprice")
-    return out.select(
+    return out.selectExpr(
         "num_na",
         "num_exists",
-        F.round("sum", 2).alias("sum"),
-        F.round("mean", 4).alias("mean"),
-        F.round(F.col("sum_sq") / 1e6, 2).alias("sum_sq_millions"),
-        F.round("var", 2).alias("var"),
-        F.round("varp", 2).alias("varp"),
-        F.round("stdev", 4).alias("stdev"),
-        F.round("min", 2).alias("min"),
-        F.round("max", 2).alias("max"),
+        "round(sum, 2) AS sum",
+        "round(mean, 4) AS mean",
+        "round(sum_sq / 1e6, 2) AS sum_sq_millions",
+        "round(var, 2) AS var",
+        "round(varp, 2) AS varp",
+        "round(stdev, 4) AS stdev",
+        "round(min, 2) AS min",
+        "round(max, 2) AS max",
     )
 
 
@@ -261,15 +259,15 @@ def view_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agnes_spark.operators.stats import view_stats as _vs
 
     out = _vs(_t(spark, sf_dir, "part"), ["p_partkey", "p_size", "p_retailprice"])
-    return out.select(
+    return out.selectExpr(
         "field",
         "num_na",
         "num_exists",
-        F.round("sum", 2).alias("sum"),
-        F.round("mean", 4).alias("mean"),
-        F.round("stdev", 4).alias("stdev"),
-        F.round("min", 2).alias("min"),
-        F.round("max", 2).alias("max"),
+        "round(sum, 2) AS sum",
+        "round(mean, 4) AS mean",
+        "round(stdev, 4) AS stdev",
+        "round(min, 2) AS min",
+        "round(max, 2) AS max",
     )
 
 

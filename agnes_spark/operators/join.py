@@ -22,10 +22,13 @@ Spark-first realization:
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from agnes_spark.sqltext import quote_ident
 
 _PREDICATES = {"==", "<", "<=", ">", ">=", "!="}
 
@@ -44,6 +47,15 @@ def _cond(left_col: Column, right_col: Column, predicate: str) -> Column:
     if predicate == "!=":
         return left_col != right_col
     raise ValueError(f"unknown predicate {predicate!r}; expected one of {_PREDICATES}")
+
+
+def _sql_number(x: float) -> str:
+    """`x` as SQL text of the literal type `F.lit(x)` gives it: an int
+    stays an integer, a float is a DOUBLE (a bare `0.02` would parse
+    as a DECIMAL)."""
+    if isinstance(x, bool) or not isinstance(x, (int, float)) or not math.isfinite(x):
+        raise ValueError(f"expected a finite int or float, got {x!r}")
+    return str(x) if isinstance(x, int) else f"{x!r}D"
 
 
 def predicate_join(
@@ -82,6 +94,12 @@ def band_join(
     hash-partitioned EQUI-join on bucket id with an exact post-filter —
     a nested-loop O(n*m) becomes O(n + m + matches), shuffled on bucket.
 
+    Plan build: each side's bucket is one `selectExpr` of SQL text (the
+    right one `explode(sequence(b - 1, b + 1))`), so it costs a few py4j
+    round trips. The join condition is a `Column` expression, which binds
+    each side's value to its own frame even when both sides share the
+    column name. `left_on`/`right_on` are column names, never paths.
+
     Only how='inner'/'left' preserve plain-join semantics: the right
     side is replicated 3x, so right/full outer joins would emit each
     unmatched right row 3 times — flip the sides and use 'left'.
@@ -92,16 +110,15 @@ def band_join(
             "replicated into 3 neighbor buckets, so right/full outer joins "
             f"would triplicate unmatched right rows (got how={how!r})"
         )
-    lb = F.floor(F.col(left_on) / F.lit(width)).cast("long")
-    rb = F.floor(F.col(right_on) / F.lit(width)).cast("long")
-    l2 = left.withColumn("__lb", lb)
+    w = _sql_number(width)
+    lb = f"CAST(floor({quote_ident(left_on)} / {w}) AS BIGINT)"
+    rb = f"CAST(floor({quote_ident(right_on)} / {w}) AS BIGINT)"
+    l2 = left.selectExpr("*", f"{lb} AS __lb")
     # each right row lands in its bucket and both neighbors so any
     # band-mate of a left row shares a bucket id
-    r2 = right.withColumn("__rb0", rb).withColumn(
-        "__rb", F.explode(F.array(F.col("__rb0") - 1, F.col("__rb0"), F.col("__rb0") + 1))
-    ).drop("__rb0")
+    r2 = right.selectExpr("*", f"explode(sequence({rb} - 1, {rb} + 1)) AS __rb")
     cond = (l2["__lb"] == r2["__rb"]) & (
-        F.abs(l2[left_on] - r2[right_on]) <= F.lit(width)
+        F.abs(l2[quote_ident(left_on)] - r2[quote_ident(right_on)]) <= F.lit(width)
     )
     return l2.join(r2, on=cond, how=how).drop("__lb", "__rb")
 

@@ -40,6 +40,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.internal import InternalFunction
 
+from agnes_spark.sqltext import quote_ident
+
 _IDX = "__agnes_row_idx"
 
 
@@ -107,7 +109,7 @@ def _merge_shared(left: DataFrame, right: DataFrame) -> DataFrame | None:
         return None  # a column of the frame cannot be named uniquely
     # sameResult: the right frame's output matches the left's by
     # ordinal, though its attribute ids may differ (two reads of a file)
-    picked = ["`" + names[i].replace("`", "``") + "`" for i in lp[1] + rp[1]]
+    picked = [quote_ident(names[i]) for i in lp[1] + rp[1]]
     labels = left.columns + [f"{c}_1" if c in left.columns else c for c in right.columns]
     return frame.select(*picked).toDF(*labels)
 

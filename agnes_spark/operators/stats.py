@@ -6,6 +6,11 @@ in a separate pass over the column; Spark-first we compute ALL stats
 for a field (or all fields) in a single aggregate — one scan, one
 map-side partial agg, one tiny shuffle, regardless of data size.
 
+The aggregate is written as Spark SQL text from one per-field template
+(`_stat_sql`) and handed to the JVM in a single `selectExpr`: building
+it costs a few py4j round trips however many fields it covers, where a
+`Column` tree costs about 600 per field.
+
 NA semantics preserved from the reference:
 - sum / sum_sq treat NA as 0 (== Spark's null-skipping sum);
 - mean / var / stdev ignore NAs (Spark avg/var_samp/stddev ditto);
@@ -18,42 +23,46 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from agnes_spark.sqltext import quote_ident, quote_str
 
-def _stat_aggs(c: str, prefix: str = "", integral: bool = False) -> list:
-    col = F.col(c)
+
+def _stat_sql(label: str, integral: bool) -> dict[str, str]:
+    """SQL text of every agnes stat of column `label`, by stat name."""
+    c = quote_ident(label)
     if integral:
         # int64 accumulation of sum/sum_sq overflows once |key| *
         # sqrt(rows) passes ~3e9 — the sf1.0 sweep caught
         # sum(p_partkey^2) at 1.6e21 erroring under ANSI while the
         # DuckDB oracle's HUGEINT kept going. Widen to decimal(38,0)
         # (exact to 1e38) and emit double like the float path.
-        d = col.cast("decimal(19,0)")
-        sum_expr = F.coalesce(F.sum(d).cast("double"), F.lit(0.0))
-        sum_sq_expr = F.coalesce(F.sum(d * d).cast("double"), F.lit(0.0))
+        d = f"CAST({c} AS DECIMAL(19,0))"
+        total, total_sq = f"CAST(sum({d}) AS DOUBLE)", f"CAST(sum({d} * {d}) AS DOUBLE)"
     else:
-        sum_expr = F.coalesce(F.sum(col), F.lit(0.0))
-        sum_sq_expr = F.coalesce(F.sum(col * col), F.lit(0.0))
-    return [
-        F.count(F.when(col.isNull(), F.lit(1))).alias(f"{prefix}num_na"),
-        F.count(col).alias(f"{prefix}num_exists"),
-        sum_expr.alias(f"{prefix}sum"),
-        F.avg(col).alias(f"{prefix}mean"),
-        sum_sq_expr.alias(f"{prefix}sum_sq"),
-        F.coalesce(F.var_samp(col), F.lit(0.0)).alias(f"{prefix}var"),
-        F.coalesce(F.var_pop(col), F.lit(0.0)).alias(f"{prefix}varp"),
-        F.coalesce(F.stddev_samp(col), F.lit(0.0)).alias(f"{prefix}stdev"),
-        F.min(col).alias(f"{prefix}min"),
-        F.max(col).alias(f"{prefix}max"),
-    ]
+        total, total_sq = f"sum({c})", f"sum({c} * {c})"
+    return {
+        "num_na": f"count(CASE WHEN {c} IS NULL THEN 1 END)",
+        "num_exists": f"count({c})",
+        "sum": f"coalesce({total}, 0D)",
+        "mean": f"avg({c})",
+        "sum_sq": f"coalesce({total_sq}, 0D)",
+        "var": f"coalesce(var_samp({c}), 0D)",
+        "varp": f"coalesce(var_pop({c}), 0D)",
+        "stdev": f"coalesce(stddev_samp({c}), 0D)",
+        "min": f"min({c})",
+        "max": f"max({c})",
+    }
 
 
 _INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint"}
 
 
 def field_stats_df(df: DataFrame, label: str) -> DataFrame:
-    """All agnes field stats for one column as a 1-row DataFrame."""
+    """All agnes field stats for one column as a 1-row DataFrame
+    (`label` is a column name, never a path), built as one
+    `selectExpr` of the per-field SQL template."""
     integral = dict(df.dtypes).get(label) in _INTEGRAL_TYPES
-    return df.agg(*_stat_aggs(label, integral=integral))
+    stats = _stat_sql(label, integral)
+    return df.selectExpr(*[f"{e} AS {quote_ident(s)}" for s, e in stats.items()])
 
 
 def field_stats(df: DataFrame, label: str) -> dict:
@@ -76,30 +85,25 @@ def view_stats(df: DataFrame, labels: list[str] | None = None) -> DataFrame:
     """Per-numeric-field summary (field, num_na, num_exists, sum, mean,
     stdev, min, max) — agnes src/view_stats.rs ViewStats table.
 
-    One wide aggregate over all fields (single scan), reshaped to one
-    row per field in Catalyst: `inline` over an array of per-field
-    structs, each cast to the output schema. The result is a lazy plan
-    like any other view; nothing runs until the caller's action.
+    One aggregate over all fields (single scan), reshaped to one row
+    per field in Catalyst. The plan is one `selectExpr` of SQL text,
+    `inline(array(named_struct(...), ...))` with one struct per field,
+    each stat from the per-field template cast to the output schema:
+    Spark parses it once, so building costs the same few py4j round
+    trips for 3 fields or 30. Labels are column names, quoted in the
+    text, never paths. The result is a lazy plan like any other view;
+    nothing runs until the caller's action.
     """
     numeric = {"int", "bigint", "smallint", "tinyint", "float", "double", "decimal"}
     if labels is None:
         labels = [c for c, t in df.dtypes if t in numeric or t.startswith("decimal")]
     dtypes = dict(df.dtypes)
-    aggs = []
-    for i, c in enumerate(labels):
-        aggs.extend(
-            _stat_aggs(c, prefix=f"_{i}_", integral=dtypes.get(c) in _INTEGRAL_TYPES)
-        )
-    per_field = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("field"),
-                *[F.col(f"_{i}_{s}").cast(t).alias(s) for s, t in _VIEW_STATS_COLS],
-            )
-            for i, c in enumerate(labels)
-        ]
-    )
-    return df.agg(*aggs).select(F.inline(per_field))
+    per_field = []
+    for c in labels:
+        stats = _stat_sql(c, dtypes.get(c) in _INTEGRAL_TYPES)
+        cols = ", ".join(f"'{s}', CAST({stats[s]} AS {t})" for s, t in _VIEW_STATS_COLS)
+        per_field.append(f"named_struct('field', {quote_str(c)}, {cols})")
+    return df.selectExpr(f"inline(array({', '.join(per_field)}))")
 
 
 def welch_ttest(

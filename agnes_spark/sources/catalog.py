@@ -18,11 +18,14 @@ only while the input's `os.stat` stamp is unchanged:
   every file under it.
 
 A rewritten file gets a new stamp, is resolved again, and replaces the
-superseded entry for its path. An input that cannot be stamped (a
-missing path, a glob, a non-local URI) is never reused: Spark resolves
-it on every read and raises for a missing path as before. Every miss
-also drops the entries whose path no longer exists, so reads of
-throwaway temp directories do not pile up.
+superseded entry for its path. Its path is also refreshed in Spark's
+cache manager (`spark.catalog.refreshByPath`), which otherwise serves a
+frame persisted over the old file to any plan over the same path. An
+input that cannot be stamped (a missing path, a glob, a non-local URI)
+is never reused: Spark resolves it on every read and raises for a
+missing path as before. Every miss also drops the entries whose path
+no longer exists, so reads of throwaway temp directories do not pile
+up.
 
 Scope. The entries live on their `SparkSession`, so a `DataFrame`
 bound to one session is never handed to another, and a stopped
@@ -77,6 +80,11 @@ def read_source(spark: SparkSession, path: str) -> DataFrame:
             spark._jsparkSession, hit[1].newInstance()
         )
         return ClassicDataFrame(jdf, spark)
+    if stamp is not None and hit is not None:
+        # rewritten in place: Spark's cache manager matches a persisted
+        # frame by its input's root path, not by content, so a frame
+        # cached over the old file would answer reads of the new one
+        spark.catalog.refreshByPath(path)
     df = spark.read.parquet(path)
     for p in [p for p in entries if p == path or not os.path.exists(p)]:
         entries.pop(p, None)

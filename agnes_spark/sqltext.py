@@ -1,0 +1,24 @@
+"""Spark SQL text from Python names and strings.
+
+Operators that build wide expression trees send them to the JVM as SQL
+text that Spark parses once, instead of one py4j `Column` call per
+expression node (each `F.*` call is three gateway round trips, so a
+stats or join plan of a few hundred nodes costs thousands). A name or
+string spliced into that text goes through these helpers, so Spark
+reads it back as exactly itself, whatever characters it holds, and no
+label can change the rest of the statement.
+"""
+
+from __future__ import annotations
+
+
+def quote_ident(name: str) -> str:
+    """`name` as a backtick-quoted identifier (a backtick inside is
+    doubled), so a dot, space or quote stays part of the one name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def quote_str(text: str) -> str:
+    """`text` as a single-quoted string literal, with backslashes and
+    quotes escaped by Spark's default (non-legacy) string rules."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"

@@ -1,5 +1,6 @@
 import os
 import sys
+import threading
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -50,5 +51,30 @@ def jobs_run(spark):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
+
+    return run
+
+
+@pytest.fixture
+def jvm_calls(spark):
+    """`jvm_calls(build)` -> `(build(), number of py4j gateway commands
+    this thread sent while it ran)`. Commands of other threads, such as
+    py4j's finalizer releasing collected JVM references, are not counted."""
+    client = spark.sparkContext._gateway._gateway_client
+    me = threading.get_ident()
+
+    def run(build):
+        send, sent = client.send_command, [0]
+
+        def counted(*args, **kwargs):
+            if threading.get_ident() == me:
+                sent[0] += 1
+            return send(*args, **kwargs)
+
+        client.send_command = counted
+        try:
+            return build(), sent[0]
+        finally:
+            del client.send_command  # the class's method again
 
     return run

@@ -280,6 +280,26 @@ def test_catalog_sees_a_file_rewritten_at_the_same_path(spark, tmp_path):
     assert sorted((r.id, r.tag) for r in again.collect()) == [(7, "a"), (8, "b"), (9, "c")]
 
 
+def test_catalog_refreshes_frames_cached_over_a_rewritten_file(spark, tmp_path):
+    """Spark's cache manager matches a persisted frame by its input's
+    root path, not its content: after the file is rewritten in place
+    (outside Spark), the next catalog read refreshes the path, so a
+    frame cached over the old rows does not answer for the new ones."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"id": [1, 2, 3]}), p)
+    cached = read_parquet(spark, p).filter("id > 1").persist()
+    try:
+        assert cached.count() == 2
+        pq.write_table(pa.table({"id": [5, 6, 7, 8]}), p)
+        again = read_parquet(spark, p).filter("id > 1")
+        assert sorted(r.id for r in again.collect()) == [5, 6, 7, 8]
+    finally:
+        cached.unpersist()
+
+
 def test_catalog_sees_a_directory_overwritten_by_spark(spark, tmp_path):
     out = str(tmp_path / "d")
     write_parquet(table(spark, {"a": [1, 2]}, types={"a": "bigint"}), out)
