@@ -2212,12 +2212,18 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _gate_scratch("mhstate", sf_dir)
     bands.write.mode("overwrite").parquet(path + "/bands")
     shingles.write.mode("overwrite").parquet(path + "/shingles")
+    # the delta's state is read three times by the probe: persisted
+    # (sets first, so the bands plan reads them from the cache) and
+    # kept, a memo for the next call over the same input
+    d_bands, d_sets = minhash_state(delta, "doc_id", "text")
+    d_sets.persist()
+    d_bands.persist()
     return incremental_minhash_pairs(
-        delta,
+        d_bands,
+        d_sets,
         spark.read.parquet(path + "/bands"),
         spark.read.parquet(path + "/shingles"),
         "doc_id",
-        "text",
         threshold=0.5,
     )
 

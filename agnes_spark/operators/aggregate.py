@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from agnes_spark.sqltext import quote_ident
+
 _NAMED = {
     "sum": lambda c: F.coalesce(F.sum(c), F.lit(0.0)),  # agnes sum: NA == 0
     "mean": F.avg,
@@ -39,14 +41,10 @@ def aggregate(
 ) -> DataFrame:
     """agnes aggregate::<Keys, Value, Out>(init, fold) equivalent."""
     if isinstance(agg, str):
-        agg_col = _NAMED[agg](F.col(value_label))
+        agg_col = _NAMED[agg](quote_ident(value_label))
     else:
         agg_col = agg
-    return df.groupBy(*key_labels).agg(agg_col.alias(out_label))
-
-
-def aggregate_many(df: DataFrame, key_labels: Sequence[str], *aggs: Column) -> DataFrame:
-    return df.groupBy(*key_labels).agg(*aggs)
+    return df.groupBy(*map(quote_ident, key_labels)).agg(agg_col.alias(out_label))
 
 
 def fold_in_pandas(

@@ -186,18 +186,56 @@ def jaccard_pairs_from_sets(
         )
         .select("a_id", "b_id")
     )
-    sets_a = base.select(F.col(id_col).alias("a_id"), F.col("shash").alias("a_sh"))
-    sets_b = base.select(F.col(id_col).alias("b_id"), F.col("shash").alias("b_sh"))
+    return jaccard_verify(cand, base, id_col, threshold).select(
+        "a_id", "b_id", "inter", F.round("jaccard", 6).alias("jaccard")
+    )
+
+
+def lsh_candidates(
+    bands: DataFrame, id_col: str, other: DataFrame | None = None
+) -> DataFrame:
+    """Distinct (a_id, b_id) candidate pairs: ids whose (id, band,
+    bucket) rows share a band bucket — one equi-join on (band, bucket),
+    so the cost is bounded by bucket sizes, never n^2. Without `other`
+    this is the self-join of `bands` and keeps a_id < b_id; with it,
+    a_id comes from `bands` and b_id from `other`."""
+    a = bands.select(F.col(id_col).alias("a_id"), "band", "bucket")
+    b = (bands if other is None else other).select(
+        F.col(id_col).alias("b_id"), "band", "bucket"
+    )
+    cand = a.join(b, ["band", "bucket"])
+    if other is None:
+        cand = cand.filter(F.col("a_id") < F.col("b_id"))
+    return cand.select("a_id", "b_id").distinct()
+
+
+def jaccard_verify(
+    cand: DataFrame,
+    sets: DataFrame,
+    id_col: str,
+    threshold: float,
+    other_sets: DataFrame | None = None,
+) -> DataFrame:
+    """Exact shingle-set Jaccard of candidate (a_id, b_id) pairs:
+    (a_id, b_id, inter, jaccard) for the pairs with jaccard >=
+    threshold. a_id's set is read from `sets`, b_id's from `other_sets`
+    (default `sets`), both (id, shash array<long>) frames of distinct
+    shingles. The threshold applies to the unrounded value, which is
+    returned unrounded; callers round for output."""
+    a = sets.select(F.col(id_col).alias("a_id"), F.col("shash").alias("a_sh"))
+    b = (sets if other_sets is None else other_sets).select(
+        F.col(id_col).alias("b_id"), F.col("shash").alias("b_sh")
+    )
     return (
-        cand.join(sets_a, "a_id")
-        .join(sets_b, "b_id")
+        cand.join(a, "a_id")
+        .join(b, "b_id")
         .withColumn("inter", F.size(F.array_intersect("a_sh", "b_sh")).cast("long"))
         .withColumn(
             "jaccard",
             F.col("inter") / (F.size("a_sh") + F.size("b_sh") - F.col("inter")),
         )
         .filter(F.col("jaccard") >= threshold)
-        .select("a_id", "b_id", "inter", F.round("jaccard", 6).alias("jaccard"))
+        .select("a_id", "b_id", "inter", "jaccard")
     )
 
 
@@ -246,79 +284,41 @@ def minhash_lsh_pairs(
     """MinHash + LSH near-dup pairs, verified by exact Jaccard.
 
     shingle-hash -> 64-perm MinHash signature -> band into
-    `num_bands` bucket keys -> equi-self-join per (band, bucket) for
-    candidates -> verify candidates with exact Jaccard >= threshold.
-    Candidate generation cost is bounded by bucket sizes, never n^2;
-    verification touches only candidate pairs.
-    """
-    return minhash_lsh_pairs_from_sets(
-        shingle_sets(df, id_col, text_col, n),
-        id_col,
-        num_perm=num_perm,
-        num_bands=num_bands,
-        threshold=threshold,
-    )
+    `num_bands` bucket keys -> `lsh_pairs` (equi-self-join per
+    (band, bucket) for candidates, exact Jaccard >= threshold).
+
+    The shingle sets (read by banding and both verify sides) and the
+    bands (both sides of the self-join) are persisted and never
+    released. Spark's cache manager matches a later plan over the same
+    input to them, so within a session they act as a memo: on a 4-core
+    VM the `dedup_minhash` key (sf0.1, 5,000 documents, build and
+    `noop` write) takes 1.2-1.6 s on a repeat call and 6.8-8.1 s with
+    the cache cleared before each call. Unpersisting after the
+    consuming action would make every call pay the MinHash UDF again,
+    so the leak stays until a cheaper MinHash path exists. A rewrite of
+    the input in place is not served from these frames: the source
+    catalog refreshes the path in the cache manager
+    (sources/catalog.py)."""
+    sets = shingle_sets(df, id_col, text_col, n).persist()
+    bands = minhash_bands(sets, id_col, num_perm, num_bands).persist()
+    return lsh_pairs(bands, sets, id_col, threshold)
 
 
-def minhash_lsh_pairs_from_sets(
-    sets: DataFrame,
-    id_col: str,
-    num_perm: int = 64,
-    num_bands: int = 16,
-    threshold: float = 0.5,
-    banded: DataFrame | None = None,
+def lsh_pairs(
+    bands: DataFrame, sets: DataFrame, id_col: str, threshold: float = 0.5
 ) -> DataFrame:
-    """MinHash+LSH near-dup pairs from a (id, shash array<long>)
-    shingle-set frame — the shared engine behind minhash_lsh_pairs
-    (text shingles) and binary_minhash_pairs (byte shingles).
-
-    `banded` optionally supplies the (id, band, bucket) frame a caller
-    already computed with `minhash_bands` over the SAME sets (the
-    streaming ingest sink bands each batch once for probe + intra +
-    state append); when absent it is derived here.
-
-    `base` and a `banded` derived here are persisted and never released.
-    Spark's cache manager matches a later plan over the same input to
-    them, so within a session they act as a memo: on a 4-core VM the
-    `dedup_minhash` key (sf0.1, 5,000 documents, build and `noop`
-    write) takes 1.2-1.6 s on a repeat call and 6.8-8.1 s with the
-    cache cleared before each call. Unpersisting after the consuming
-    action would make every call pay the MinHash UDF again, so the leak
-    stays until a cheaper MinHash path exists. A rewrite of the input
-    in place is not served from these frames: the source catalog
-    refreshes the path in the cache manager (sources/catalog.py)."""
-    # reused three times below (banding + both verify sides): keep
-    # the shingle sets materialized instead of re-tokenizing
-    base = sets.filter(F.size("shash") > 0).persist()
-    if banded is None:
-        banded = minhash_bands(
-            base, id_col, num_perm, num_bands
-        ).persist()  # self-joined below — else the signature UDF runs twice
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), on=["band", "bucket"])
-        .filter(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
-        .select(
-            F.col(f"x.{id_col}").alias("a_id"), F.col(f"y.{id_col}").alias("b_id")
-        )
-        .distinct()
+    """(a_id, b_id, jaccard) near-dup pairs, a_id < b_id, from the
+    (id, band, bucket) keys `minhash_bands` made of the (id, shash)
+    `sets`: `lsh_candidates` self-joins the bands, `jaccard_verify`
+    keeps the pairs whose exact Jaccard reaches `threshold`. The
+    engine behind minhash_lsh_pairs (text shingles),
+    binary_minhash_pairs (byte shingles) and the delta-internal pairs
+    of dedup_incremental.incremental_minhash_pairs. It persists
+    nothing: `bands` is read by both sides of the join and `sets` by
+    both verify sides, so a caller that builds them persists them."""
+    return jaccard_verify(lsh_candidates(bands, id_col), sets, id_col, threshold).select(
+        "a_id", "b_id", F.round("jaccard", 6).alias("jaccard")
     )
-    # verify: join candidate ids back to shingle sets, exact jaccard
-    sets_a = base.select(F.col(id_col).alias("a_id"), F.col("shash").alias("a_sh"))
-    sets_b = base.select(F.col(id_col).alias("b_id"), F.col("shash").alias("b_sh"))
-    verified = (
-        cand.join(sets_a, "a_id")
-        .join(sets_b, "b_id")
-        .withColumn("inter", F.size(F.array_intersect("a_sh", "b_sh")))
-        .withColumn(
-            "jaccard",
-            F.col("inter")
-            / (F.size("a_sh") + F.size("b_sh") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a_id", "b_id", F.round("jaccard", 6).alias("jaccard"))
-    )
-    return verified
 
 
 def byte_shingle_sets(
@@ -387,14 +387,11 @@ def binary_minhash_pairs(
     (pure codegen, content-defined 0-mod-p sampling) -> the shared
     band/bucket/verify engine. Candidate generation stays an
     equi-join on (band, bucket); verification is exact byte-shingle
-    Jaccard >= threshold."""
-    return minhash_lsh_pairs_from_sets(
-        byte_shingle_sets(df, id_col, payload_col, k, sample_mod, max_bytes),
-        id_col,
-        num_perm=num_perm,
-        num_bands=num_bands,
-        threshold=threshold,
-    )
+    Jaccard >= threshold. Sets and bands are persisted and kept, as in
+    minhash_lsh_pairs."""
+    sets = byte_shingle_sets(df, id_col, payload_col, k, sample_mod, max_bytes).persist()
+    bands = minhash_bands(sets, id_col, num_perm, num_bands).persist()
+    return lsh_pairs(bands, sets, id_col, threshold)
 
 
 def binary_jaccard_pairs(

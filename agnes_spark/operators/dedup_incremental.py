@@ -11,16 +11,18 @@ bucket-local lookups into the store:
   the shard's anti-join never reshuffles the store side; only the
   delta's hashes move.
 - near-dup (MinHash): two stores — the band-bucket index
-  (band, bucket, id) and the shingle-set table (id, shash). A shard
-  computes its own bands, equi-joins the band index for candidate
-  corpus ids, then verifies exact Jaccard against only those ids'
-  shingle rows. Both joins are equi; nothing touches corpus text.
+  (band, bucket, id) and the shingle-set table (id, shash), both from
+  `minhash_state`. A shard builds the same state for itself, equi-joins
+  the band index for candidate corpus ids, then verifies exact Jaccard
+  against only those ids' shingle rows. Both joins are equi; nothing
+  touches corpus text.
 
 Correctness contract (gated): incremental output == the one-shot
 operator run over (corpus ∪ delta), restricted to rows/pairs that
-involve the delta. Holds exactly because candidate generation and
-verification reuse the same shingle/band/hash code paths
-(dedup.shingle_sets / dedup.minhash_bands).
+involve the delta. It holds by construction: both sides' state comes
+from dedup.shingle_sets / dedup.minhash_bands, and the candidate join
+and the Jaccard verify are dedup.lsh_candidates / dedup.jaccard_verify,
+the functions the one-shot dedup.minhash_lsh_pairs runs.
 
 Reference: agnes has no incremental dedup (its FUTURE.md lists
 streaming as future work); semantics here are defined by the
@@ -34,8 +36,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from agnes_spark.operators.dedup import (
+    jaccard_verify,
+    lsh_candidates,
+    lsh_pairs,
     minhash_bands,
-    minhash_lsh_pairs_from_sets,
     shingle_sets,
     two_nearest_cells,
 )
@@ -87,93 +91,47 @@ def minhash_state(
     num_perm: int = 64,
     num_bands: int = 16,
 ) -> tuple[DataFrame, DataFrame]:
-    """Build the near-dup state for a corpus: (band index, shingle
-    table). Persist both with write.parquet / write_bucketed; the band
-    index is what shards probe, the shingle table is what verification
-    reads (candidate ids only)."""
+    """Build the near-dup state of a corpus or a delta shard: (band
+    index, shingle table). Store a corpus's with write.parquet /
+    write_bucketed; the band index is what shards probe, the shingle
+    table is what verification reads (candidate ids only)."""
     base = shingle_sets(df, id_col, text_col, n)
     bands = minhash_bands(base, id_col, num_perm, num_bands)
     return bands, base
 
 
 def incremental_minhash_pairs(
-    delta: DataFrame,
+    delta_bands: DataFrame,
+    delta_sets: DataFrame,
     corpus_bands: DataFrame,
-    corpus_shingles: DataFrame,
+    corpus_sets: DataFrame,
     id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_perm: int = 64,
-    num_bands: int = 16,
     threshold: float = 0.5,
-    sets: DataFrame | None = None,
-    banded: DataFrame | None = None,
 ) -> DataFrame:
-    """All verified near-dup pairs involving the delta: delta-vs-corpus
-    via the persisted band index, plus delta-internal via the one-shot
-    operator on the (small) delta alone. Output (a_id, b_id, jaccard)
-    with a_id < b_id — the same orientation as minhash_lsh_pairs, so
-    the parity gate's comparison is a plain anti-join.
+    """All verified near-dup pairs involving the delta, from the
+    delta's `minhash_state` and the corpus's: delta-vs-corpus through
+    the corpus band index, plus delta-internal through `lsh_pairs`.
+    Output (a_id, b_id, jaccard) with a_id < b_id — the same
+    orientation as minhash_lsh_pairs, so the parity gate's comparison
+    is a plain anti-join.
 
-    `sets` / `banded` optionally supply the delta's (id, shash) shingle
-    frame and its (id, band, bucket) band keys when the caller already
-    computed them (the streaming ingest sink shingles and bands each
-    micro-batch exactly ONCE for probe, intra-batch pairs, and the
-    state append — previously the batch text was re-shingled for each
-    of the three); absent, both are derived here as before. The frames
-    must come from `shingle_sets` / `minhash_bands` with the same
-    parameters, so reuse cannot change any result — both stages are
-    deterministic functions of the batch."""
-    d_base = sets if sets is not None else shingle_sets(
-        delta, id_col, text_col, n
-    ).persist()
-    # A locally derived band frame is consumed three times (corpus
-    # probe join + both sides of the LSH self-join inside
-    # minhash_lsh_pairs_from_sets): persist it, or the MinHash
-    # signature UDF re-runs per consumer — the exact recomputation the
-    # sets/banded pass-through exists to avoid (the streaming sink
-    # passes both, so only direct callers hit this path).
-    d_banded = (
-        banded
-        if banded is not None
-        else minhash_bands(d_base, id_col, num_perm, num_bands).persist()
-    )
-    c_bands = corpus_bands.select(
-        F.col(id_col).alias("c_id"), "band", "bucket"
-    )
-    cand = (
-        d_banded.select(F.col(id_col).alias("d_id"), "band", "bucket")
-        .join(c_bands, ["band", "bucket"])
-        .select("d_id", "c_id")
-        .distinct()
-    )
-    d_sets = d_base.select(F.col(id_col).alias("d_id"), F.col("shash").alias("d_sh"))
-    c_sets = corpus_shingles.select(
-        F.col(id_col).alias("c_id"), F.col("shash").alias("c_sh")
-    )
-    cross = (
-        cand.join(d_sets, "d_id")
-        .join(c_sets, "c_id")
-        .withColumn("inter", F.size(F.array_intersect("d_sh", "c_sh")))
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.size("d_sh") + F.size("c_sh") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select(
-            F.least("d_id", "c_id").alias("a_id"),
-            F.greatest("d_id", "c_id").alias("b_id"),
-            F.round("jaccard", 6).alias("jaccard"),
-        )
-    )
-    intra = minhash_lsh_pairs_from_sets(
-        d_base,
+    Both states must come from `minhash_state` with the same
+    parameters. Nothing is persisted here: the delta bands are read
+    three times (corpus probe and both sides of the delta self-join)
+    and the delta sets three times, so the caller that builds the
+    delta state persists it (the streaming sink does, per batch)."""
+    cross = jaccard_verify(
+        lsh_candidates(delta_bands, id_col, corpus_bands),
+        delta_sets,
         id_col,
-        num_perm=num_perm,
-        num_bands=num_bands,
-        threshold=threshold,
-        banded=d_banded,
-    ).select("a_id", "b_id", "jaccard")
+        threshold,
+        corpus_sets,
+    ).select(
+        F.least("a_id", "b_id").alias("a_id"),
+        F.greatest("a_id", "b_id").alias("b_id"),
+        F.round("jaccard", 6).alias("jaccard"),
+    )
+    intra = lsh_pairs(delta_bands, delta_sets, id_col, threshold)
     # corpus ids and delta ids are disjoint, and intra pairs are
     # delta-delta only, so the union is already duplicate-free
     return cross.unionByName(intra)

@@ -13,6 +13,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
+from agnes_spark.sqltext import quote_ident
+
 
 def melt(
     df: DataFrame,
@@ -29,8 +31,8 @@ def melt(
     if hold_labels is None:
         hold_labels = [c for c in df.columns if c not in set(melt_labels)]
     return df.unpivot(
-        ids=list(hold_labels),
-        values=list(melt_labels),
+        ids=[quote_ident(c) for c in hold_labels],
+        values=[quote_ident(c) for c in melt_labels],
         variableColumnName=name_label,
         valueColumnName=value_label,
     )

@@ -33,14 +33,6 @@ def with_ml_features(df: DataFrame, vec_col: str, out_col: str = "features") -> 
     return df.withColumn(out_col, array_to_vector(vec_double(F.col(vec_col))))
 
 
-def vector_to_array_col(df: DataFrame, vec_col: str, out_col: str) -> DataFrame:
-    """pyspark.ml Vector column -> array<double> (the engine's native
-    embedding shape)."""
-    from pyspark.ml.functions import vector_to_array
-
-    return df.withColumn(out_col, vector_to_array(F.col(vec_col)))
-
-
 _SCRATCH: list[str] = []
 
 

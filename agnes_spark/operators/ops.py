@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import operator
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _OPS = {
@@ -37,10 +37,3 @@ def rscalar_op(df: DataFrame, scalar, op: str, label: str, out_label: str | None
 def field_op(df: DataFrame, left: str, op: str, right: str, out_label: str) -> DataFrame:
     """field (op) field — agnes src/ops/field_op.rs."""
     return df.withColumn(out_label, _OPS[op](F.col(left), F.col(right)))
-
-
-def expr_field(df: DataFrame, out_label: str, expr: Column | str) -> DataFrame:
-    """General computed field (beyond the reference's 4 ops)."""
-    if isinstance(expr, str):
-        expr = F.expr(expr)
-    return df.withColumn(out_label, expr)

@@ -92,11 +92,17 @@ def view_stats(df: DataFrame, labels: list[str] | None = None) -> DataFrame:
     Spark parses it once, so building costs the same few py4j round
     trips for 3 fields or 30. Labels are column names, quoted in the
     text, never paths. The result is a lazy plan like any other view;
-    nothing runs until the caller's action.
+    nothing runs until the caller's action. An empty label list
+    (given, or no numeric column to default to) raises ValueError.
     """
     numeric = {"int", "bigint", "smallint", "tinyint", "float", "double", "decimal"}
     if labels is None:
         labels = [c for c, t in df.dtypes if t in numeric or t.startswith("decimal")]
+    if not labels:
+        raise ValueError(
+            "view_stats needs at least one label: the label list is empty "
+            "(no labels given, or the frame has no numeric column)"
+        )
     dtypes = dict(df.dtypes)
     per_field = []
     for c in labels:

@@ -117,9 +117,8 @@ def decontaminate_fuzzy(
     text. Pairwise verification is exact: the grouped join count IS
     the intersection size (per-doc shingles are distinct), so
     J = inter / (|A| + |B| - inter) in one aggregation. For eval sets
-    too large to broadcast, compose the MinHash band index instead
-    (operators/dedup.minhash_lsh_pairs_from_sets over shingle_sets of
-    both sides).
+    too large to broadcast, use decontaminate_fuzzy_banded (a MinHash
+    band probe).
     """
     shingle = hashed_shingles_udf(n)
     tr = (
@@ -220,47 +219,34 @@ def decontaminate_fuzzy_banded(
     flagged there too, with a best_jaccard / n_eval_matches no larger
     than the exhaustive path's (LSH sees a subset of the true pairs —
     pinned by check_banded_decon_subset)."""
-    from agnes_spark.operators.dedup import minhash_bands, shingle_sets
-
-    tr_sets = shingle_sets(train, id_col, text_col, n).persist()
-    ev_sets = (
-        shingle_sets(
-            eval_df.select(F.col(eval_id_col).alias("__ev_id"), text_col),
-            "__ev_id",
-            text_col,
-            n,
-        )
-    ).persist()
-    tr_bands = minhash_bands(tr_sets, id_col, num_perm, num_bands)
-    ev_bands = minhash_bands(ev_sets, "__ev_id", num_perm, num_bands)
-    cand = (
-        tr_bands.join(ev_bands, on=["band", "bucket"])
-        .select(F.col(id_col), F.col("__ev_id"))
-        .distinct()
+    from agnes_spark.operators.dedup import (
+        jaccard_verify,
+        lsh_candidates,
+        minhash_bands,
+        shingle_sets,
     )
+
+    # both sides name their id `id_col`: they are separate frames, and
+    # the shared candidate join and verify take one id column
+    tr_sets = shingle_sets(train, id_col, text_col, n).persist()
+    ev_sets = shingle_sets(
+        eval_df.select(F.col(eval_id_col).alias(id_col), text_col), id_col, text_col, n
+    ).persist()
+    cand = lsh_candidates(
+        minhash_bands(tr_sets, id_col, num_perm, num_bands),
+        id_col,
+        minhash_bands(ev_sets, id_col, num_perm, num_bands),
+    )
+    sizes = tr_sets.select(F.col(id_col).alias("a_id"), F.size("shash").alias("n_shingles"))
     pairs = (
-        cand.join(
-            tr_sets.select(
-                F.col(id_col), F.col("shash").alias("__tr_sh")
-            ),
-            id_col,
-        )
-        .join(
-            ev_sets.select(
-                F.col("__ev_id"), F.col("shash").alias("__ev_sh")
-            ),
-            "__ev_id",
-        )
-        .withColumn("n_shingles", F.size("__tr_sh"))
-        .withColumn(
-            "inter", F.size(F.array_intersect("__tr_sh", "__ev_sh"))
-        )
-        .withColumn(
+        jaccard_verify(cand, tr_sets, id_col, threshold, ev_sets)
+        .join(sizes, "a_id")
+        .select(
+            F.col("a_id").alias(id_col),
+            F.col("b_id").alias("__ev_id"),
+            "n_shingles",
             "jaccard",
-            F.col("inter")
-            / (F.col("n_shingles") + F.size("__ev_sh") - F.col("inter")),
         )
-        .filter(F.col("jaccard") >= threshold)
     )
     return _best_match_per_doc(pairs, id_col)
 

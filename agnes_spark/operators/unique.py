@@ -22,9 +22,11 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from agnes_spark.sqltext import quote_ident
+
 
 def unique_values(df: DataFrame, labels: Sequence[str]) -> DataFrame:
-    return df.select(*labels).distinct()
+    return df.select(*map(quote_ident, labels)).distinct()
 
 
 def unique_indices(
@@ -38,12 +40,6 @@ def unique_indices(
         index_col = "__agnes_uidx"
         df = with_row_index(df, index_col)
     return (
-        df.groupBy(*labels)
-        .agg(F.min(index_col).alias("row_idx"))
+        df.groupBy(*map(quote_ident, labels))
+        .agg(F.min(quote_ident(index_col)).alias("row_idx"))
     )
-
-
-def drop_duplicate_rows(df: DataFrame, labels: Sequence[str]) -> DataFrame:
-    """Keep one full row per distinct label-list value (first wins,
-    nondeterministic tie-break — mirror of dropDuplicates)."""
-    return df.dropDuplicates(list(labels))

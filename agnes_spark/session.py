@@ -13,8 +13,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-from agnes_spark.sources.catalog import read_source
-
 
 def _default_driver_mem() -> str:
     """Default driver heap: half of physical RAM, capped at 48g and
@@ -80,17 +78,6 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict:
-    """Load parquet tables from an sf directory as a name->DataFrame
-    dict, through the session's source catalog."""
-    if not names:
-        names = (
-            "region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents", "embeddings",
-        )
-    return {n: read_source(spark, os.path.join(sf_dir, f"{n}.parquet")) for n in names}
 
 
 def _free_blocks(df) -> None:

@@ -6,7 +6,11 @@ expression node (each `F.*` call is three gateway round trips, so a
 stats or join plan of a few hundred nodes costs thousands). A name or
 string spliced into that text goes through these helpers, so Spark
 reads it back as exactly itself, whatever characters it holds, and no
-label can change the rest of the statement.
+label can change the rest of the statement. A label handed to the
+DataFrame API by name (`select`, `groupBy`, `unpivot`, `F.col`) is
+quoted the same way, so Spark reads it as one column name, never as a
+path into a struct; a quoted name costs no more py4j round trips than
+a bare one.
 """
 
 from __future__ import annotations

@@ -149,12 +149,11 @@ def ingest_neardup_sink(
     batch_id-partitioned dynamic overwrite.
 
     The batch is shingled and banded exactly ONCE: the (id, shash)
-    sets and (id, band, bucket) keys computed here feed the corpus
-    probe, the intra-batch pair detection, AND the state append.
-    (Previously each of the three re-ran the Arrow shingling UDF over
-    the batch text and two of them re-ran the MinHash signature UDF —
-    pure recomputation of deterministic stages, so sharing the frames
-    changes no output.)
+    sets and (id, band, bucket) keys built and persisted here feed the
+    corpus probe, the intra-batch pair detection, AND the state
+    append, and are unpersisted when the batch is done — the engine
+    underneath persists nothing, so a long stream holds no cached
+    frame of a finished batch.
     """
     from pyspark.sql.utils import AnalysisException
 
@@ -175,22 +174,16 @@ def ingest_neardup_sink(
             empty_state = True
         b_base = shingle_sets(batch_df, id_col, text_col).persist()
         b_bands = minhash_bands(b_base, id_col).persist()
-        pairs = incremental_minhash_pairs(
-            batch_df,
-            bands,
-            shingles,
-            id_col,
-            text_col,
-            threshold=threshold,
-            sets=b_base,
-            banded=b_bands,
-        )
-        pairs.write.mode("append").parquet(out_path)
-        mode = "overwrite" if empty_state else "append"
-        b_bands.write.mode(mode).parquet(state_path + "/bands")
-        b_base.write.mode(mode).parquet(state_path + "/shingles")
-        b_bands.unpersist()
-        b_base.unpersist()
+        try:
+            incremental_minhash_pairs(
+                b_bands, b_base, bands, shingles, id_col, threshold
+            ).write.mode("append").parquet(out_path)
+            mode = "overwrite" if empty_state else "append"
+            b_bands.write.mode(mode).parquet(state_path + "/bands")
+            b_base.write.mode(mode).parquet(state_path + "/shingles")
+        finally:
+            b_bands.unpersist()
+            b_base.unpersist()
 
     return _write
 

@@ -18,6 +18,8 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from agnes_spark.sqltext import quote_ident
+
 
 class DataView:
     """Fluent wrapper mirroring agnes' DataView API (src/view.rs)."""
@@ -52,7 +54,7 @@ class DataView:
 
         Declarative select -> Catalyst prunes the scan to these columns.
         """
-        return DataView(self._df.select(*labels))
+        return DataView(self._df.select(*map(quote_ident, labels)))
 
     v = subview  # agnes src/view.rs:140 shorthand
 
@@ -69,7 +71,7 @@ class DataView:
         Expressed declaratively so Catalyst pushes it into the scan.
         """
         if predicate is not None:
-            cond = predicate(F.col(label_or_expr))
+            cond = predicate(F.col(quote_ident(label_or_expr)))
         else:
             cond = label_or_expr
         return DataView(self._df.filter(cond))
@@ -84,7 +86,9 @@ class DataView:
         if isinstance(ascending, bool):
             ascending = [ascending] * len(labels)
         cols = [
-            F.col(c).asc_nulls_last() if asc else F.col(c).desc_nulls_last()
+            F.col(quote_ident(c)).asc_nulls_last()
+            if asc
+            else F.col(quote_ident(c)).desc_nulls_last()
             for c, asc in zip(labels, ascending)
         ]
         return DataView(self._df.orderBy(*cols))
@@ -109,9 +113,9 @@ class DataView:
         callers needing a deterministic order pass `tie_break` labels
         (appended ascending after the key) — the scalable equivalent.
         """
-        k = key(F.col(label))
+        k = key(F.col(quote_ident(label)))
         cols = [k.asc_nulls_first() if ascending else k.desc_nulls_first()]
-        cols += [F.col(t).asc_nulls_first() for t in tie_break]
+        cols += [F.col(quote_ident(t)).asc_nulls_first() for t in tie_break]
         return DataView(self._df.orderBy(*cols))
 
     def unique_values(self, *labels: str) -> "DataView":
@@ -140,7 +144,7 @@ class DataView:
         agnes takes an arbitrary fold closure; the Spark-first form is
         declarative aggregate expressions (partial map-side agg for free).
         """
-        return DataView(self._df.groupBy(*key_labels).agg(*aggs))
+        return DataView(self._df.groupBy(*map(quote_ident, key_labels)).agg(*aggs))
 
     def merge(self, other: "DataView", order_by=None) -> "DataView":
         """agnes src/view.rs:644 `merge` — horizontal row-aligned

@@ -5,7 +5,8 @@ Day 0 builds the corpus state once; every later shard (or stream
 micro-batch) probes that state instead of rescanning corpus text:
 
   1. bootstrap            exact_hash_store + minhash_state, persisted
-  2. batch delta          incremental_exact_new / incremental_minhash_pairs
+  2. batch delta          incremental_exact_new, and minhash_state of the
+                          shard probed by incremental_minhash_pairs
   3. streaming delta      run_ingest_dedup (foreachBatch against the
                           same persisted hash store)
 
@@ -49,12 +50,14 @@ def main() -> None:
     # 2. batch shard: probe the persisted state, never the corpus text
     store = spark.read.parquet(store_path)
     new_rows = incremental_exact_new(delta, store, "doc_id", "text")
+    # the shard builds its own MinHash state, the same way as the corpus
+    d_bands, d_sets = minhash_state(delta, "doc_id", "text")
     near = incremental_minhash_pairs(
-        delta,
+        d_bands,
+        d_sets,
         spark.read.parquet(os.path.join(base, "bands")),
         spark.read.parquet(os.path.join(base, "shingles")),
         "doc_id",
-        "text",
     )
     print(f"batch shard: {new_rows.count()} new docs, {near.count()} near-dup pairs")
 

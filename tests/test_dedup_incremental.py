@@ -99,51 +99,58 @@ def test_incremental_embedding_no_false_pos_and_recall(spark, sf_dir):
     assert exact and len(got & exact) / len(exact) >= 0.5  # blocking recall
 
 
+def _pairs(df):
+    return {(r.a_id, r.b_id, r.jaccard) for r in df.collect()}
+
+
 def test_incremental_minhash_parity_with_full(spark, sf_dir):
     """Incremental minhash pairs (delta probed against persisted corpus
     band index + shingle table) == full-run pairs involving the delta."""
     docs = _docs(spark, sf_dir)
     corpus, delta = _split(docs)
     bands, shingles = minhash_state(corpus, "doc_id", "text")
-    inc = {
-        (r.a_id, r.b_id, r.jaccard)
-        for r in incremental_minhash_pairs(
-            delta, bands, shingles, "doc_id", "text", threshold=0.5
-        ).collect()
-    }
+    d_bands, d_sets = minhash_state(delta, "doc_id", "text")
+    inc = _pairs(
+        incremental_minhash_pairs(d_bands, d_sets, bands, shingles, "doc_id", threshold=0.5)
+    )
     full = {
-        (r.a_id, r.b_id, r.jaccard)
-        for r in minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5).collect()
-        if r.a_id % 10 == 0 or r.b_id % 10 == 0
+        p
+        for p in _pairs(minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5))
+        if p[0] % 10 == 0 or p[1] % 10 == 0
     }
     assert inc == full
     assert inc  # the synthetic docs contain planted near-dups
 
 
 def test_incremental_minhash_sets_only_path_matches(spark, sf_dir):
-    """Passing precomputed `sets` WITHOUT `banded` (the r12-advice
-    path: the band frame is then derived AND persisted internally)
-    yields bit-identical pairs to the all-derived call."""
-    from agnes_spark.operators.dedup import shingle_sets
-
+    """The delta's state is built once, persisted by its caller and
+    passed to the probe: the probe persists nothing of its own, and its
+    pairs are minhash_lsh_pairs over corpus ∪ delta restricted to the
+    pairs that involve the delta."""
     docs = _docs(spark, sf_dir)
     corpus, delta = _split(docs)
     bands, shingles = minhash_state(corpus, "doc_id", "text")
-    base = incremental_minhash_pairs(
-        delta, bands, shingles, "doc_id", "text", threshold=0.5
-    )
-    pre_sets = shingle_sets(delta, "doc_id", "text", 3).persist()
-    via_sets = incremental_minhash_pairs(
-        delta,
-        bands,
-        shingles,
-        "doc_id",
-        "text",
-        threshold=0.5,
-        sets=pre_sets,
-    )
-    rows = lambda df: {(r.a_id, r.b_id, r.jaccard) for r in df.collect()}
-    assert rows(via_sets) == rows(base)
+    d_bands, d_sets = minhash_state(delta, "doc_id", "text")
+    d_sets.persist()
+    d_bands.persist()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    try:
+        d_sets.count(), d_bands.count()  # materialize the caller's caches
+        before = set(persistent().keys())
+        inc = _pairs(
+            incremental_minhash_pairs(d_bands, d_sets, bands, shingles, "doc_id", threshold=0.5)
+        )
+        assert set(persistent().keys()) == before
+    finally:
+        d_bands.unpersist()
+        d_sets.unpersist()
+    full = {
+        p
+        for p in _pairs(minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5))
+        if p[0] % 10 == 0 or p[1] % 10 == 0
+    }
+    assert inc == full
+    assert inc
 
 
 def test_incremental_state_builds_leave_no_temp_dirs(spark, sf_dir):

@@ -3,16 +3,23 @@ characters, and py4j round trips that do not grow with the labels.
 
 `view_stats`, `field_stats` and `band_join` splice column names into
 the text they hand to `selectExpr`. A name must come back from Spark as
-exactly itself, and only ever fill a quoted slot of the text."""
+exactly itself, and only ever fill a quoted slot of the text. The core
+view surface (subview, filter, sort, melt, aggregate, unique) reads a
+label as one name too, never as a struct path."""
 
 import math
 import statistics
 
 import pytest
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
+from agnes_spark import DataView
+from agnes_spark.operators.aggregate import aggregate
 from agnes_spark.operators.join import band_join
+from agnes_spark.operators.melt import melt
 from agnes_spark.operators.stats import field_stats, field_stats_df, view_stats
+from agnes_spark.operators.unique import unique_indices, unique_values
 from agnes_spark.sqltext import quote_ident, quote_str
 
 # a space, a dot, a backtick, a single quote, a backslash
@@ -161,3 +168,89 @@ def test_view_stats_build_commands_do_not_grow_with_labels(spark, jvm_calls):
     _, n3 = jvm_calls(lambda: view_stats(narrow))
     assert n30 <= n3 + 5, (n3, n30)
     assert 0 < n3 < 50, n3
+
+
+def test_view_stats_rejects_an_empty_label_list(spark):
+    with pytest.raises(ValueError, match="label list is empty"):
+        view_stats(_odd_frame(spark), [])
+    strings = spark.createDataFrame([("a",)], "s string")
+    with pytest.raises(ValueError, match="label list is empty"):
+        view_stats(strings)
+
+
+def _kv_frame(spark, key):
+    """Key column `key` (string), value column `v.v` (double)."""
+    schema = StructType([StructField(key, StringType()), StructField("v.v", DoubleType())])
+    return spark.createDataFrame([("a", 1.0), ("b", 2.0), ("a", 3.0), (None, 4.0)], schema)
+
+
+@pytest.mark.parametrize("key", ["k.k"] + ODD_LABELS)
+def test_core_view_ops_over_odd_labels(spark, key):
+    """Each label names one top-level column, whatever it holds: these
+    raised UNRESOLVED_COLUMN for `k.k` when the label was read as a path."""
+    df = _kv_frame(spark, key)
+    view = DataView(df)
+
+    def rows(d):
+        return [tuple(r) for r in d.collect()]
+
+    sub = view.subview("v.v", key)
+    assert sub.fieldnames() == ["v.v", key]
+    assert sorted(rows(sub), key=str) == sorted([(1.0, "a"), (2.0, "b"), (3.0, "a"), (4.0, None)], key=str)
+    assert sorted(r[1] for r in rows(view.filter("v.v", lambda c: c > 1.5))) == [2.0, 3.0, 4.0]
+    assert [r[1] for r in rows(view.sort_by_label("v.v", ascending=False))] == [4.0, 3.0, 2.0, 1.0]
+    by_key = view.sort_by_label(key, "v.v", ascending=[True, False])
+    assert rows(by_key) == [("a", 3.0), ("a", 1.0), ("b", 2.0), (None, 4.0)]
+    by_len = view.sort_by_label_comparator(key, F.length, tie_break=["v.v"])
+    assert rows(by_len) == [(None, 4.0), ("a", 1.0), ("b", 2.0), ("a", 3.0)]
+
+    total = aggregate(df, [key], "v.v", "sum", "total")
+    assert total.columns == [key, "total"]
+    assert sorted(rows(total), key=str) == sorted([("a", 4.0), ("b", 2.0), (None, 4.0)], key=str)
+    grouped = view.aggregate([key], F.max(quote_ident("v.v")).alias("m"))
+    assert sorted(rows(grouped), key=str) == sorted([("a", 3.0), ("b", 2.0), (None, 4.0)], key=str)
+
+    long = melt(df, ["v.v"], "name", "value")
+    assert long.columns == [key, "name", "value"]
+    assert {r[1] for r in rows(long)} == {"v.v"}
+    assert sorted(r[2] for r in rows(long)) == [1.0, 2.0, 3.0, 4.0]
+
+    assert sorted(rows(unique_values(df, [key])), key=str) == sorted([("a",), ("b",), (None,)], key=str)
+    first = unique_indices(df, [key])
+    assert first.columns == [key, "row_idx"]
+    assert sorted(rows(first), key=str) == sorted([("a", 0), ("b", 1), (None, 3)], key=str)
+    indexed = df.withColumn("i.i", F.lit(10) - F.monotonically_increasing_id())
+    assert {r[0]: r[1] for r in rows(unique_indices(indexed, [key], index_col="i.i"))} == {
+        r[0]: min(x[2] for x in indexed.collect() if x[0] == r[0]) for r in rows(first)
+    }
+
+
+def test_quoted_labels_cost_no_extra_commands(spark, jvm_calls):
+    """Quoting each label sends no more py4j commands than the same
+    build with bare column names."""
+    df = spark.range(5).selectExpr("id AS k", "id * 1.5D AS v", "id % 2 AS g")
+    df.schema  # resolved once, outside the counts
+    view = DataView(df)
+    builds = {
+        "subview": (lambda: view.subview("k", "v"), lambda: df.select("k", "v")),
+        "filter": (
+            lambda: view.filter("v", lambda c: c > 1.0),
+            lambda: df.filter(F.col("v") > 1.0),
+        ),
+        "sort_by_label": (
+            lambda: view.sort_by_label("v", "k", ascending=[False, True]),
+            lambda: df.orderBy(F.col("v").desc_nulls_last(), F.col("k").asc_nulls_last()),
+        ),
+        "melt": (
+            lambda: melt(df, ["v"], "name", "value"),
+            lambda: df.unpivot(["k", "g"], ["v"], "name", "value"),
+        ),
+        "aggregate": (
+            lambda: aggregate(df, ["g"], "v", "sum", "t"),
+            lambda: df.groupBy("g").agg(F.coalesce(F.sum("v"), F.lit(0.0)).alias("t")),
+        ),
+    }
+    for op, (quoted, plain) in builds.items():
+        _, n_quoted = jvm_calls(quoted)
+        _, n_plain = jvm_calls(plain)
+        assert n_quoted <= n_plain, (op, n_quoted, n_plain)

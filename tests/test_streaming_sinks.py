@@ -87,12 +87,10 @@ def test_ingest_dedup_first_arrival_wins_across_batches(spark, tmp_path):
     assert {k for _, k in store} == {10, 11, 13}
 
 
-def test_ingest_neardup_finds_cross_batch_pairs(spark, tmp_path):
-    """A later batch's near-duplicate of an earlier batch's document is
-    detected via the persisted band index (no rescan of earlier text),
-    and batch-internal pairs are found too."""
+def _neardup_stream(spark, tmp_path):
+    """Two one-file micro-batches: (1, base text; 2, unrelated), then
+    (10, 11): two copies of a near-duplicate of doc 1."""
     from agnes_spark.sources.memory import table
-    from agnes_spark.streaming.sinks import run_ingest_neardup
 
     base = "the quick brown fox jumps over the lazy dog again and again today"
     src = tmp_path / "src"
@@ -114,13 +112,19 @@ def test_ingest_neardup_finds_cross_batch_pairs(spark, tmp_path):
     for root, offset in ((src / "f1.parquet", -1000), (src / "f2.parquet", 0)):
         for p in root.rglob("*"):
             os.utime(p, (p.stat().st_mtime + offset, p.stat().st_mtime + offset))
-    stream = (
+    return (
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "*.parquet"))
     )
-    run_ingest_neardup(
-        stream,
+
+
+def _run_neardup(spark, tmp_path):
+    """Ingest `_neardup_stream` and return the set of emitted pairs."""
+    from agnes_spark.streaming.sinks import run_ingest_neardup
+
+    q = run_ingest_neardup(
+        _neardup_stream(spark, tmp_path),
         str(tmp_path / "state"),
         str(tmp_path / "pairs"),
         str(tmp_path / "ckpt"),
@@ -128,12 +132,30 @@ def test_ingest_neardup_finds_cross_batch_pairs(spark, tmp_path):
         "text",
         threshold=0.5,
     )
-    pairs = {
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 2
+    return {
         (r.a_id, r.b_id) for r in spark.read.parquet(str(tmp_path / "pairs")).collect()
     }
+
+
+def test_ingest_neardup_finds_cross_batch_pairs(spark, tmp_path):
+    """A later batch's near-duplicate of an earlier batch's document is
+    detected via the persisted band index (no rescan of earlier text),
+    and batch-internal pairs are found too."""
+    pairs = _run_neardup(spark, tmp_path)
     assert (1, 10) in pairs and (1, 11) in pairs  # cross-batch via the index
     assert (10, 11) in pairs                      # batch-internal
     assert all(2 not in p for p in pairs)
+
+
+def test_ingest_neardup_leaves_no_persistent_rdd(spark, tmp_path):
+    """Each micro-batch frees the frames it persisted, and nothing under
+    the sink persists a frame of its own: a stream of near-dup batches
+    ends with the persistent RDDs it started with."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keys())
+    assert _run_neardup(spark, tmp_path)
+    assert set(persistent().keys()) == before
 
 
 def test_ingest_dedup_checkpoint_resume_no_reprocess(spark, tmp_path):
