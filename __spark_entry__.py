@@ -1855,17 +1855,13 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows state) driven to completion through a memory sink.
     Streaming-engine output — rows-only check; the batch lag+cumsum
     twin (`sessionize`) is the oracle-checked semantics."""
-    import os as _os
-
     from agnes_spark.streaming.windows import (
         read_events_stream,
         run_stream_to_memory,
         session_windows,
     )
 
-    d = _gate_scratch("sess", sf_dir)
-    _os.symlink(_os.path.join(sf_dir, "events.parquet"), _os.path.join(d, "part-0.parquet"))
-    ev = read_events_stream(spark, d)
+    ev = read_events_stream(spark, _stream_source("sess", sf_dir))
     sess = session_windows(ev, gap="1 hour", watermark="100 days")
     run_stream_to_memory(
         sess, "stream_sess_out", output_mode="complete", state_partitions=_feed_state_partitions(sf_dir)
@@ -1879,18 +1875,16 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark, driven to completion through a memory sink. Unlike the
     session/window gates the streaming output here is deterministic
     rows, so it hash-matches the batch DISTINCT oracle exactly."""
-    import os as _os
-
     from agnes_spark.streaming.stateful import streaming_dedup
     from agnes_spark.streaming.windows import read_events_stream, run_stream_to_memory
 
-    d = _gate_scratch("sdd", sf_dir)
-    _os.symlink(_os.path.join(sf_dir, "events.parquet"), _os.path.join(d, "part-0.parquet"))
     # dedup on the HOUR-truncated event time: raw ts values are unique
     # in the synthetic feed, so deduping on them would be vacuous —
     # (user, type, hour) actually collapses rows and the watermark
     # still rides the derived event-time column
-    ev = read_events_stream(spark, d).withColumn("ts_hour", F.date_trunc("hour", F.col("ts")))
+    ev = read_events_stream(spark, _stream_source("sdd", sf_dir)).withColumn(
+        "ts_hour", F.date_trunc("hour", F.col("ts"))
+    )
     dd = streaming_dedup(ev, ["user_id", "event_type"], "ts_hour", "100 days")
     run_stream_to_memory(
         dd, "stream_dedup_out", output_mode="append", state_partitions=_feed_state_partitions(sf_dir)
@@ -1908,31 +1902,26 @@ def stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-occurrence-per-content (full oracle); the multi-batch
     first-arrival-wins semantics are pinned in
     tests/test_streaming_sinks.py."""
-    import os as _os
+    from agnes_spark.streaming.sinks import ingest_dedup_sink
+    from agnes_spark.streaming.windows import drain
 
-    from agnes_spark.streaming.sinks import run_ingest_dedup
-
-    base = _gate_scratch("ingest", sf_dir)
-    src = _os.path.join(base, "src")
-    _os.makedirs(src)
-    _os.symlink(
-        _os.path.join(sf_dir, "documents.parquet"),
-        _os.path.join(src, "part-0.parquet"),
-    )
+    src = _stream_source("ingest", sf_dir, "documents")
+    base = os.path.dirname(src)
     # the symlinked file is documents.parquet itself, whose schema the
     # catalog already holds, and the sink writes the accepted stream
     # rows: neither read below runs a schema-inference job
     schema = _t(spark, sf_dir, "documents").schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    run_ingest_dedup(
-        stream,
-        _os.path.join(base, "store"),
-        _os.path.join(base, "out"),
-        _os.path.join(base, "ckpt"),
-        "doc_id",
-        "text",
+    drain(
+        spark.readStream.schema(schema)
+        .parquet(src)
+        .writeStream.option("checkpointLocation", os.path.join(base, "ckpt"))
+        .foreachBatch(
+            ingest_dedup_sink(
+                os.path.join(base, "store"), os.path.join(base, "out"), "doc_id", "text"
+            )
+        )
     )
-    return spark.read.schema(schema).parquet(_os.path.join(base, "out")).select("doc_id", "n_chars")
+    return spark.read.schema(schema).parquet(os.path.join(base, "out")).select("doc_id", "n_chars")
 
 
 def _quality_classifier(spark: SparkSession, sf_dir: str):
@@ -1999,28 +1988,26 @@ def stream_ingest_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-based — rows-only; check_stream_neardup_parity pins equality
     with the one-shot operator, and the cross-batch index probe is
     test-pinned in tests/test_streaming_sinks.py."""
-    import os as _os
+    from agnes_spark.streaming.sinks import ingest_neardup_sink
+    from agnes_spark.streaming.windows import drain
 
-    from agnes_spark.streaming.sinks import run_ingest_neardup
-
-    base = _gate_scratch("sindd", sf_dir)
-    src = _os.path.join(base, "src")
-    _os.makedirs(src)
-    _os.symlink(
-        _os.path.join(sf_dir, "documents.parquet"),
-        _os.path.join(src, "part-0.parquet"),
+    src = _stream_source("sindd", sf_dir, "documents")
+    base = os.path.dirname(src)
+    drain(
+        spark.readStream.schema(_t(spark, sf_dir, "documents").schema)
+        .parquet(src)
+        .writeStream.option("checkpointLocation", os.path.join(base, "ckpt"))
+        .foreachBatch(
+            ingest_neardup_sink(
+                os.path.join(base, "state"),
+                os.path.join(base, "pairs"),
+                "doc_id",
+                "text",
+                threshold=0.5,
+            )
+        )
     )
-    stream = spark.readStream.schema(_t(spark, sf_dir, "documents").schema).parquet(src)
-    run_ingest_neardup(
-        stream,
-        _os.path.join(base, "state"),
-        _os.path.join(base, "pairs"),
-        _os.path.join(base, "ckpt"),
-        "doc_id",
-        "text",
-        threshold=0.5,
-    )
-    return spark.read.parquet(_os.path.join(base, "pairs")).select(
+    return spark.read.parquet(os.path.join(base, "pairs")).select(
         "a_id", "b_id", "jaccard"
     )
 
@@ -2062,17 +2049,13 @@ def stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Structured Streaming twin of events_windowed, driven to
     completion through a memory sink — the streaming engine's output
     hash-matches the batch oracle exactly."""
-    import os as _os
-
     from agnes_spark.streaming.windows import (
         read_events_stream,
         run_stream_to_memory,
         windowed_counts,
     )
 
-    d = _gate_scratch("windowed", sf_dir)
-    _os.symlink(_os.path.join(sf_dir, "events.parquet"), _os.path.join(d, "part-0.parquet"))
-    ev = read_events_stream(spark, d)
+    ev = read_events_stream(spark, _stream_source("windowed", sf_dir))
     agg = windowed_counts(ev, window="1 hour", watermark="100 days")
     run_stream_to_memory(
         agg, "stream_windowed_out", output_mode="complete", state_partitions=_feed_state_partitions(sf_dir)
@@ -2175,8 +2158,8 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard anti-joins it without any corpus-text rescan. Output: delta
     docs whose content is genuinely new (absent from corpus, first
     occurrence within the delta)."""
+    from agnes_spark.operators.dedup import first_occurrences
     from agnes_spark.operators.dedup_incremental import (
-        exact_hash_store,
         incremental_exact_new,
         write_exact_store,
     )
@@ -2184,12 +2167,12 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, delta = _docs_corpus_delta(spark, sf_dir)
     path = _gate_scratch("hashstore", sf_dir)
     write_exact_store(
-        exact_hash_store(corpus, "doc_id", "text"), "agnes_hash_store_gate", path=path
+        first_occurrences(corpus, "doc_id", "text"), "agnes_hash_store_gate", path=path
     )
     store = spark.table("agnes_hash_store_gate")
     return (
         incremental_exact_new(delta, store, "doc_id", "text")
-        .select("doc_id")
+        .selectExpr("keep_id AS doc_id")
         .orderBy("doc_id")
     )
 
@@ -3576,6 +3559,17 @@ def _gate_scratch(name: str, sf_dir: str) -> str:
     return path
 
 
+def _stream_source(name: str, sf_dir: str, table: str = "events") -> str:
+    """The file-stream source directory of gate `name`: a `src`
+    directory under the gate's fresh `_gate_scratch` holding `table`'s
+    parquet file (symlinked as part-0.parquet). The gate keeps its
+    checkpoint, sinks and state next to it, in the parent directory."""
+    src = os.path.join(_gate_scratch(name, sf_dir), "src")
+    os.makedirs(src)
+    os.symlink(os.path.join(sf_dir, f"{table}.parquet"), os.path.join(src, "part-0.parquet"))
+    return src
+
+
 def zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end Z-order layout correctness: events written clustered
     by the (user_id, event_id) Morton code (partitioning.py
@@ -3764,16 +3758,10 @@ def stream_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     to completion through a memory sink; the output rows are
     deterministic, so this hash-matches the equivalent batch self-join
     oracle exactly (like stream_dedup, a FULL-oracle streaming gate)."""
-    import os as _os
-
     from agnes_spark.streaming.joins import stream_self_join
     from agnes_spark.streaming.windows import read_events_stream, run_stream_to_memory
 
-    d = _gate_scratch("sbj", sf_dir)
-    _os.symlink(
-        _os.path.join(sf_dir, "events.parquet"), _os.path.join(d, "part-0.parquet")
-    )
-    ev = read_events_stream(spark, d)
+    ev = read_events_stream(spark, _stream_source("sbj", sf_dir))
     joined = stream_self_join(ev, band="30 minutes", watermark="100 days")
     run_stream_to_memory(
         joined, "stream_band_join_out", output_mode="append", state_partitions=_feed_state_partitions(sf_dir)
@@ -6109,18 +6097,12 @@ def stream_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically from the distinct user ids, so the FULL oracle
     reproduces the enrichment in closed form — proving the
     stream-static join path emits exactly the batch answer."""
-    import os as _os
-
     from agnes_spark.streaming.windows import (
         read_events_stream,
         run_stream_to_memory,
     )
 
-    d = _gate_scratch("enrich", sf_dir)
-    _os.symlink(
-        _os.path.join(sf_dir, "events.parquet"), _os.path.join(d, "part-0.parquet")
-    )
-    ev = read_events_stream(spark, d)
+    ev = read_events_stream(spark, _stream_source("enrich", sf_dir))
     users = (
         _events(spark, sf_dir)
         .select("user_id")

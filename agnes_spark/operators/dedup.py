@@ -12,7 +12,7 @@ removes repeated substrings inside otherwise-unique documents.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from agnes_spark.functions import (
@@ -29,14 +29,35 @@ from agnes_spark.functions import (
 )
 
 
+def content_hash(text_col: str) -> Column:
+    """sha256 of `text_col` as 64 hex characters: the content key every
+    exact-dedup path groups, partitions and joins on instead of the raw
+    text."""
+    return F.sha2(F.col(text_col), 256)
+
+
+def first_occurrences(
+    df: DataFrame, id_col: str, text_col: str, *aggs: Column
+) -> DataFrame:
+    """(content_hash, keep_id, *aggs): one row per distinct content with
+    its minimal id kept — a single hash aggregate (map-side partial) on
+    a 32-byte key, never on raw text. Bare, it is the exact-dedup state
+    of operators/dedup_incremental.py: its on-disk store, the probe of
+    a delta against that store and the rows the streaming sink appends
+    to it."""
+    return (
+        df.select(content_hash(text_col).alias("content_hash"), F.col(id_col))
+        .groupBy("content_hash")
+        .agg(F.min(id_col).alias("keep_id"), *aggs)
+    )
+
+
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact dedup on sha256(text): one row per distinct content with
-    the minimal id kept and the duplicate count — a single hash
-    aggregate (map-side partial) on a 32-byte key, never on raw text."""
-    return (
-        df.select(F.sha2(F.col(text_col), 256).alias("content_hash"), F.col(id_col))
-        .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
+    the minimal id kept and the duplicate count (`first_occurrences`
+    plus `n_copies`)."""
+    return first_occurrences(
+        df, id_col, text_col, F.count(F.lit(1)).alias("n_copies")
     )
 
 
@@ -48,9 +69,7 @@ def exact_dedup_kept(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     hash-partitioned by the 32-byte content hash exactly once and a
     per-group row_number keeps the minimal id. Use `exact_dedup` when
     only the (hash, keep_id, n_copies) summary is needed."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(F.sha2(F.col(text_col), 256)).orderBy(
+    w = Window.partitionBy(content_hash(text_col)).orderBy(
         F.col(id_col).asc()
     )
     return (
@@ -84,7 +103,7 @@ def exact_dedup_keep_best(
     )
     return (
         df.select(
-            F.sha2(F.col(text_col), 256).alias("content_hash"),
+            content_hash(text_col).alias("content_hash"),
             F.col(id_col),
             F.col(score_col),
         )

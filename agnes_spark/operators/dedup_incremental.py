@@ -6,10 +6,13 @@ deduped against it WITHOUT rescanning corpus text. Dedup state lives
 in compact, joinable stores, and per-shard cost is O(|delta|) plus
 bucket-local lookups into the store:
 
-- exact: a content-hash store — one (sha256, keeper id) row per
-  distinct content — written BUCKETED by hash (write_bucketed), so
-  the shard's anti-join never reshuffles the store side; only the
-  delta's hashes move.
+- exact: a content-hash store — one (content_hash, keep_id) row per
+  distinct content, `dedup.first_occurrences` of the corpus — written
+  BUCKETED by hash (write_bucketed), so the shard's anti-join never
+  reshuffles the store side; only the delta's hashes move. The probe
+  runs the same aggregate over the delta, so its output rows are
+  store rows, and the streaming sink (streaming/sinks.py
+  ingest_dedup_sink) appends them to the store unchanged.
 - near-dup (MinHash): two stores — the band-bucket index
   (band, bucket, id) and the shingle-set table (id, shash), both from
   `minhash_state`. A shard builds the same state for itself, equi-joins
@@ -36,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from agnes_spark.operators.dedup import (
+    first_occurrences,
     jaccard_verify,
     lsh_candidates,
     lsh_pairs,
@@ -45,20 +49,11 @@ from agnes_spark.operators.dedup import (
 )
 
 
-def exact_hash_store(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(content_hash, keep_id): one row per distinct content — the
-    whole exact-dedup state, 40ish bytes per distinct doc."""
-    return (
-        df.select(F.sha2(F.col(text_col), 256).alias("content_hash"), F.col(id_col))
-        .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keep_id"))
-    )
-
-
 def write_exact_store(
     store: DataFrame, table_name: str, path: str | None = None, num_buckets: int = 32
 ) -> None:
-    """Persist the hash store bucketed by content_hash: every future
+    """Persist the hash store — `dedup.first_occurrences` of the corpus,
+    (content_hash, keep_id) — bucketed by content_hash: every future
     shard's anti-join reads co-located buckets instead of reshuffling
     the (corpus-sized) store. At 100 TB this asymmetry IS the feature —
     the store is written once, shards only ever bucket-probe it."""
@@ -70,17 +65,13 @@ def write_exact_store(
 def incremental_exact_new(
     delta: DataFrame, store: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
-    """Delta rows with genuinely NEW content: first occurrence (min id)
-    of their hash within the delta, and hash absent from the store.
-    Returns (id, content_hash) — exactly the rows to append to the
-    store after the shard is accepted."""
-    h = delta.select(
-        F.col(id_col), F.sha2(F.col(text_col), 256).alias("content_hash")
-    )
-    first_in_delta = h.groupBy("content_hash").agg(F.min(id_col).alias(id_col))
-    return first_in_delta.join(
+    """The delta's genuinely NEW content: the first occurrence (min id)
+    of each hash within the delta whose hash is absent from the store.
+    Returns store-shaped (content_hash, keep_id) rows — exactly the
+    rows to append to the store after the shard is accepted."""
+    return first_occurrences(delta, id_col, text_col).join(
         store.select("content_hash"), "content_hash", "left_anti"
-    ).select(id_col, "content_hash")
+    )
 
 
 def minhash_state(

@@ -95,10 +95,11 @@ def band_join(
     a nested-loop O(n*m) becomes O(n + m + matches), shuffled on bucket.
 
     Plan build: each side's bucket is one `selectExpr` of SQL text (the
-    right one `explode(sequence(b - 1, b + 1))`), so it costs a few py4j
-    round trips. The join condition is a `Column` expression, which binds
-    each side's value to its own frame even when both sides share the
-    column name. `left_on`/`right_on` are column names, never paths.
+    right one `explode(sequence(b - 1, b + 1))`) and the join condition
+    is one SQL expression over the two sides aliased `__l` and `__r`,
+    which binds each side's value to its own frame even when both sides
+    share the column name; the build costs a few py4j round trips.
+    `left_on`/`right_on` are column names, never paths.
 
     Only how='inner'/'left' preserve plain-join semantics: the right
     side is replicated 3x, so right/full outer joins would emit each
@@ -113,12 +114,13 @@ def band_join(
     w = _sql_number(width)
     lb = f"CAST(floor({quote_ident(left_on)} / {w}) AS BIGINT)"
     rb = f"CAST(floor({quote_ident(right_on)} / {w}) AS BIGINT)"
-    l2 = left.selectExpr("*", f"{lb} AS __lb")
+    l2 = left.selectExpr("*", f"{lb} AS __lb").alias("__l")
     # each right row lands in its bucket and both neighbors so any
     # band-mate of a left row shares a bucket id
-    r2 = right.selectExpr("*", f"explode(sequence({rb} - 1, {rb} + 1)) AS __rb")
-    cond = (l2["__lb"] == r2["__rb"]) & (
-        F.abs(l2[quote_ident(left_on)] - r2[quote_ident(right_on)]) <= F.lit(width)
+    r2 = right.selectExpr("*", f"explode(sequence({rb} - 1, {rb} + 1)) AS __rb").alias("__r")
+    cond = F.expr(
+        f"__l.__lb = __r.__rb AND "
+        f"abs(__l.{quote_ident(left_on)} - __r.{quote_ident(right_on)}) <= {w}"
     )
     return l2.join(r2, on=cond, how=how).drop("__lb", "__rb")
 

@@ -28,6 +28,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from agnes_spark.session import supersede
+
 # half-plane neighbor offsets: each unordered pair of distinct
 # adjacent cells is connected by exactly ONE of these
 _HALF_PLANE = [(0, 0), (0, 1), (1, -1), (1, 0), (1, 1)]
@@ -188,8 +190,16 @@ def dbscan_grid(
         .groupBy("id")
         .agg(F.min("ncl").alias("cluster_id"))
     )
-    return core_lab.select(
-        "id", F.lit(1).cast("int").alias("is_core"), "cluster_id"
-    ).unionByName(
-        border.select("id", F.lit(0).cast("int").alias("is_core"), "cluster_id")
+    # materialize the result once so no plan reads the intermediate
+    # checkpoints again, then free them: a live result holds one
+    # persistent RDD, its own
+    out = (
+        core_lab.select("id", F.lit(1).cast("int").alias("is_core"), "cluster_id")
+        .unionByName(
+            border.select("id", F.lit(0).cast("int").alias("is_core"), "cluster_id")
+        )
+        .localCheckpoint(eager=True)
     )
+    for frame in (pairs, core, cc, core_lab):
+        supersede(frame, None)
+    return out

@@ -2,8 +2,10 @@
 
 Operators that build wide expression trees send them to the JVM as SQL
 text that Spark parses once, instead of one py4j `Column` call per
-expression node (each `F.*` call is three gateway round trips, so a
-stats or join plan of a few hundred nodes costs thousands). A name or
+expression node (in pyspark 4.1 each `F.*` call sends about thirteen
+gateway commands, most of them the call-site bookkeeping pyspark wraps
+around it, and each `Column` operator about eleven, so a stats or join
+plan of a few hundred nodes costs thousands). A name or
 string spliced into that text goes through these helpers, so Spark
 reads it back as exactly itself, whatever characters it holds, and no
 label can change the rest of the statement. A label handed to the

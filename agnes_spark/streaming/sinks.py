@@ -2,18 +2,33 @@
 
 The memory sink in windows.py is for tests; real deployments write
 through foreachBatch so each micro-batch lands transactionally and
-reprocessing is idempotent. Patterns here:
+reprocessing is idempotent. Each function here returns the function a
+caller hands to `writeStream.foreachBatch`; `windows.drain` runs the
+query to completion. Patterns here:
 
 - `parquet_upsert_sink`: partition-overwrite idempotence — every
   micro-batch (re)writes exactly the partitions it touches (dynamic
   partitionOverwriteMode), so replaying a batch after a failure
   converges instead of duplicating.
+- `ingest_dedup_sink` / `ingest_neardup_sink`: each micro-batch is
+  deduped against the state that earlier batches persisted (the exact
+  content-hash store / the MinHash band index and shingle table) and
+  appends its own state for the batches after it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.utils import AnalysisException
+
+
+def _state(spark: SparkSession, path: str, schema: str) -> tuple[DataFrame, bool]:
+    """The sink state persisted at `path` and True, or an empty frame
+    of `schema` and False when no batch has written it yet."""
+    try:
+        return spark.read.parquet(path), True
+    except AnalysisException:
+        return spark.createDataFrame([], schema), False
 
 
 def parquet_upsert_sink(out_path: str, partition_cols: list[str]):
@@ -43,26 +58,6 @@ def parquet_upsert_sink(out_path: str, partition_cols: list[str]):
     return _write
 
 
-def run_stream_to_parquet(
-    stream_df: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-    partition_cols: list[str],
-    output_mode: str = "update",
-):
-    """Drive a streaming DataFrame through the idempotent parquet sink
-    to completion (synchronous; tests/backfills)."""
-    q = (
-        stream_df.writeStream.outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(parquet_upsert_sink(out_path, partition_cols))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return q
-
-
 def ingest_dedup_sink(store_path: str, out_path: str, id_col: str, text_col: str):
     """foreachBatch function for STREAMING EXACT DEDUP against a
     persisted content-hash store — the 100 TB ingest-pipeline shape:
@@ -72,7 +67,8 @@ def ingest_dedup_sink(store_path: str, out_path: str, id_col: str, text_col: str
        (dedup_incremental.incremental_exact_new — first-in-batch
        min-id per hash, hash absent from store),
     2. appends only the accepted rows to `out_path`,
-    3. appends the accepted (hash, id) rows to the store,
+    3. appends the probe's (content_hash, keep_id) rows to the store
+       as they are — they are store-shaped,
 
     so per-batch cost is O(|batch|) + a bucket-local probe; corpus
     text is never rescanned. Content-level idempotence comes from the
@@ -82,46 +78,18 @@ def ingest_dedup_sink(store_path: str, out_path: str, id_col: str, text_col: str
     pairs this with batch_id-partitioned dynamic overwrite
     (parquet_upsert_sink) for exactly-once output too.
     """
-    from pyspark.sql.utils import AnalysisException
-
     from agnes_spark.operators.dedup_incremental import incremental_exact_new
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        try:
-            store = spark.read.parquet(store_path)
-        except AnalysisException:
-            # first batch: no store yet -> everything is new content
-            store = spark.createDataFrame([], "content_hash string")
+        # before the first batch there is no store: all content is new
+        store, _ = _state(batch_df.sparkSession, store_path, "content_hash string")
         new = incremental_exact_new(batch_df, store, id_col, text_col)
-        kept = batch_df.join(new.select(id_col), id_col, "semi")
-        kept.write.mode("append").parquet(out_path)
-        new.select("content_hash", F.col(id_col).alias("keep_id")).write.mode(
+        batch_df.join(new.withColumnRenamed("keep_id", id_col), id_col, "semi").write.mode(
             "append"
-        ).parquet(store_path)
+        ).parquet(out_path)
+        new.write.mode("append").parquet(store_path)
 
     return _write
-
-
-def run_ingest_dedup(
-    stream_df: DataFrame,
-    store_path: str,
-    out_path: str,
-    checkpoint_path: str,
-    id_col: str,
-    text_col: str,
-):
-    """Drive a document stream through `ingest_dedup_sink` to
-    completion (synchronous; tests/backfills)."""
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(ingest_dedup_sink(store_path, out_path, id_col, text_col))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return q
 
 
 def ingest_neardup_sink(
@@ -155,30 +123,24 @@ def ingest_neardup_sink(
     underneath persists nothing, so a long stream holds no cached
     frame of a finished batch.
     """
-    from pyspark.sql.utils import AnalysisException
-
     from agnes_spark.operators.dedup import minhash_bands, shingle_sets
     from agnes_spark.operators.dedup_incremental import incremental_minhash_pairs
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        try:
-            bands = spark.read.parquet(state_path + "/bands")
-            shingles = spark.read.parquet(state_path + "/shingles")
-            empty_state = False
-        except AnalysisException:
-            bands = spark.createDataFrame([], f"{id_col} long, band int, bucket long")
-            shingles = spark.createDataFrame(
-                [], f"{id_col} long, shash array<bigint>"
-            )
-            empty_state = True
+        bands, persisted = _state(
+            spark, state_path + "/bands", f"{id_col} long, band int, bucket long"
+        )
+        shingles, _ = _state(
+            spark, state_path + "/shingles", f"{id_col} long, shash array<bigint>"
+        )
         b_base = shingle_sets(batch_df, id_col, text_col).persist()
         b_bands = minhash_bands(b_base, id_col).persist()
         try:
             incremental_minhash_pairs(
                 b_bands, b_base, bands, shingles, id_col, threshold
             ).write.mode("append").parquet(out_path)
-            mode = "overwrite" if empty_state else "append"
+            mode = "append" if persisted else "overwrite"
             b_bands.write.mode(mode).parquet(state_path + "/bands")
             b_base.write.mode(mode).parquet(state_path + "/shingles")
         finally:
@@ -186,27 +148,3 @@ def ingest_neardup_sink(
             b_base.unpersist()
 
     return _write
-
-
-def run_ingest_neardup(
-    stream_df: DataFrame,
-    state_path: str,
-    out_path: str,
-    checkpoint_path: str,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.5,
-):
-    """Drive a document stream through `ingest_neardup_sink` to
-    completion (synchronous; tests/backfills)."""
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(
-            ingest_neardup_sink(state_path, out_path, id_col, text_col, threshold)
-        )
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return q

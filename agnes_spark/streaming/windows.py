@@ -3,8 +3,10 @@
 The batch versions (events_windowed / sessionize in __spark_entry__)
 are the oracle-checked semantics; these run the same logic as
 incremental streaming queries with watermarked state. Tests drive them
-with the events parquet through a memory sink (processAllAvailable),
-which exercises the real streaming engine end to end.
+with the events parquet through a memory sink, which exercises the real
+streaming engine end to end; `drain` is the one place a query is
+started, run over all available input and stopped, for the memory sink
+here and the foreachBatch sinks in sinks.py alike.
 
 At production scale the source line changes to kafka/kinesis and the
 sink to a transactional foreachBatch — the plan in between is
@@ -18,6 +20,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 _STATE_TARGET_BYTES = 256 * 1024  # compressed source per state-store partition
 
@@ -140,6 +143,18 @@ def session_windows(
     )
 
 
+def drain(writer: DataStreamWriter) -> StreamingQuery:
+    """Start `writer`'s query, process every input available at start
+    and stop it; returns the stopped query, whose `recentProgress`
+    lists the batches it ran. Synchronous, for tests, backfills and the
+    registry's stream gates. A batch that raises terminates its query,
+    so `processAllAvailable` re-raises and no query is left running."""
+    q = writer.start()
+    q.processAllAvailable()
+    q.stop()
+    return q
+
+
 def run_stream_to_memory(
     stream_df: DataFrame,
     name: str,
@@ -165,15 +180,9 @@ def run_stream_to_memory(
         prior = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .start()
+        return drain(
+            stream_df.writeStream.outputMode(output_mode).format("memory").queryName(name)
         )
-        q.processAllAvailable()
-        q.stop()
     finally:
         if prior is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return q

@@ -9,6 +9,10 @@ filters/projections into the scan and pick join strategies.
 Every method returns a new DataView (immutably, like agnes' move-based
 builder API); `.df` unwraps the underlying pyspark DataFrame so users
 can drop to plain Spark at any point.
+
+A method that needs a label as a `Column` binds it through the frame,
+`df[quote_ident(label)]`: one py4j command, where `F.col` sends about
+thirteen (pyspark wraps each `functions` call in call-site bookkeeping).
 """
 
 from __future__ import annotations
@@ -16,7 +20,6 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 from agnes_spark.sqltext import quote_ident
 
@@ -71,7 +74,7 @@ class DataView:
         Expressed declaratively so Catalyst pushes it into the scan.
         """
         if predicate is not None:
-            cond = predicate(F.col(quote_ident(label_or_expr)))
+            cond = predicate(self._df[quote_ident(label_or_expr)])
         else:
             cond = label_or_expr
         return DataView(self._df.filter(cond))
@@ -86,9 +89,9 @@ class DataView:
         if isinstance(ascending, bool):
             ascending = [ascending] * len(labels)
         cols = [
-            F.col(quote_ident(c)).asc_nulls_last()
+            self._df[quote_ident(c)].asc_nulls_last()
             if asc
-            else F.col(quote_ident(c)).desc_nulls_last()
+            else self._df[quote_ident(c)].desc_nulls_last()
             for c, asc in zip(labels, ascending)
         ]
         return DataView(self._df.orderBy(*cols))
@@ -113,9 +116,9 @@ class DataView:
         callers needing a deterministic order pass `tie_break` labels
         (appended ascending after the key) — the scalable equivalent.
         """
-        k = key(F.col(quote_ident(label)))
+        k = key(self._df[quote_ident(label)])
         cols = [k.asc_nulls_first() if ascending else k.desc_nulls_first()]
-        cols += [F.col(quote_ident(t)).asc_nulls_first() for t in tie_break]
+        cols += [self._df[quote_ident(t)].asc_nulls_first() for t in tie_break]
         return DataView(self._df.orderBy(*cols))
 
     def unique_values(self, *labels: str) -> "DataView":

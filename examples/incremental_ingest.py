@@ -4,11 +4,12 @@ stops growing.
 Day 0 builds the corpus state once; every later shard (or stream
 micro-batch) probes that state instead of rescanning corpus text:
 
-  1. bootstrap            exact_hash_store + minhash_state, persisted
+  1. bootstrap            first_occurrences (the hash store) +
+                          minhash_state, persisted
   2. batch delta          incremental_exact_new, and minhash_state of the
                           shard probed by incremental_minhash_pairs
-  3. streaming delta      run_ingest_dedup (foreachBatch against the
-                          same persisted hash store)
+  3. streaming delta      ingest_dedup_sink under foreachBatch against the
+                          same persisted hash store, run by drain
 
 Run: python examples/incremental_ingest.py [sf_dir]
 """
@@ -23,13 +24,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from agnes_spark import get_spark
+from agnes_spark.operators.dedup import first_occurrences
 from agnes_spark.operators.dedup_incremental import (
-    exact_hash_store,
     incremental_exact_new,
     incremental_minhash_pairs,
     minhash_state,
 )
-from agnes_spark.streaming.sinks import run_ingest_dedup
+from agnes_spark.streaming.sinks import ingest_dedup_sink
+from agnes_spark.streaming.windows import drain
 
 
 def main() -> None:
@@ -42,7 +44,7 @@ def main() -> None:
 
     # 1. bootstrap: persist the dedup state once
     store_path = os.path.join(base, "hash_store")
-    exact_hash_store(corpus, "doc_id", "text").write.parquet(store_path)
+    first_occurrences(corpus, "doc_id", "text").write.parquet(store_path)
     bands, shingles = minhash_state(corpus, "doc_id", "text")
     bands.write.parquet(os.path.join(base, "bands"))
     shingles.write.parquet(os.path.join(base, "shingles"))
@@ -66,13 +68,11 @@ def main() -> None:
     os.makedirs(src)
     delta.limit(50).coalesce(1).write.parquet(os.path.join(src, "s1.parquet"))
     stream = spark.readStream.schema(docs.schema).parquet(os.path.join(src, "*.parquet"))
-    run_ingest_dedup(
-        stream,
-        store_path,
-        os.path.join(base, "accepted"),
-        os.path.join(base, "ckpt"),
-        "doc_id",
-        "text",
+    drain(
+        stream.writeStream.option("checkpointLocation", os.path.join(base, "ckpt"))
+        .foreachBatch(
+            ingest_dedup_sink(store_path, os.path.join(base, "accepted"), "doc_id", "text")
+        )
     )
     accepted = spark.read.parquet(os.path.join(base, "accepted"))
     print(f"streaming shard: {accepted.count()} docs accepted into the corpus")

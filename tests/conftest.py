@@ -35,6 +35,14 @@ def customer(spark, sf_dir):
 
 
 @pytest.fixture
+def persistent_rdds(spark):
+    """`persistent_rdds()` -> ids of the RDDs the session holds
+    persistent: cached frames and local checkpoints."""
+    jsc = spark.sparkContext._jsc
+    return lambda: set(jsc.getPersistentRDDs().keys())
+
+
+@pytest.fixture
 def jobs_run(spark):
     """`jobs_run(build)` -> `(build(), ids of the Spark jobs it ran)`."""
     sc = spark.sparkContext

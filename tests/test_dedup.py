@@ -62,20 +62,19 @@ def test_minhash_lsh_recall_vs_exact(spark, sf_dir):
         assert len(lsh & exact) / len(exact) >= 0.9
 
 
-def test_repeat_dedup_minhash_reads_its_cached_frames(spark, sf_dir):
+def test_repeat_dedup_minhash_reads_its_cached_frames(spark, sf_dir, persistent_rdds):
     """minhash_lsh_pairs keeps its shingle sets and bands persisted as a
     session memo: a second `dedup_minhash` call adds no persistent RDD
     and its plan reads both frames from the cache, not the input file."""
     import __spark_entry__ as entrymod
 
-    persistent = spark.sparkContext._jsc.getPersistentRDDs
     entrymod.dedup_minhash(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    before = set(persistent().keys())
+    before = persistent_rdds()
     again = entrymod.dedup_minhash(spark, sf_dir)
     seq = again._jdf.queryExecution().optimizedPlan().collectLeaves()
     leaves = [seq.apply(i) for i in range(seq.size())]
     again.write.format("noop").mode("overwrite").save()
-    assert set(persistent().keys()) == before
+    assert persistent_rdds() == before
     assert {leaf.nodeName() for leaf in leaves} == {"InMemoryRelation"}
     columns = [set(leaf.schema().fieldNames()) for leaf in leaves]
     assert any("bucket" in c for c in columns)  # the bands

@@ -3,9 +3,8 @@ operators restricted to the delta, and the bucketed-store scan shape."""
 
 from pyspark.sql import functions as F
 
-from agnes_spark.operators.dedup import exact_dedup, minhash_lsh_pairs
+from agnes_spark.operators.dedup import exact_dedup, first_occurrences, minhash_lsh_pairs
 from agnes_spark.operators.dedup_incremental import (
-    exact_hash_store,
     incremental_exact_new,
     incremental_minhash_pairs,
     minhash_state,
@@ -30,9 +29,9 @@ def test_incremental_exact_matches_full_restriction(spark, sf_dir):
     means no corpus or earlier-delta row had that content)."""
     docs = _docs(spark, sf_dir)
     corpus, delta = _split(docs)
-    store = exact_hash_store(corpus, "doc_id", "text")
+    store = first_occurrences(corpus, "doc_id", "text")
     got = {
-        r.doc_id
+        r.keep_id
         for r in incremental_exact_new(delta, store, "doc_id", "text").collect()
     }
     full_keepers = {
@@ -49,7 +48,7 @@ def test_incremental_exact_bucketed_store_scan(spark, sf_dir, tmp_path):
     read it bucketed (store side never reshuffles)."""
     corpus, delta = _split(_docs(spark, sf_dir))
     write_exact_store(
-        exact_hash_store(corpus, "doc_id", "text"),
+        first_occurrences(corpus, "doc_id", "text"),
         "agnes_hash_store_test",
         path=str(tmp_path / "store"),
     )
@@ -122,7 +121,7 @@ def test_incremental_minhash_parity_with_full(spark, sf_dir):
     assert inc  # the synthetic docs contain planted near-dups
 
 
-def test_incremental_minhash_sets_only_path_matches(spark, sf_dir):
+def test_incremental_minhash_sets_only_path_matches(spark, sf_dir, persistent_rdds):
     """The delta's state is built once, persisted by its caller and
     passed to the probe: the probe persists nothing of its own, and its
     pairs are minhash_lsh_pairs over corpus ∪ delta restricted to the
@@ -133,14 +132,13 @@ def test_incremental_minhash_sets_only_path_matches(spark, sf_dir):
     d_bands, d_sets = minhash_state(delta, "doc_id", "text")
     d_sets.persist()
     d_bands.persist()
-    persistent = spark.sparkContext._jsc.getPersistentRDDs
     try:
         d_sets.count(), d_bands.count()  # materialize the caller's caches
-        before = set(persistent().keys())
+        before = persistent_rdds()
         inc = _pairs(
             incremental_minhash_pairs(d_bands, d_sets, bands, shingles, "doc_id", threshold=0.5)
         )
-        assert set(persistent().keys()) == before
+        assert persistent_rdds() == before
     finally:
         d_bands.unpersist()
         d_sets.unpersist()

@@ -415,13 +415,17 @@ def test_iterative_rounds_free_superseded_checkpoint_blocks(spark):
         "connected_components",
         "connected_components_star",
         "bpe_train",
+        "dbscan_grid",
+        "theil_sen",
     ],
 )
-def test_iterative_ops_leave_one_persistent_rdd_per_result(spark, name):
+def test_iterative_ops_leave_one_persistent_rdd_per_result(spark, persistent_rdds, name):
     """An iterative operator frees every round frame its result does
     not read: after two calls, with both results collected and still
     referenced, the session holds at most one more persistent RDD per
-    result. bpe_train returns a driver-local table, so it holds none."""
+    result. bpe_train returns a driver-local table, so it holds none.
+    dbscan_grid and theil_sen checkpoint intermediate frames and are
+    held to the same bound."""
     from agnes_spark.operators.bpe import bpe_train
     from agnes_spark.operators.graph import (
         kcore,
@@ -429,12 +433,20 @@ def test_iterative_ops_leave_one_persistent_rdd_per_result(spark, name):
         pagerank,
         personalized_pagerank,
     )
+    from agnes_spark.operators.spatial import dbscan_grid
+    from agnes_spark.operators.stats import theil_sen
 
     # a triangle with a 12-node tail, both directions: no dangling node
     und = [(1, 2), (2, 3), (1, 3)] + [(i, i + 1) for i in range(3, 15)]
     edges = spark.createDataFrame(und + [(b, a) for a, b in und], "src long, dst long")
     words = ["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3
     docs = spark.createDataFrame([(" ".join(words),)], "text string")
+    # a 5 x 4 grid of unit spacing (one cluster) and two far noise points
+    pts = spark.createDataFrame(
+        [(i, i % 5, i // 5) for i in range(20)] + [(20, 100, 100), (21, -100, 50)],
+        "id long, x long, y long",
+    )
+    line = spark.createDataFrame([(x, 3 * x + x % 3) for x in range(12)], "x long, y long")
     op = {
         "pagerank_fixed_rounds": lambda: pagerank(edges, max_iter=7, tol=0.0),
         "pagerank_observed": lambda: pagerank(edges, max_iter=7),
@@ -446,12 +458,12 @@ def test_iterative_ops_leave_one_persistent_rdd_per_result(spark, name):
             edges, "src", "dst"
         ),
         "bpe_train": lambda: bpe_train(docs, "text", merges=9),
+        "dbscan_grid": lambda: dbscan_grid(pts, "id", "x", "y", radius=2, min_pts=3),
+        "theil_sen": lambda: theil_sen(line, "x", "y"),
     }[name]
-    persistent = spark.sparkContext._jsc.getPersistentRDDs
-
-    before = persistent().size()
+    before = len(persistent_rdds())
     results = [op() for _ in range(2)]
     for r in results:
         r.collect()
     allowed = 0 if name == "bpe_train" else len(results)
-    assert persistent().size() - before <= allowed
+    assert len(persistent_rdds()) - before <= allowed

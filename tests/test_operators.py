@@ -854,7 +854,7 @@ def _different_frames_merge(spark, sf_dir):
 @pytest.mark.parametrize(
     "name", ["merge_views", "sort_comparator", "unique_indices", "different_frames"]
 )
-def test_merge_views_leaves_no_persistent_rdd(spark, sf_dir, name):
+def test_merge_views_leaves_no_persistent_rdd(spark, sf_dir, persistent_rdds, name):
     """Two calls of a row-aligned op (the merge_views key, the two
     row-index keys, a positional merge of views over different frames),
     each collected, leave the session with no more persistent RDDs
@@ -866,10 +866,7 @@ def test_merge_views_leaves_no_persistent_rdd(spark, sf_dir, name):
     else:
         build = entry.queries()[name]
 
-    def rdd_ids():
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-
-    before = rdd_ids()
+    before = persistent_rdds()
     for _ in range(2):
         assert build(spark, sf_dir).collect()
-    assert rdd_ids() - before == set()
+    assert persistent_rdds() - before == set()

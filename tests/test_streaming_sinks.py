@@ -1,12 +1,18 @@
-"""foreachBatch parquet sink: streamed windowed agg == batch agg."""
+"""foreachBatch sinks driven to completion by `drain`: the parquet
+upsert sink (streamed windowed agg == batch agg) and the exact and
+near-dup ingest sinks over their persisted state."""
 
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from agnes_spark.streaming.sinks import run_stream_to_parquet
-from agnes_spark.streaming.windows import read_events_stream, windowed_counts
+from agnes_spark.streaming.sinks import (
+    ingest_dedup_sink,
+    ingest_neardup_sink,
+    parquet_upsert_sink,
+)
+from agnes_spark.streaming.windows import drain, read_events_stream, windowed_counts
 
 
 @pytest.fixture(scope="module")
@@ -20,8 +26,10 @@ def test_parquet_sink_matches_batch(spark, sf_dir, events_dir, tmp_path):
     ev = read_events_stream(spark, events_dir)
     agg = windowed_counts(ev, window="1 hour", watermark="100 days")
     out = str(tmp_path / "rollup")
-    run_stream_to_parquet(
-        agg, out, str(tmp_path / "ckpt"), partition_cols=["event_type"], output_mode="update"
+    drain(
+        agg.writeStream.outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .foreachBatch(parquet_upsert_sink(out, ["event_type"]))
     )
     got = spark.read.parquet(out)
 
@@ -43,7 +51,6 @@ def test_ingest_dedup_first_arrival_wins_across_batches(spark, tmp_path):
     store implements first-ARRIVAL-wins, not global min-id. Also checks
     in-batch dedup (min id within the first batch)."""
     from agnes_spark.sources.memory import table
-    from agnes_spark.streaming.sinks import run_ingest_dedup
 
     src = tmp_path / "src"
     src.mkdir()
@@ -70,14 +77,7 @@ def test_ingest_dedup_first_arrival_wins_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "*.parquet"))
     )
-    run_ingest_dedup(
-        stream,
-        str(tmp_path / "store"),
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-        "doc_id",
-        "text",
-    )
+    _ingest(stream, tmp_path)
     kept = {r.doc_id for r in spark.read.parquet(str(tmp_path / "out")).collect()}
     assert kept == {10, 11, 13}
     store = {
@@ -85,6 +85,16 @@ def test_ingest_dedup_first_arrival_wins_across_batches(spark, tmp_path):
         for r in spark.read.parquet(str(tmp_path / "store")).collect()
     }
     assert {k for _, k in store} == {10, 11, 13}
+
+
+def _ingest(stream, tmp_path):
+    """Drain `stream` through `ingest_dedup_sink`, with its store, output
+    and checkpoint under `tmp_path`."""
+    drain(
+        stream.writeStream.option("checkpointLocation", str(tmp_path / "ckpt")).foreachBatch(
+            ingest_dedup_sink(str(tmp_path / "store"), str(tmp_path / "out"), "doc_id", "text")
+        )
+    )
 
 
 def _neardup_stream(spark, tmp_path):
@@ -121,16 +131,14 @@ def _neardup_stream(spark, tmp_path):
 
 def _run_neardup(spark, tmp_path):
     """Ingest `_neardup_stream` and return the set of emitted pairs."""
-    from agnes_spark.streaming.sinks import run_ingest_neardup
-
-    q = run_ingest_neardup(
-        _neardup_stream(spark, tmp_path),
-        str(tmp_path / "state"),
-        str(tmp_path / "pairs"),
-        str(tmp_path / "ckpt"),
-        "doc_id",
-        "text",
-        threshold=0.5,
+    q = drain(
+        _neardup_stream(spark, tmp_path)
+        .writeStream.option("checkpointLocation", str(tmp_path / "ckpt"))
+        .foreachBatch(
+            ingest_neardup_sink(
+                str(tmp_path / "state"), str(tmp_path / "pairs"), "doc_id", "text", threshold=0.5
+            )
+        )
     )
     assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 2
     return {
@@ -148,14 +156,13 @@ def test_ingest_neardup_finds_cross_batch_pairs(spark, tmp_path):
     assert all(2 not in p for p in pairs)
 
 
-def test_ingest_neardup_leaves_no_persistent_rdd(spark, tmp_path):
+def test_ingest_neardup_leaves_no_persistent_rdd(spark, tmp_path, persistent_rdds):
     """Each micro-batch frees the frames it persisted, and nothing under
     the sink persists a frame of its own: a stream of near-dup batches
     ends with the persistent RDDs it started with."""
-    persistent = spark.sparkContext._jsc.getPersistentRDDs
-    before = set(persistent().keys())
+    before = persistent_rdds()
     assert _run_neardup(spark, tmp_path)
-    assert set(persistent().keys()) == before
+    assert persistent_rdds() == before
 
 
 def test_ingest_dedup_checkpoint_resume_no_reprocess(spark, tmp_path):
@@ -163,7 +170,6 @@ def test_ingest_dedup_checkpoint_resume_no_reprocess(spark, tmp_path):
     only NEW files: already-accepted content is not duplicated in the
     output and the store grows only by the new batch's new hashes."""
     from agnes_spark.sources.memory import table
-    from agnes_spark.streaming.sinks import run_ingest_dedup
 
     src = tmp_path / "src"
     src.mkdir()
@@ -171,18 +177,10 @@ def test_ingest_dedup_checkpoint_resume_no_reprocess(spark, tmp_path):
     table(spark, {"doc_id": [1, 2], "text": ["aa", "bb"]}, types=t).coalesce(
         1
     ).write.parquet(str(src / "f1.parquet"))
-    args = (
-        str(tmp_path / "store"),
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-        "doc_id",
-        "text",
-    )
     schema = "doc_id bigint, text string"
 
     def run():
-        stream = spark.readStream.schema(schema).parquet(str(src / "*.parquet"))
-        run_ingest_dedup(stream, *args)
+        _ingest(spark.readStream.schema(schema).parquet(str(src / "*.parquet")), tmp_path)
 
     run()
     assert spark.read.parquet(str(tmp_path / "out")).count() == 2
@@ -197,3 +195,57 @@ def test_ingest_dedup_checkpoint_resume_no_reprocess(spark, tmp_path):
         r.keep_id for r in spark.read.parquet(str(tmp_path / "store")).collect()
     }
     assert store_ids == {1, 2, 4}
+
+
+def test_sink_appends_the_probe_rows_to_a_written_store(spark, tmp_path):
+    """A hash store written by `write_exact_store` is probed by
+    `incremental_exact_new`, whose store-shaped (content_hash, keep_id)
+    rows the sink appends to it unchanged."""
+    from agnes_spark.operators.dedup import first_occurrences
+    from agnes_spark.operators.dedup_incremental import (
+        incremental_exact_new,
+        write_exact_store,
+    )
+    from agnes_spark.sources.memory import table
+
+    t = {"doc_id": "bigint", "text": "string"}
+    corpus = table(spark, {"doc_id": [1, 2], "text": ["aa", "bb"]}, types=t)
+    store_path = str(tmp_path / "store")
+    write_exact_store(
+        first_occurrences(corpus, "doc_id", "text"), "agnes_sink_store_test", path=store_path
+    )
+    # 5 repeats stored content, 7 repeats 6 within the batch
+    src = tmp_path / "src"
+    table(
+        spark, {"doc_id": [5, 6, 7, 8], "text": ["aa", "cc", "cc", "dd"]}, types=t
+    ).coalesce(1).write.parquet(str(src / "f1.parquet"))
+    batch = spark.read.parquet(str(src / "f1.parquet"))
+    probe = incremental_exact_new(batch, spark.read.parquet(store_path), "doc_id", "text")
+    assert probe.columns == ["content_hash", "keep_id"]
+    new = {tuple(r) for r in probe.collect()}
+    assert {k for _, k in new} == {6, 8}
+    stored = {tuple(r) for r in spark.read.parquet(store_path).collect()}
+
+    _ingest(spark.readStream.schema(batch.schema).parquet(str(src / "*.parquet")), tmp_path)
+    after = spark.read.parquet(store_path)
+    assert after.columns == ["content_hash", "keep_id"]
+    assert sorted(tuple(r) for r in after.collect()) == sorted(stored | new)
+    assert {r.doc_id for r in spark.read.parquet(str(tmp_path / "out")).collect()} == {6, 8}
+
+
+def test_drain_stops_a_query_whose_batch_raises(spark, tmp_path):
+    """A batch that raises ends its query: `drain` re-raises and leaves
+    no stream running."""
+    from pyspark.errors import StreamingQueryException
+
+    def fail(batch_df, batch_id):
+        raise RuntimeError("sink failed")
+
+    spark.range(3).write.parquet(str(tmp_path / "src" / "f1.parquet"))
+    stream = spark.readStream.schema("id long").parquet(str(tmp_path / "src" / "*.parquet"))
+    with pytest.raises(StreamingQueryException, match="sink failed"):
+        drain(
+            stream.writeStream.option("checkpointLocation", str(tmp_path / "ckpt"))
+            .foreachBatch(fail)
+        )
+    assert spark.streams.active == []
