@@ -2246,6 +2246,32 @@ def dedup_incremental_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _recall_violations(
+    exact: DataFrame, got: DataFrame, keys: list[str], floor: float, subset: bool = False
+) -> DataFrame:
+    """The shared tail of the embedding recall checks: one (recall)
+    row when `got` recovers less than `floor` of the `exact` rows
+    (matched on `keys`), else empty. `subset=True` (exact-verified pair
+    twins) also reports every `got` pair missing from `exact`, as
+    (kind, detail) rows: ("false_positive", a_id) and
+    ("low_recall", recall)."""
+    hits = got.select(*keys, F.lit(1).alias("hit"))
+    low = (
+        exact.select(*keys)
+        .join(hits, keys, "left")
+        .agg((F.sum(F.coalesce("hit", F.lit(0))) / F.count(F.lit(1))).alias("recall"))
+        .filter(F.col("recall") < floor)
+    )
+    if not subset:
+        return low
+    false_pos = hits.join(exact, keys, "left_anti").select(
+        F.lit("false_positive").alias("kind"), F.col("a_id").cast("double").alias("detail")
+    )
+    return false_pos.unionByName(
+        low.select(F.lit("low_recall").alias("kind"), F.round("recall", 6).alias("detail"))
+    )
+
+
 def check_incremental_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INVARIANT: incremental embedding pairs (a) are a SUBSET of the
     exhaustive all-pairs cosine pairs at the same threshold restricted
@@ -2276,22 +2302,10 @@ def check_incremental_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("a_id") % 10 == 0) | (F.col("b_id") % 10 == 0))
         .select("a_id", "b_id")
     )
-    got = dedup_incremental_embedding(spark, sf_dir).select(
-        "a_id", "b_id", F.lit(1).alias("hit")
-    )
+    got = dedup_incremental_embedding(spark, sf_dir)
     if k > 1:
         got = got.filter((F.col("a_id") % k == 0) & (F.col("b_id") % k == 0))
-    false_pos = got.join(exact, ["a_id", "b_id"], "left_anti").select(
-        F.lit("false_positive").alias("kind"),
-        F.col("a_id").cast("double").alias("detail"),
-    )
-    low_recall = (
-        exact.join(got, ["a_id", "b_id"], "left")
-        .agg((F.sum(F.coalesce("hit", F.lit(0))) / F.count(F.lit(1))).alias("recall"))
-        .filter(F.col("recall") < 0.5)
-        .select(F.lit("low_recall").alias("kind"), F.round("recall", 6).alias("detail"))
-    )
-    return false_pos.unionByName(low_recall)
+    return _recall_violations(exact, got, ["a_id", "b_id"], 0.5, subset=True)
 
 
 def check_incremental_minhash_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2792,17 +2806,9 @@ def check_ivf_autotuned_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") < 10)
     index = IvfIndex.build(emb, "vec_id", n_cells=8)
     n_probe, _ = index.autotune_n_probe(q, "vec_id", k=5, target_recall=0.9)
-    exact = brute_force_topk(q, emb, "vec_id", "vec_id", k=5).select("q_id", "n_id")
-    approx = index.topk(q, "vec_id", k=5, n_probe=n_probe).select(
-        "q_id", "n_id", F.lit(1).alias("hit")
-    )
-    return (
-        exact.join(approx, ["q_id", "n_id"], "left")
-        .agg(
-            (F.sum(F.coalesce("hit", F.lit(0))) / F.count(F.lit(1))).alias("recall")
-        )
-        .filter(F.col("recall") < 0.9)
-    )
+    exact = brute_force_topk(q, emb, "vec_id", "vec_id", k=5)
+    approx = index.topk(q, "vec_id", k=5, n_probe=n_probe)
+    return _recall_violations(exact, approx, ["q_id", "n_id"], 0.9)
 
 
 def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2847,17 +2853,9 @@ def check_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exact = brute_force_topk(
         emb.filter(F.col("vec_id") < 10), emb, "vec_id", "vec_id", k=5
-    ).select("q_id", "n_id")
-    approx = brute_force_topk(
-        dq.filter(F.col("vec_id") < 10), dq, "vec_id", "vec_id", k=5
-    ).select("q_id", "n_id", F.lit(1).alias("hit"))
-    return (
-        exact.join(approx, ["q_id", "n_id"], "left")
-        .agg(
-            (F.sum(F.coalesce("hit", F.lit(0))) / F.count(F.lit(1))).alias("recall")
-        )
-        .filter(F.col("recall") < 0.9)
     )
+    approx = brute_force_topk(dq.filter(F.col("vec_id") < 10), dq, "vec_id", "vec_id", k=5)
+    return _recall_violations(exact, approx, ["q_id", "n_id"], 0.9)
 
 
 def check_lsh_scores_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2865,18 +2863,14 @@ def check_lsh_scores_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly recomputed cosine for that (query, neighbor) pair — the
     bucketing may bound RECALL, but scores of returned pairs must be
     exact. Violations (|diff| > 1e-6 past rounding) -> empty."""
-    from agnes_spark.functions import dot, l2_norm, vec_double
+    from agnes_spark.operators.simsearch import pair_cosine, vectors
 
     res = ann_lsh_topk(spark, sf_dir)
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", vec_double(F.col("embedding")).alias("v")
-    ).withColumn("nrm", l2_norm(F.col("v")))
-    qv = emb.select(F.col("vec_id").alias("q_id"), F.col("v").alias("q_v"), F.col("nrm").alias("q_n"))
-    nv = emb.select(F.col("vec_id").alias("n_id"), F.col("v").alias("n_v"), F.col("nrm").alias("n_n"))
+    emb = _t(spark, sf_dir, "embeddings")
     re = (
-        res.join(qv, "q_id")
-        .join(nv, "n_id")
-        .withColumn("cos2", dot(F.col("q_v"), F.col("n_v")) / (F.col("q_n") * F.col("n_n")))
+        res.join(vectors(emb, "vec_id", side="q"), "q_id")
+        .join(vectors(emb, "vec_id"), "n_id")
+        .withColumn("cos2", pair_cosine())
     )
     return re.filter(F.abs(F.col("cos") - F.col("cos2")) > 1.1e-6).select(
         "q_id", "n_id", "cos", F.round("cos2", 6).alias("cos2")
@@ -3113,19 +3107,8 @@ def check_embedding_auto_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = embedding_dedup_pairs(
         emb.withColumn("_all", F.lit(1)), "vec_id", "embedding", "_all", threshold=0.35
     ).select("a_id", "b_id")
-    got = dedup_embedding_auto(spark, sf_dir).select(
-        "a_id", "b_id", F.lit(1).alias("hit")
-    )
-    false_pos = got.join(exact, ["a_id", "b_id"], "left_anti").select(
-        F.lit("false_positive").alias("kind"), F.col("a_id").cast("double").alias("detail")
-    )
-    low_recall = (
-        exact.join(got, ["a_id", "b_id"], "left")
-        .agg((F.sum(F.coalesce("hit", F.lit(0))) / F.count(F.lit(1))).alias("recall"))
-        .filter(F.col("recall") < 0.5)
-        .select(F.lit("low_recall").alias("kind"), F.round("recall", 6).alias("detail"))
-    )
-    return false_pos.unionByName(low_recall)
+    got = dedup_embedding_auto(spark, sf_dir)
+    return _recall_violations(exact, got, ["a_id", "b_id"], 0.5, subset=True)
 
 
 def check_heavy_hitters_agree(spark: SparkSession, sf_dir: str) -> DataFrame:

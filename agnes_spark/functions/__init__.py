@@ -38,11 +38,6 @@ def l2_norm(a) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a, b) -> Column:
-    """Cosine similarity of two array<double> columns."""
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
 # -- text ------------------------------------------------------------------
 
 def ws_tokens(col) -> Column:

@@ -17,16 +17,14 @@ from pyspark.sql import functions as F
 
 from agnes_spark.functions import (
     band_hashes,
-    dot,
     hamming_bits,
     hashed_shingles_udf,
-    l2_norm,
     minhash_signature_udf,
     pack_bits,
     positional_kgram_hashes_udf,
     simhash_bits_udf,
-    vec_double,
 )
+from agnes_spark.operators.simsearch import IvfIndex, cell_pairs, nearest_cells, vectors
 
 
 def content_hash(text_col: str) -> Column:
@@ -498,28 +496,22 @@ def embedding_dedup_auto(
 ) -> DataFrame:
     """Embedding near-dup pairs with LEARNED blocking: KMeans cells
     (IvfIndex) replace a hand-supplied block column. Each vector is
-    assigned to its THREE nearest cells (k_nearest_cells k=3 — the
-    sf0.1 sweep measured k=2 recall at 0.42 of exhaustive pairs,
+    assigned to its THREE nearest cells (simsearch.nearest_cells k=3 —
+    the sf0.1 sweep measured k=2 recall at 0.42 of exhaustive pairs,
     below the 0.5 gate, vs 0.63 at k=3 for the same runtime), so
     near-dups straddling cell boundaries still share a block; the
-    pair join stays equi (on cell) and pairs are deduped afterwards.
-    Standard blocking recall tradeoff otherwise applies — raise
-    n_cells for speed, raise k for recall.
+    pair join stays equi (on cell) and pairs are deduped afterwards
+    (simsearch.cell_pairs). Standard blocking recall tradeoff
+    otherwise applies — raise n_cells for speed, raise k for recall.
 
-    `n_cells=None` (default) uses the classic sqrt(N) IVF heuristic
-    (clamped to [8, 4096]): the within-cell pair join costs
-    ~N^2/n_cells dot products, so a FIXED cell count turns quadratic
-    as the corpus grows — sqrt(N) keeps per-cell occupancy (and the
-    pair blowup) flat at ~sqrt(N) per cell whatever the scale.
+    `n_cells=None` (default) lets IvfIndex.build apply the sqrt(N)
+    cell rule to its own row count, which keeps the within-cell pair
+    blowup flat whatever the scale.
 
     Each call trains its own IvfIndex (KMeans over `df`)."""
-    from agnes_spark.operators.simsearch import IvfIndex
-
-    if n_cells is None:
-        n_cells = max(8, min(int(df.count() ** 0.5), 4096))
     # blocking needs rough locality, not converged centroids: every
     # emitted pair is exact-verified afterwards (no false positives
-    # possible) and boundary straddlers are covered by the 2-nearest
+    # possible) and boundary straddlers are covered by the 3-nearest
     # multi-assignment, so 4 KMeans iterations block nearly as well as
     # 10 — the blocking recall (pinned >= 0.5 by
     # check_embedding_auto_recall) shifts a few percent while the
@@ -527,83 +519,9 @@ def embedding_dedup_auto(
     index = IvfIndex.build(
         df, id_col, vec_col, n_cells=n_cells, seed=seed, max_iter=4
     )
-    return _auto_pairs(index, threshold)
-
-
-def k_nearest_cells(vectors: DataFrame, centers: DataFrame, k: int = 2) -> DataFrame:
-    """(cell, n_id, n_v, n_norm): every input vector replicated to its
-    k nearest centroids — the boundary-covering multi-assignment the
-    cell-blocked pair joins rely on. k is the RECALL knob for a fixed
-    threshold: candidate-join cost grows ~k^2/n_cells, blocking recall
-    with it (measured at sf0.1/threshold 0.35: k=2 -> 0.42,
-    k=3 -> 0.63, k=4 -> 0.77 of exhaustive pairs).
-
-    One projection, zero shuffle: the centers are tiny, so fold them
-    into a single-row array and broadcast-join it onto every vector.
-    (A crossJoin(centers) + row_number window would multiply every row
-    x n_cells WITH its vector payload and shuffle all of it through
-    the window exchange — a 16x payload blowup at corpus scale.)
-    Input must carry (n_id, n_v, n_norm)."""
-    centers_arr = centers.agg(F.collect_list(F.struct("cell", "ctr")).alias("cs"))
-    dists = F.transform(
-        F.col("cs"),
-        lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(F.col("n_v"), c["ctr"], lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("d2"),
-            c["cell"].alias("cell"),
-        ),
+    return cell_pairs(
+        nearest_cells(index.assigned.drop("cell"), index.centers, 3), threshold
     )
-    # struct array_sort orders by (d2 asc, cell asc) — deterministic
-    # tie-break
-    return (
-        vectors.select("n_id", "n_v", "n_norm")
-        .join(F.broadcast(centers_arr))
-        .select(
-            "n_id",
-            "n_v",
-            "n_norm",
-            F.explode(F.slice(F.array_sort(dists), 1, k)).alias("nearest"),
-        )
-        .select(F.col("nearest.cell").alias("cell"), "n_id", "n_v", "n_norm")
-    )
-
-
-def two_nearest_cells(vectors: DataFrame, centers: DataFrame) -> DataFrame:
-    """Back-compat alias: k_nearest_cells with k=2 (the incremental
-    probe paths keep 2 — they probe a persisted store built at the
-    corpus's own breadth; see dedup_incremental.py)."""
-    return k_nearest_cells(vectors, centers, k=2)
-
-
-def _auto_pairs(index, threshold: float) -> DataFrame:
-    """Candidate generation + exact verify over a built IvfIndex (the
-    non-iterative tail of embedding_dedup_auto)."""
-    assigned2 = k_nearest_cells(index.assigned.drop("cell"), index.centers, k=3)
-    a = assigned2.select(
-        "cell", F.col("n_id").alias("a_id"), F.col("n_v").alias("a_v"), F.col("n_norm").alias("a_n")
-    )
-    b = assigned2.select(
-        "cell", F.col("n_id").alias("b_id"), F.col("n_v").alias("b_v"), F.col("n_norm").alias("b_n")
-    )
-    # score and threshold BEFORE deduplicating boundary pairs: the
-    # candidate set (all pairs within a cell) is ~1000x larger than the
-    # surviving near-dups, and each candidate row carries two vectors —
-    # deduplicating first shuffles all that vector payload, while
-    # filtering first shuffles only (a_id, b_id, cos) for the survivors.
-    # Pairs assigned to two shared cells compute cos twice (same value,
-    # same rounded output), which is far cheaper than the wide shuffle.
-    pairs = (
-        a.join(b, on="cell")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .withColumn("cos", dot(F.col("a_v"), F.col("b_v")) / (F.col("a_n") * F.col("b_n")))
-        .filter(F.col("cos") >= threshold)
-        .select("a_id", "b_id", F.round("cos", 6).alias("cos"))
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    return pairs
 
 
 def embedding_dedup_pairs(
@@ -613,30 +531,16 @@ def embedding_dedup_pairs(
     block_col: str,
     threshold: float = 0.95,
 ) -> DataFrame:
-    """Embedding-cosine near-dup pairs within blocking groups.
+    """Embedding-cosine near-dup pairs within blocking groups:
+    (blk, a_id, b_id, cos).
 
     `block_col` is the coarse blocking key (a cluster/IVF cell id, a
     shard, a simhash chunk of the vector...). All-pairs cosine runs
     only inside a block, via equi-join on the block key — the shuffle
     is hash(block), and AQE splits skewed blocks.
     """
-    # per-row norm BEFORE the self-join: each pair costs one dot
-    # product instead of dot + two norms (identical expression, so the
-    # cosine value is bit-stable vs the naive form)
-    v = df.select(
-        F.col(block_col).alias("blk"),
-        F.col(id_col),
-        vec_double(F.col(vec_col)).alias("v"),
-    ).withColumn("nrm", l2_norm(F.col("v")))
-    a = v.select("blk", F.col(id_col).alias("a_id"), F.col("v").alias("a_v"), F.col("nrm").alias("a_n"))
-    b = v.select("blk", F.col(id_col).alias("b_id"), F.col("v").alias("b_v"), F.col("nrm").alias("b_n"))
-    return (
-        a.join(b, on="blk")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .withColumn("cos", dot(F.col("a_v"), F.col("b_v")) / (F.col("a_n") * F.col("b_n")))
-        .filter(F.col("cos") >= threshold)
-        .select("blk", "a_id", "b_id", F.round("cos", 6).alias("cos"))
-    )
+    v = vectors(df, id_col, vec_col, keep=[F.col(block_col).alias("blk")])
+    return cell_pairs(v, threshold, key="blk", replicated=False)
 
 
 def duplicate_spans(

@@ -19,6 +19,11 @@ bucket-local lookups into the store:
   the band index for candidate corpus ids, then verifies exact Jaccard
   against only those ids' shingle rows. Both joins are equi; nothing
   touches corpus text.
+- near-dup (embedding): the centers of a corpus-trained `IvfIndex` and
+  the cell store (`embedding_cell_store`, every corpus vector in its
+  two nearest cells). A shard is assigned to its own two nearest cells
+  and verified against the store by `simsearch.cell_pairs`, the
+  cell-blocked pair join the one-shot embedding dedup paths run.
 
 Correctness contract (gated): incremental output == the one-shot
 operator run over (corpus ∪ delta), restricted to rows/pairs that
@@ -45,8 +50,8 @@ from agnes_spark.operators.dedup import (
     lsh_pairs,
     minhash_bands,
     shingle_sets,
-    two_nearest_cells,
 )
+from agnes_spark.operators.simsearch import cell_pairs, nearest_cells, vectors
 
 
 def write_exact_store(
@@ -132,8 +137,9 @@ def embedding_cell_store(index) -> DataFrame:
     """The persisted near-dup state for embeddings: every corpus vector
     replicated to its TWO nearest cells of a built `IvfIndex` — write
     this (partitioned by cell) next to the index; shards equi-probe it
-    by cell, never rescanning corpus vectors."""
-    return two_nearest_cells(index.assigned.drop("cell"), index.centers)
+    by cell, never rescanning corpus vectors. Columns: (cell, n_id,
+    n_v, n_norm)."""
+    return nearest_cells(index.assigned.drop("cell"), index.centers, 2).drop("pr")
 
 
 def incremental_embedding_pairs(
@@ -156,48 +162,6 @@ def incremental_embedding_pairs(
     by check_incremental_embedding) are no-false-positives (exact
     verify) and bounded blocking recall vs the exhaustive pairs.
     Output (a_id, b_id, cos) with a_id < b_id."""
-    from agnes_spark.functions import dot, l2_norm, vec_double
-
-    d = delta.select(
-        F.col(id_col).alias("n_id"), vec_double(F.col(vec_col)).alias("n_v")
-    ).withColumn("n_norm", l2_norm(F.col("n_v")))
-    d2 = two_nearest_cells(d, centers).persist()
-    d_side = d2.select(
-        "cell",
-        F.col("n_id").alias("d_id"),
-        F.col("n_v").alias("d_v"),
-        F.col("n_norm").alias("d_n"),
-    )
-    c_side = cell_store.select(
-        "cell",
-        F.col("n_id").alias("c_id"),
-        F.col("n_v").alias("c_v"),
-        F.col("n_norm").alias("c_n"),
-    )
-    cross = (
-        d_side.join(c_side, "cell")
-        .withColumn("cos", dot(F.col("d_v"), F.col("c_v")) / (F.col("d_n") * F.col("c_n")))
-        .filter(F.col("cos") >= threshold)
-        .select(
-            F.least("d_id", "c_id").alias("a_id"),
-            F.greatest("d_id", "c_id").alias("b_id"),
-            F.round("cos", 6).alias("cos"),
-        )
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    intra_b = d_side.select(
-        "cell",
-        F.col("d_id").alias("b_id"),
-        F.col("d_v").alias("b_v"),
-        F.col("d_n").alias("b_n"),
-    )
-    intra = (
-        d_side.join(intra_b, "cell")
-        .filter(F.col("d_id") < F.col("b_id"))
-        .withColumn("cos", dot(F.col("d_v"), F.col("b_v")) / (F.col("d_n") * F.col("b_n")))
-        .filter(F.col("cos") >= threshold)
-        .select(F.col("d_id").alias("a_id"), "b_id", F.round("cos", 6).alias("cos"))
-        .dropDuplicates(["a_id", "b_id"])
-    )
+    d = nearest_cells(vectors(delta, id_col, vec_col), centers, 2)
     # corpus and delta id spaces are disjoint -> no overlap to dedup
-    return cross.unionByName(intra)
+    return cell_pairs(d, threshold, cell_store).unionByName(cell_pairs(d, threshold))

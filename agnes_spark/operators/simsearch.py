@@ -1,19 +1,174 @@
-"""Similarity search over embedding columns.
+"""Similarity search over embedding columns, and the one embedding-
+similarity engine that every embedding top-k and dedup path runs on.
 
-Baseline: brute-force cosine top-k (exact — the correctness oracle).
-Scale path: random-hyperplane LSH bucketing so each query only scores
-its bucket's candidates; multi-probe keeps recall up.
+Three top-k paths:
+- `brute_force_topk`: exact cosine top-k, the correctness oracle;
+- `lsh_topk`: random-hyperplane LSH, each query scores only its
+  bucket's rows (multi-probe adds every one-bit-flip bucket);
+- `IvfIndex.topk`: KMeans cells, each query scores only the rows of
+  its n_probe nearest cells.
 
-Both paths keep the score computation JVM-side (zip_with/aggregate
-dot products); queries are broadcast (they are small by definition).
+The engine, each job written once:
+- `vectors`: (id, array<double> vector, L2 norm) rows, the norm taken
+  once per row before any pair join, so a pair costs one dot product;
+- `pair_cosine`: the cosine of a pair row of two such sides;
+- `nearest_cells`: every vector's nearest centers with their probe
+  rank, as one broadcast projection;
+- `_topk`: score candidate pairs and keep each query's k best;
+- `cell_pairs`: the block-key pair join and exact-cosine verify of
+  dedup.embedding_dedup_pairs, dedup.embedding_dedup_auto and
+  dedup_incremental.incremental_embedding_pairs.
+
+Scores are computed JVM-side (zip_with/aggregate dot products);
+queries and centers are broadcast (they are small by definition).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from agnes_spark.functions import dot, l2_norm, vec_double
+from agnes_spark.session import supersede
+
+
+def vectors(
+    df: DataFrame, id_col: str, vec_col: str = "embedding", side: str = "n", keep=()
+) -> DataFrame:
+    """(*keep, <side>_id, <side>_v, <side>_norm): each row's vector
+    widened to array<double> with its L2 norm. The norm is computed
+    once per row, before any pair join: inside the join each pair
+    costs one dot product (`pair_cosine`), not a dot product and two
+    norms."""
+    v = f"{side}_v"
+    return df.select(
+        *keep, F.col(id_col).alias(f"{side}_id"), vec_double(F.col(vec_col)).alias(v)
+    ).withColumn(f"{side}_norm", l2_norm(F.col(v)))
+
+
+def pair_cosine(a: str = "q", b: str = "n") -> Column:
+    """Cosine of a pair row's `a`-side and `b`-side `vectors`."""
+    return dot(F.col(f"{a}_v"), F.col(f"{b}_v")) / (
+        F.col(f"{a}_norm") * F.col(f"{b}_norm")
+    )
+
+
+def nearest_cells(
+    vecs: DataFrame, centers: DataFrame, k: int | None = None, side: str = "n"
+) -> DataFrame:
+    """(cell, *vecs.columns, pr): every row of `vecs` replicated to its
+    k nearest centers (every center when k is None), `pr` the 1-based
+    probe rank in (squared distance asc, cell asc) order, so the lower
+    cell id wins a distance tie. `centers` is (cell, ctr).
+
+    For the cell-blocked pair joins k is the recall knob at a fixed
+    threshold: candidate-join cost grows ~k^2/n_cells, blocking recall
+    with it (measured at sf0.1/threshold 0.35: k=2 -> 0.42,
+    k=3 -> 0.63, k=4 -> 0.77 of exhaustive pairs).
+
+    One projection, zero shuffle: the centers are tiny, so they fold
+    into a single-row array broadcast onto every vector. (A cross join
+    with the centers ranked by a window would multiply every row
+    x n_cells WITH its vector payload and shuffle all of it through
+    the window exchange.)"""
+    cs = centers.agg(F.collect_list(F.struct("cell", "ctr")).alias("__cs"))
+    v = F.col(f"{side}_v")
+    by_dist = F.array_sort(
+        F.transform(
+            F.col("__cs"),
+            lambda c: F.struct(
+                F.aggregate(
+                    F.zip_with(v, c["ctr"], lambda x, y: (x - y) * (x - y)),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x,
+                ).alias("d2"),
+                c["cell"].alias("cell"),
+            ),
+        )
+    )
+    if k is not None:
+        by_dist = F.slice(by_dist, 1, k)
+    ranked = F.transform(
+        by_dist, lambda c, i: F.struct(c["cell"].alias("cell"), (i + 1).alias("pr"))
+    )
+    cols = vecs.columns
+    return (
+        vecs.join(F.broadcast(cs))
+        .select(*cols, F.explode(ranked).alias("near"))
+        .select(F.col("near.cell").alias("cell"), *cols, F.col("near.pr").alias("pr"))
+    )
+
+
+def _topk(corpus: DataFrame, queries: DataFrame, k: int, on=None) -> DataFrame:
+    """(q_id, rank, n_id, cos): score every (corpus, query) pair of
+    `vectors` rows that share `on` (every pair when None), a row never
+    scoring itself, and keep each query's k best by (cos desc, n_id
+    asc) — ranked on the raw double, cos rounded to 6 places. The
+    query side is broadcast; with `on=None` that is a
+    BroadcastNestedLoopJoin of |Q| x |corpus| dot products."""
+    not_self = F.col("q_id") != F.col("n_id")
+    if on is None:
+        pairs = corpus.join(F.broadcast(queries), not_self)
+    else:
+        pairs = corpus.join(F.broadcast(queries), on).filter(not_self)
+    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
+    return (
+        pairs.withColumn("cos", pair_cosine())
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "rank", "n_id", F.round("cos", 6).alias("cos"))
+    )
+
+
+def cell_pairs(
+    left: DataFrame,
+    threshold: float,
+    right: DataFrame | None = None,
+    key: str = "cell",
+    replicated: bool = True,
+) -> DataFrame:
+    """Exact-cosine verified pairs of (key, n_id, n_v, n_norm) rows
+    that share `key`: `left` against itself with a_id < b_id, or
+    against `right` (whose ids are disjoint from left's) with each
+    pair oriented as (least, greatest). Returns (a_id, b_id, cos),
+    the threshold applied to the unrounded cosine and cos rounded to
+    6 places.
+
+    `replicated`: rows were assigned to several blocks
+    (`nearest_cells` with k > 1), so a pair can meet in more than one
+    block; the key is dropped and duplicate pairs removed. Otherwise
+    each pair meets once and its key leads the output columns.
+
+    Score and threshold BEFORE deduplicating: the candidate set is
+    ~1000x larger than the surviving near-dups and each candidate row
+    carries two vectors, so deduplicating first would shuffle all that
+    payload, while filtering first shuffles only (a_id, b_id, cos) of
+    the survivors. A pair found in two blocks is scored twice (same
+    value), far cheaper than the wide shuffle."""
+
+    def side(df, p):
+        return df.select(
+            key, *[F.col(f"n_{c}").alias(f"{p}_{c}") for c in ("id", "v", "norm")]
+        )
+
+    a, b = side(left, "a"), side(left if right is None else right, "b")
+    if right is None:
+        pairs = a.join(b, key).filter(F.col("a_id") < F.col("b_id"))
+        ids = ["a_id", "b_id"]
+    else:
+        pairs = a.join(b, key)
+        ids = [
+            F.least("a_id", "b_id").alias("a_id"),
+            F.greatest("a_id", "b_id").alias("b_id"),
+        ]
+    scored = pairs.withColumn("cos", pair_cosine("a", "b")).filter(
+        F.col("cos") >= threshold
+    )
+    if not replicated:
+        return scored.select(key, *ids, F.round("cos", 6).alias("cos"))
+    return scored.select(*ids, F.round("cos", 6).alias("cos")).dropDuplicates(
+        ["a_id", "b_id"]
+    )
 
 
 def brute_force_topk(
@@ -46,36 +201,21 @@ def brute_force_topk(
                 "use IvfIndex.topk or lsh_topk for large query sets, or pass "
                 "max_queries=None to override"
             )
-    # norms are per-ROW, computed once before the pair join — inside
-    # the join each pair costs one dot product, not dot + two norms
-    # (the norm expression is identical, so cos is bit-stable)
-    q = queries.select(
-        F.col(query_id).alias("q_id"), vec_double(F.col(vec_col)).alias("q_v")
-    ).withColumn("q_norm", l2_norm(F.col("q_v")))
-    c = corpus.select(
-        F.col(corpus_id).alias("n_id"), vec_double(F.col(vec_col)).alias("n_v")
-    ).withColumn("n_norm", l2_norm(F.col("n_v")))
-    scored = (
-        c.join(F.broadcast(q), on=F.col("q_id") != F.col("n_id"))
-        .withColumn(
-            "cos", dot(F.col("q_v"), F.col("n_v")) / (F.col("q_norm") * F.col("n_norm"))
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "n_id", F.round("cos", 6).alias("cos"))
+    return _topk(
+        vectors(corpus, corpus_id, vec_col), vectors(queries, query_id, vec_col, "q"), k
     )
 
 
 class IvfIndex:
     """A built IVF-flat index: corpus rows assigned to KMeans cells
-    (hash-partitioned by cell, persisted) + the centroid table.
+    (hash-partitioned by cell, locally checkpointed) + the centroid
+    table.
 
     Build once, serve many query batches — at 100 TB the (cell -> rows)
     layout is written to a bucketed table and every query batch is an
-    equi-join on cell id. `topk` is that join + exact rerank.
+    equi-join on cell id. `topk` is that join + exact rerank. The
+    caller holds the index and frees its assignment with `unpersist()`
+    once no plan will read it again.
     """
 
     def __init__(self, assigned: DataFrame, centers: DataFrame, n_cells: int):
@@ -89,7 +229,7 @@ class IvfIndex:
         corpus: DataFrame,
         corpus_id: str,
         vec_col: str = "embedding",
-        n_cells: int = 16,
+        n_cells: int | None = 16,
         max_iter: int = 10,
         seed: int = 42,
         max_train_rows: int = 100_000,
@@ -108,18 +248,24 @@ class IvfIndex:
         IVF/dedup output are reproducible across repartitions. The
         single full-corpus pass that remains is the cell assignment.
         Cells stay balanced because the hash is uniform over ids.
+
+        `n_cells=None` applies the classic sqrt(N) IVF rule to the
+        corpus row count this build takes anyway (clamped to
+        [8, 4096]): a within-cell pair join costs ~N^2/n_cells dot
+        products, so a FIXED cell count turns quadratic as the corpus
+        grows, while sqrt(N) keeps per-cell occupancy at ~sqrt(N).
         """
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
-        c = corpus.select(
-            F.col(corpus_id).alias("n_id"), vec_double(F.col(vec_col)).alias("n_v")
-        ).withColumn("n_norm", l2_norm(F.col("n_v")))
+        c = vectors(corpus, corpus_id, vec_col)
         # cache the feature frame: training (on the sample) + the final
         # assignment pass both re-read it — without the cache each pass
         # re-runs the parquet scan and the array->vector conversion
         feat = c.withColumn("features", array_to_vector("n_v")).persist()
         n = feat.count()  # also materializes the cache before training
+        if n_cells is None:
+            n_cells = max(8, min(int(n**0.5), 4096))
         if n > max_train_rows:
             _M = 1_000_000
             thresh = int(_M * max_train_rows / n)
@@ -145,21 +291,25 @@ class IvfIndex:
         # the floor. Deterministic: init draws on the canonicalized
         # layout above with a fixed seed.
         model = KMeans(k=n_cells, seed=seed, maxIter=max_iter, initMode="random").fit(train)
+        # one eager local checkpoint materializes the assignment (before
+        # the feature cache is dropped) and truncates its lineage: every
+        # probe of a held index reads the checkpointed rows and never
+        # replays scan + vector-conversion + model.transform, also after
+        # a catalog.clearCache() (it unpersists SQL-cached frames, while
+        # localCheckpoint blocks live at the RDD layer, which is why
+        # `unpersist` frees them through session.supersede).
+        # It lives as long as the SparkContext — cluster deployments
+        # persist via save()/load() instead. The partition count is explicit:
+        # AQE would coalesce a by-column repartition that the checkpoint
+        # executes (to 1 partition at sf0.1), and every probe and
+        # cell-pair join would then read the corpus in one task.
+        n_parts = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         assigned = (
             model.transform(feat)
             .select("n_id", "n_v", "n_norm", F.col("prediction").alias("cell"))
-            .repartition("cell")
-            .persist()
+            .repartition(n_parts, "cell")
+            .localCheckpoint()
         )
-        assigned.count()  # materialize before dropping the feature cache
-        # truncate lineage: every probe of a held index reads the
-        # checkpointed assignment and never replays scan +
-        # vector-conversion + model.transform, also after a
-        # catalog.clearCache() (it unpersists SQL-cached frames, while
-        # localCheckpoint blocks live at the RDD layer). Local-mode/
-        # driver-lifetime only — cluster deployments persist via
-        # save()/load() instead.
-        assigned = assigned.localCheckpoint()
         feat.unpersist()
         ctrs = model.clusterCenters()
         # a degenerate build (KMeans collapsing to <2 cells) would make
@@ -186,36 +336,10 @@ class IvfIndex:
         n_probe: int = 3,
     ) -> DataFrame:
         """Probe each query's n_probe nearest cells, exact rerank."""
-        q = queries.select(
-            F.col(query_id).alias("q_id"), vec_double(F.col(vec_col)).alias("q_v")
-        ).withColumn("q_norm", l2_norm(F.col("q_v")))
-        d2 = F.aggregate(
-            F.zip_with(F.col("q_v"), F.col("ctr"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+        probes = nearest_cells(
+            vectors(queries, query_id, vec_col, "q"), self.centers, n_probe, "q"
         )
-        wp = Window.partitionBy("q_id").orderBy(F.col("d2").asc(), F.col("cell").asc())
-        probes = (
-            q.crossJoin(F.broadcast(self.centers))
-            .withColumn("d2", d2)
-            .withColumn("pr", F.row_number().over(wp))
-            .filter(F.col("pr") <= n_probe)
-            .select("q_id", "q_v", "q_norm", "cell")
-        )
-        scored = (
-            self.assigned.join(F.broadcast(probes), on="cell")
-            .filter(F.col("q_id") != F.col("n_id"))
-            .withColumn(
-                "cos",
-                dot(F.col("q_v"), F.col("n_v")) / (F.col("q_norm") * F.col("n_norm")),
-            )
-        )
-        w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("q_id", "rank", "n_id", F.round("cos", 6).alias("cos"))
-        )
+        return _topk(self.assigned, probes.drop("pr"), k, on="cell")
 
     def save(self, path: str) -> None:
         """Persist the built index to parquet so it survives sessions:
@@ -261,40 +385,11 @@ class IvfIndex:
         query SAMPLE — cost is one brute-force pass over the corpus for
         the sampled queries (the same cost as validating recall at all).
         """
-        q = queries.select(
-            F.col(query_id).alias("q_id"), vec_double(F.col(vec_col)).alias("q_v")
-        ).withColumn("q_norm", l2_norm(F.col("q_v")))
+        q = vectors(queries, query_id, vec_col, "q")
         # exact ground truth straight off the assigned corpus rows
-        truth = (
-            self.assigned.join(F.broadcast(q), on=F.col("q_id") != F.col("n_id"))
-            .withColumn(
-                "cos",
-                dot(F.col("q_v"), F.col("n_v")) / (F.col("q_norm") * F.col("n_norm")),
-            )
-            .withColumn(
-                "rank",
-                F.row_number().over(
-                    Window.partitionBy("q_id").orderBy(
-                        F.col("cos").desc(), F.col("n_id").asc()
-                    )
-                ),
-            )
-            .filter(F.col("rank") <= k)
-            .select("q_id", "n_id")
-        )
+        truth = _topk(self.assigned, q, k).select("q_id", "n_id")
         # probe rank of every cell for every query (cells are few)
-        d2 = F.aggregate(
-            F.zip_with(F.col("q_v"), F.col("ctr"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        wp = Window.partitionBy("q_id").orderBy(F.col("d2").asc(), F.col("cell").asc())
-        probe_rank = (
-            q.crossJoin(F.broadcast(self.centers))
-            .withColumn("d2", d2)
-            .withColumn("pr", F.row_number().over(wp))
-            .select("q_id", "cell", "pr")
-        )
+        probe_rank = nearest_cells(q, self.centers, side="q").select("q_id", "cell", "pr")
         neighbor_cell = self.assigned.select("n_id", "cell")
         ranks = (
             truth.join(neighbor_cell, "n_id")
@@ -324,7 +419,10 @@ class IvfIndex:
         return best, curve
 
     def unpersist(self) -> None:
-        self.assigned.unpersist()
+        """Free the assignment: the local checkpoint of a built index,
+        the cached frame of a loaded one. No plan may read the index
+        afterwards."""
+        supersede(self.assigned, None)
 
 
 def ivf_topk(
@@ -398,9 +496,7 @@ def lsh_topk(
     cost on the tiny query side only, large recall gain when neighbors
     straddle a hyperplane.
     """
-    q = queries.select(
-        F.col(query_id).alias("q_id"), vec_double(F.col(vec_col)).alias("q_v")
-    ).withColumn("q_norm", l2_norm(F.col("q_v"))).withColumn(
+    q = vectors(queries, query_id, vec_col, "q").withColumn(
         "bucket", lsh_bucket(F.col("q_v"), dim, num_planes)
     )
     if multiprobe:
@@ -413,21 +509,7 @@ def lsh_topk(
                 )
             ),
         )
-    c = corpus.select(
-        F.col(corpus_id).alias("n_id"), vec_double(F.col(vec_col)).alias("n_v")
-    ).withColumn("n_norm", l2_norm(F.col("n_v"))).withColumn(
+    c = vectors(corpus, corpus_id, vec_col).withColumn(
         "bucket", lsh_bucket(F.col("n_v"), dim, num_planes)
     )
-    scored = (
-        c.join(F.broadcast(q), on="bucket")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn(
-            "cos", dot(F.col("q_v"), F.col("n_v")) / (F.col("q_norm") * F.col("n_norm"))
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "n_id", F.round("cos", 6).alias("cos"))
-    )
+    return _topk(c, q, k, on="bucket")

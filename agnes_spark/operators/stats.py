@@ -275,38 +275,21 @@ def js_divergence_profile(
     )
 
 
-def _pooled_value_counts(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    group_a,
-    group_b,
-    n_buckets: int = 64,
+def _bucketed_prefix_sums(
+    per_v: DataFrame, cums: dict[str, str], n_buckets: int = 64
 ) -> DataFrame:
-    """Per-distinct-value counts of two groups with EXCLUSIVE pooled
-    prefix sums — the shared substrate of the rank tests
-    (mann_whitney_u, ks_two_sample). Returns (v, ca, cb, cum_a, cum_b,
-    cum_all) where cum_* counts strictly-smaller values.
+    """(v, *counts, *cums): a per-distinct-value count frame `per_v`
+    (v plus the count columns named in `cums`) with, for each count
+    column c, the EXCLUSIVE prefix sum `cums[c]`: the sum of c over
+    strictly smaller values, as a long.
 
     The prefix sum is two-level so no global single-partition window
     ever sees the data: values bucket by range (bounds from one tiny
     min/max agg), per-bucket totals (n_buckets rows) prefix-sum on the
-    driver-bounded bucket frame, and the within-bucket cumsum windows
+    constant-size bucket frame, and the within-bucket cumsum windows
     partition BY BUCKET — at any scale each task holds one bucket's
     distinct values, not the whole grid.
     """
-    g = F.col(group_col)
-    per_v = (
-        df.filter(g.isin([group_a, group_b]) & F.col(value_col).isNotNull())
-        .groupBy(F.col(value_col).alias("v"))
-        .agg(
-            F.count(F.when(g == group_a, F.lit(1))).cast("long").alias("ca"),
-            F.count(F.when(g == group_b, F.lit(1))).cast("long").alias("cb"),
-        )
-        # NOT persisted: A/B-measured slower with a persist here
-        # (mann_whitney 0.80->0.98s, ks_test 0.96->1.34s min — the
-        # single-consumer substrate pipelines better than it caches)
-    )
     bounds = per_v.agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
     bucketed = per_v.crossJoin(F.broadcast(bounds)).withColumn(
         "__bkt",
@@ -329,22 +312,55 @@ def _pooled_value_counts(
     w_bkt = Window.orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
     offs = (
         bucketed.groupBy("__bkt")
-        .agg(F.sum("ca").alias("ba"), F.sum("cb").alias("bb"))
-        .withColumn("off_a", F.coalesce(F.sum("ba").over(w_bkt), F.lit(0)))
-        .withColumn("off_b", F.coalesce(F.sum("bb").over(w_bkt), F.lit(0)))
-        .select("__bkt", "off_a", "off_b")
-    )
-    return (
-        bucketed.join(F.broadcast(offs), "__bkt")
+        .agg(*[F.sum(c).alias(f"__b_{c}") for c in cums])
         .select(
-            "v",
-            "ca",
-            "cb",
-            (F.col("off_a") + F.coalesce(F.sum("ca").over(w_in), F.lit(0))).alias("cum_a"),
-            (F.col("off_b") + F.coalesce(F.sum("cb").over(w_in), F.lit(0))).alias("cum_b"),
+            "__bkt",
+            *[
+                F.coalesce(F.sum(f"__b_{c}").over(w_bkt), F.lit(0)).alias(f"__off_{c}")
+                for c in cums
+            ],
         )
-        .withColumn("cum_all", F.col("cum_a") + F.col("cum_b"))
     )
+    return bucketed.join(F.broadcast(offs), "__bkt").select(
+        "v",
+        *cums,
+        *[
+            (F.col(f"__off_{c}") + F.coalesce(F.sum(c).over(w_in), F.lit(0)))
+            .cast("long")
+            .alias(cum)
+            for c, cum in cums.items()
+        ],
+    )
+
+
+def _pooled_value_counts(
+    df: DataFrame,
+    group_col: str,
+    value_col: str,
+    group_a,
+    group_b,
+    n_buckets: int = 64,
+) -> DataFrame:
+    """Per-distinct-value counts of two groups with EXCLUSIVE pooled
+    prefix sums — the shared substrate of the rank tests
+    (mann_whitney_u, ks_two_sample). Returns (v, ca, cb, cum_a, cum_b,
+    cum_all) where cum_* counts strictly-smaller values
+    (_bucketed_prefix_sums)."""
+    g = F.col(group_col)
+    per_v = (
+        df.filter(g.isin([group_a, group_b]) & F.col(value_col).isNotNull())
+        .groupBy(F.col(value_col).alias("v"))
+        .agg(
+            F.count(F.when(g == group_a, F.lit(1))).cast("long").alias("ca"),
+            F.count(F.when(g == group_b, F.lit(1))).cast("long").alias("cb"),
+        )
+        # NOT persisted: A/B-measured slower with a persist here
+        # (mann_whitney 0.80->0.98s, ks_test 0.96->1.34s min — the
+        # single-consumer substrate pipelines better than it caches)
+    )
+    return _bucketed_prefix_sums(
+        per_v, {"ca": "cum_a", "cb": "cum_b"}, n_buckets
+    ).withColumn("cum_all", F.col("cum_a") + F.col("cum_b"))
 
 
 def mann_whitney_u(
@@ -488,12 +504,8 @@ def mutual_information(
 def _value_counts_cum(df: DataFrame, value_col: str, n_buckets: int = 64) -> DataFrame:
     """Per-distinct-value counts with EXCLUSIVE prefix sums:
     (v, t, cum) where t = count at v and cum counts strictly-smaller
-    values — the single-column substrate under spearman_corr and
-    gini_coefficient. Same two-level bucketed prefix sum as
-    _pooled_value_counts (range buckets from a 1-row bounds agg,
-    per-bucket offsets on the constant-size bucket frame,
-    within-bucket windows partition BY BUCKET), so no global
-    single-partition window at any scale."""
+    values (_bucketed_prefix_sums) — the single-column substrate under
+    spearman_corr and gini_coefficient."""
     per_v = (
         df.filter(F.col(value_col).isNotNull())
         .groupBy(F.col(value_col).alias("v"))
@@ -504,34 +516,7 @@ def _value_counts_cum(df: DataFrame, value_col: str, n_buckets: int = 64) -> Dat
         # reuse already covers the multi-consumption in the cold path
         # and the cache write is a pure materialization barrier
     )
-    bounds = per_v.agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-    bucketed = per_v.crossJoin(F.broadcast(bounds)).withColumn(
-        "__bkt",
-        F.least(
-            F.lit(n_buckets - 1),
-            F.floor(
-                (F.col("v") - F.col("lo"))
-                * F.lit(n_buckets)
-                / (F.col("hi") - F.col("lo") + F.lit(1))
-            ).cast("int"),
-        ),
-    )
-    w_in = (
-        Window.partitionBy("__bkt")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_bkt = Window.orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
-    offs = (
-        bucketed.groupBy("__bkt")
-        .agg(F.sum("t").alias("bt"))
-        .withColumn("off", F.coalesce(F.sum("bt").over(w_bkt), F.lit(0)))
-        .select("__bkt", "off")
-    )
-    cum = F.col("off") + F.coalesce(F.sum("t").over(w_in), F.lit(0))
-    return bucketed.join(F.broadcast(offs), "__bkt").select(
-        "v", "t", cum.cast("long").alias("cum")
-    )
+    return _bucketed_prefix_sums(per_v, {"t": "cum"}, n_buckets)
 
 
 def _doubled_ranks(df: DataFrame, value_col: str, n_buckets: int = 64) -> DataFrame:

@@ -4,8 +4,8 @@ decision_stump is the inner step of CART/C4.5 tree building: find
 the single best binary split "feature <= v" of a 0/1 target by
 weighted Gini impurity. At scale the candidate set is every distinct
 feature value, so the prefix counts that price each split use the
-same two-level bucketed prefix sum as stats._value_counts_cum
-(range buckets from a 1-row bounds agg, per-bucket offsets on the
+two-level bucketed prefix sum of stats._bucketed_prefix_sums (range
+buckets from a 1-row bounds agg, per-bucket offsets on the
 constant-size bucket frame, within-bucket windows partition BY
 BUCKET) — no global single-partition window over data-sized frames.
 
@@ -16,8 +16,10 @@ argmin ties break by ascending split value via lexicographic
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from agnes_spark.operators.stats import _bucketed_prefix_sums
 
 
 def decision_stump(
@@ -44,45 +46,14 @@ def decision_stump(
         # (decision_stump_orders 1.47->1.52s min) — exchange reuse
         # already covers the multi-consumption
     )
-    bounds = per_v.agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-    bucketed = per_v.crossJoin(F.broadcast(bounds)).withColumn(
-        "__bkt",
-        F.least(
-            F.lit(n_buckets - 1),
-            F.floor(
-                (F.col("v") - F.col("lo"))
-                * F.lit(n_buckets)
-                / (F.col("hi") - F.col("lo") + F.lit(1))
-            ).cast("int"),
-        ),
-    )
-    w_in = (
-        Window.partitionBy("__bkt")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_bkt = Window.orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
-    offs = (
-        bucketed.groupBy("__bkt")
-        .agg(
-            F.sum("t").alias("bt"),
-            F.sum("p").alias("bp"),
-        )
-        .withColumn("off_t", F.coalesce(F.sum("bt").over(w_bkt), F.lit(0)))
-        .withColumn("off_p", F.coalesce(F.sum("bp").over(w_bkt), F.lit(0)))
-        .select("__bkt", "off_t", "off_p")
-    )
     totals = per_v.agg(
         F.sum("t").cast("long").alias("nn"), F.sum("p").cast("long").alias("pp")
     )
+    # left side of "feature <= v": the counts up to and including v
     cand = (
-        bucketed.join(F.broadcast(offs), "__bkt")
-        .withColumn(
-            "nl", (F.col("off_t") + F.sum("t").over(w_in)).cast("long")
-        )
-        .withColumn(
-            "pl", (F.col("off_p") + F.sum("p").over(w_in)).cast("long")
-        )
+        _bucketed_prefix_sums(per_v, {"t": "cum_t", "p": "cum_p"}, n_buckets)
+        .withColumn("nl", F.col("cum_t") + F.col("t"))
+        .withColumn("pl", F.col("cum_p") + F.col("p"))
         .crossJoin(F.broadcast(totals))
         .filter(F.col("nl") < F.col("nn"))  # right side must be nonempty
     )

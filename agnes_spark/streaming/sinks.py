@@ -24,11 +24,18 @@ from pyspark.sql.utils import AnalysisException
 
 def _state(spark: SparkSession, path: str, schema: str) -> tuple[DataFrame, bool]:
     """The sink state persisted at `path` and True, or an empty frame
-    of `schema` and False when no batch has written it yet."""
-    try:
-        return spark.read.parquet(path), True
-    except AnalysisException:
-        return spark.createDataFrame([], schema), False
+    of `schema` and False when no batch has written it yet (no path,
+    or an empty directory). The existence check goes through the
+    path's Hadoop FileSystem, so any URI works, and a missing path is
+    never handed to the reader (which would log a WARN with a full
+    FileNotFoundException trace before raising)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+        try:
+            return spark.read.parquet(path), True
+        except AnalysisException:  # an empty directory: no schema to infer
+            pass
+    return spark.createDataFrame([], schema), False
 
 
 def parquet_upsert_sink(out_path: str, partition_cols: list[str]):

@@ -256,3 +256,54 @@ def test_quality_classifier_learns_separable_target(spark, sf_dir):
     assert scored.count() == emb.count()
     rows = scored.limit(50).collect()
     assert all(0 < r.confidence <= 1 for r in rows)
+
+
+def test_ivf_topk_probes_nearest_cells_lower_cell_wins_a_tie(spark):
+    """IvfIndex.topk scores only the rows of each query's n_probe
+    nearest cells, and of two cells at the same distance the lower
+    cell id is probed first. Query (0, 1) is at squared distance 1
+    from cells 1 and 2 and 36 from cell 0; each cell holds one row."""
+    from agnes_spark.operators.simsearch import IvfIndex
+
+    centers = spark.createDataFrame(
+        [(2, [1.0, 1.0]), (1, [-1.0, 1.0]), (0, [0.0, -5.0])],
+        "cell int, ctr array<double>",
+    )
+    assigned = spark.createDataFrame(
+        [
+            (11, [1.0, 1.0], 2.0**0.5, 2),
+            (10, [-1.0, 1.0], 2.0**0.5, 1),
+            (12, [0.0, -1.0], 1.0, 0),
+        ],
+        "n_id long, n_v array<double>, n_norm double, cell int",
+    )
+    index = IvfIndex(assigned, centers, 3)
+    q = spark.createDataFrame([(1, [0.0, 1.0])], "vec_id long, embedding array<float>")
+    probed = {
+        n: sorted(r.n_id for r in index.topk(q, "vec_id", k=5, n_probe=n).collect())
+        for n in (1, 2, 3)
+    }
+    assert probed == {1: [10], 2: [10, 11], 3: [10, 11, 12]}
+
+
+def test_ivf_index_frees_what_it_holds(spark, sf_dir, persistent_rdds):
+    """A built index holds one persistent RDD, its checkpointed cell
+    assignment, in as many partitions as a shuffle makes (so probes
+    read it in parallel), and `unpersist()` frees it; two collected
+    ivf_topk results hold at most one each."""
+    from agnes_spark.operators.simsearch import IvfIndex, ivf_topk
+
+    emb = _emb(spark, sf_dir)
+    before = persistent_rdds()
+    index = IvfIndex.build(emb, "vec_id", n_cells=4, max_iter=2)
+    assert len(persistent_rdds() - before) == 1
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert index.assigned.rdd.getNumPartitions() == n_parts
+    index.unpersist()
+    assert persistent_rdds() - before == set()
+
+    q = emb.filter(F.col("vec_id") < 3)
+    results = [ivf_topk(q, emb, "vec_id", "vec_id", k=3, n_cells=4) for _ in range(2)]
+    for r in results:
+        r.collect()
+    assert len(persistent_rdds() - before) <= len(results)

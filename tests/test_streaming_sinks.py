@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from agnes_spark.streaming.sinks import (
+    _state,
     ingest_dedup_sink,
     ingest_neardup_sink,
     parquet_upsert_sink,
@@ -249,3 +250,29 @@ def test_drain_stops_a_query_whose_batch_raises(spark, tmp_path):
             .foreachBatch(fail)
         )
     assert spark.streams.active == []
+
+
+@pytest.mark.parametrize("layout", ["missing", "empty_dir", "not_parquet", "written"])
+def test_sink_state_outcomes(spark, tmp_path, layout):
+    """`_state` before and after a batch wrote the sink state: no path
+    or an empty directory give an empty frame of the schema and False,
+    a written store its rows and True, and a path holding a file that
+    is not parquet raises."""
+    path = tmp_path / "state"
+    if layout == "empty_dir":
+        path.mkdir()
+    elif layout == "not_parquet":
+        path.write_text("not parquet")
+    elif layout == "written":
+        spark.createDataFrame([("h1", 1)], "content_hash string, keep_id long").write.parquet(
+            str(path)
+        )
+    schema = "content_hash string, keep_id long"
+    if layout == "not_parquet":
+        with pytest.raises(Exception):
+            _state(spark, str(path), schema)[0].collect()
+        return
+    df, persisted = _state(spark, str(path), schema)
+    assert persisted == (layout == "written")
+    assert df.columns == ["content_hash", "keep_id"]
+    assert [tuple(r) for r in df.collect()] == ([("h1", 1)] if persisted else [])
