@@ -2,9 +2,9 @@
 similarity / text operators.
 
 The vector, tokenization, banding and bit helpers compile to Catalyst
-expressions and run JVM-side. The five `*_udf` factories (shingles,
-positional k-gram hashes, hashed shingles, MinHash signatures, SimHash
-bits) are Arrow-batched pandas UDFs: each replaced an expression form
+expressions and run JVM-side. The four `*_udf` factories (positional
+k-gram hashes, hashed shingles, MinHash signatures, SimHash bits) are
+Arrow-batched pandas UDFs: each replaced an expression form
 whose nested higher-order array lambdas are evaluated interpreted,
 per element, and measured slower in bulk.
 """
@@ -61,34 +61,6 @@ def word_shingles(col, n: int = 3) -> Column:
     return F.array_distinct(
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
     )
-
-
-def word_shingles_udf(n: int = 3):
-    """Vectorized twin of word_shingles (array<string> of distinct
-    n-word shingles) as an Arrow-batched pandas UDF.
-
-    Semantically identical to the expression form (same \\s+ split,
-    same distinct), but ~10x faster in bulk: the nested
-    sequence/transform/slice expression tree is evaluated interpreted
-    per array element, while this does plain Python string ops per
-    batch. Use the expression form inside larger Column expressions,
-    this one for corpus-scale dedup pipelines.
-    """
-
-    @F.pandas_udf("array<string>")
-    def _shingle(texts: pd.Series) -> pd.Series:
-        def one(t):
-            if t is None:
-                return []
-            toks = t.split()
-            if len(toks) < n:
-                return []
-            seen = dict.fromkeys(" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1))
-            return list(seen)
-
-        return texts.apply(one)
-
-    return _shingle
 
 
 def positional_kgram_hashes_udf(k: int = 10):

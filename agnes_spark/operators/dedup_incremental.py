@@ -8,7 +8,8 @@ bucket-local lookups into the store:
 
 - exact: a content-hash store — one (content_hash, keep_id) row per
   distinct content, `dedup.first_occurrences` of the corpus — written
-  BUCKETED by hash (write_bucketed), so the shard's anti-join never
+  BUCKETED by hash (write_bucketed) into as many buckets as the
+  session has shuffle partitions, so the shard's anti-join never
   reshuffles the store side; only the delta's hashes move. The probe
   runs the same aggregate over the delta, so its output rows are
   store rows, and the streaming sink (streaming/sinks.py
@@ -54,16 +55,21 @@ from agnes_spark.operators.dedup import (
 from agnes_spark.operators.simsearch import cell_pairs, nearest_cells, vectors
 
 
-def write_exact_store(
-    store: DataFrame, table_name: str, path: str | None = None, num_buckets: int = 32
-) -> None:
+def write_exact_store(store: DataFrame, table_name: str, path: str | None = None) -> None:
     """Persist the hash store — `dedup.first_occurrences` of the corpus,
     (content_hash, keep_id) — bucketed by content_hash: every future
     shard's anti-join reads co-located buckets instead of reshuffling
     the (corpus-sized) store. At 100 TB this asymmetry IS the feature —
-    the store is written once, shards only ever bucket-probe it."""
+    the store is written once, shards only ever bucket-probe it.
+
+    The bucket count is the session's `spark.sql.shuffle.partitions`.
+    A sort-merge probe keeps the store's buckets only when there are at
+    least that many of them (`EnsureRequirements` otherwise reshuffles
+    the store to the shuffle partition count), and more buckets than
+    that only cost small files to write and scan tasks to read."""
     from agnes_spark.operators.partitioning import write_bucketed
 
+    num_buckets = int(store.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     write_bucketed(store, table_name, ["content_hash"], num_buckets, path=path)
 
 

@@ -28,14 +28,24 @@ def _state(spark: SparkSession, path: str, schema: str) -> tuple[DataFrame, bool
     or an empty directory). The existence check goes through the
     path's Hadoop FileSystem, so any URI works, and a missing path is
     never handed to the reader (which would log a WARN with a full
-    FileNotFoundException trace before raising)."""
+    FileNotFoundException trace before raising).
+
+    The empty frame must be empty in a way the optimizer can see: its
+    optimized plan is an empty `LocalRelation` (`OptimizeLimitZero`
+    rewrites the `limit(0)`), so `PropagateEmptyRelation` drops the
+    probe's join against it and the batch runs as if there were no
+    state. A bare `createDataFrame([], schema)` is a `LogicalRDD` of a
+    parallelized Python list, which the optimizer cannot prove empty:
+    every action over it would keep the join and start Python workers
+    to unpickle zero rows, and the first batch of every stream pays
+    that."""
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     if jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
         try:
             return spark.read.parquet(path), True
         except AnalysisException:  # an empty directory: no schema to infer
             pass
-    return spark.createDataFrame([], schema), False
+    return spark.createDataFrame([], schema).limit(0), False
 
 
 def parquet_upsert_sink(out_path: str, partition_cols: list[str]):
@@ -78,7 +88,13 @@ def ingest_dedup_sink(store_path: str, out_path: str, id_col: str, text_col: str
        as they are — they are store-shaped,
 
     so per-batch cost is O(|batch|) + a bucket-local probe; corpus
-    text is never rescanned. Content-level idempotence comes from the
+    text is never rescanned. Before the first batch has written the
+    store, `_state` hands the probe an optimizer-visible empty frame,
+    so that batch plans no anti-join at all. The two writes each read
+    and hash the batch; that second pass is cheap next to the writes
+    themselves, so `new` is not materialized between them (a shared
+    checkpoint measured no faster and would be one more frame to free).
+    Content-level idempotence comes from the
     store itself: a replayed batch re-probes and its hashes are
     already present, so nothing new is accepted — but the batch whose
     append raced a crash can leave duplicate OUT rows; production

@@ -74,7 +74,9 @@ def test_repeat_dedup_minhash_reads_its_cached_frames(spark, sf_dir, persistent_
     seq = again._jdf.queryExecution().optimizedPlan().collectLeaves()
     leaves = [seq.apply(i) for i in range(seq.size())]
     again.write.format("noop").mode("overwrite").save()
-    assert persistent_rdds() == before
+    # only what the call adds: RDDs left by earlier tests may be freed
+    # while it runs, and that is not the call's doing
+    assert persistent_rdds() - before == set()
     assert {leaf.nodeName() for leaf in leaves} == {"InMemoryRelation"}
     columns = [set(leaf.schema().fieldNames()) for leaf in leaves]
     assert any("bucket" in c for c in columns)  # the bands

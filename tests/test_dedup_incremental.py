@@ -59,6 +59,56 @@ def test_incremental_exact_bucketed_store_scan(spark, sf_dir, tmp_path):
     assert out.count() > 0
 
 
+def _path_to(node, name):
+    """Node names from `node` down to the first node whose name ends
+    with `name`, or None when no node below `node` does."""
+    if node.nodeName().endswith(name):
+        return [node.nodeName()]
+    children = node.children()
+    for i in range(children.size()):
+        path = _path_to(children.apply(i), name)
+        if path is not None:
+            return [node.nodeName()] + path
+    return None
+
+
+def test_incremental_exact_store_buckets_follow_shuffle_partitions(spark, sf_dir, tmp_path):
+    """The store has as many buckets as the session has shuffle
+    partitions, so a sort-merge probe (store too big to broadcast)
+    reads the store's buckets as they are: no Exchange between the
+    join and the store's scan, even past 32 shuffle partitions."""
+    conf = spark.conf
+    saved = {
+        k: conf.get(k)
+        for k in ("spark.sql.shuffle.partitions", "spark.sql.autoBroadcastJoinThreshold")
+    }
+    conf.set("spark.sql.shuffle.partitions", "40")
+    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        corpus, delta = _split(_docs(spark, sf_dir))
+        write_exact_store(
+            first_occurrences(corpus, "doc_id", "text"),
+            "agnes_hash_store_sp_test",
+            path=str(tmp_path / "store"),
+        )
+        described = spark.sql("DESCRIBE TABLE EXTENDED agnes_hash_store_sp_test").collect()
+        assert {r.col_name: r.data_type for r in described}["Num Buckets"] == "40"
+        out = incremental_exact_new(
+            delta, spark.table("agnes_hash_store_sp_test"), "doc_id", "text"
+        )
+        plan = out._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()  # the initial plan, before any stage runs
+        assert plan.nodeName() == "SortMergeJoin"
+        store_side = _path_to(plan, "agnes_hash_store_sp_test")
+        assert store_side is not None
+        assert not [n for n in store_side if "Exchange" in n]
+        assert out.count() > 0
+    finally:
+        for k, v in saved.items():
+            conf.set(k, v)
+
+
 def test_incremental_embedding_no_false_pos_and_recall(spark, sf_dir):
     """Delta-vs-corpus-state embedding pairs: every emitted pair is a
     true near-dup (exact verify), and the corpus-trained 2-nearest cell

@@ -8,7 +8,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from agnes_spark.functions import pack_bits, word_shingles, word_shingles_udf
+from agnes_spark.functions import pack_bits, word_shingles
 
 WORDS = st.lists(
     st.text(alphabet=string.ascii_lowercase, min_size=1, max_size=6),
@@ -30,16 +30,6 @@ def test_word_shingles_matches_reference(spark, words):
     df = spark.range(1).select(F.lit(text).alias("t"))
     got = df.select(word_shingles(F.col("t"), 3).alias("s")).collect()[0].s
     assert got == _ref_shingles(words)
-
-
-@settings(max_examples=10, deadline=None)
-@given(WORDS)
-def test_word_shingles_udf_matches_expression_form(spark, words):
-    text = " ".join(words)
-    df = spark.range(1).select(F.lit(text).alias("t"))
-    expr_out = df.select(word_shingles(F.col("t"), 3).alias("s")).collect()[0].s
-    udf_out = df.select(word_shingles_udf(3)(F.col("t")).alias("s")).collect()[0].s
-    assert sorted(udf_out) == sorted(expr_out)
 
 
 @settings(max_examples=20, deadline=None)

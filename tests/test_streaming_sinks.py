@@ -276,3 +276,23 @@ def test_sink_state_outcomes(spark, tmp_path, layout):
     assert persisted == (layout == "written")
     assert df.columns == ["content_hash", "keep_id"]
     assert [tuple(r) for r in df.collect()] == ([("h1", 1)] if persisted else [])
+    if not persisted:
+        # the optimizer sees the empty state, so the probe plans no join
+        from agnes_spark.operators.dedup_incremental import incremental_exact_new
+
+        assert "LogicalRDD" not in _optimized_nodes(df)
+        batch = spark.createDataFrame([(1, "aa"), (2, "aa")], "doc_id long, text string")
+        probe = incremental_exact_new(batch, df, "doc_id", "text")
+        assert "Join" not in _optimized_nodes(probe)
+        assert [r.keep_id for r in probe.collect()] == [1]
+
+
+def _optimized_nodes(df):
+    """Node names of `df`'s optimized logical plan."""
+    names, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        names.append(node.nodeName())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return names
