@@ -2246,6 +2246,27 @@ def dedup_incremental_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _all_embedding_pairs(emb: DataFrame, threshold: float) -> DataFrame:
+    """(a_id, b_id), a_id < b_id: every pair of `emb`'s vectors whose
+    unrounded cosine is >= `threshold`, the exhaustive baseline of the
+    embedding-pair twins. The pairs spread evenly over p = shuffle
+    partitions tasks without a cartesian: the a side is keyed by
+    vec_id % p and dealt round-robin (hashing 8 keys fills 4 of 8
+    partitions), the b side replicated to every key."""
+    from agnes_spark.operators.simsearch import pair_cosine, vectors
+
+    p = int(emb.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    a = vectors(emb, "vec_id", side="a", keep=[(F.col("vec_id") % p).alias("k")])
+    every_key = F.explode(F.sequence(F.lit(0), F.lit(p - 1)).cast("array<long>"))
+    b = vectors(emb, "vec_id", side="b", keep=[every_key.alias("k")])
+    return (
+        a.repartition(p)
+        .join(b, "k")
+        .filter((F.col("a_id") < F.col("b_id")) & (pair_cosine("a", "b") >= threshold))
+        .select("a_id", "b_id")
+    )
+
+
 def _recall_violations(
     exact: DataFrame, got: DataFrame, keys: list[str], floor: float, subset: bool = False
 ) -> DataFrame:
@@ -2288,19 +2309,12 @@ def check_incremental_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     universe). Caught by the r8 sf1.0 sweep: the uncapped baseline is
     400M cosine pairs at 20k vectors — quadratic in corpus size while
     everything it verifies is not."""
-    from agnes_spark.operators.dedup import embedding_dedup_pairs
-
     emb = _t(spark, sf_dir, "embeddings")
     k = max(1, emb.count() // 1500)
     if k > 1:
         emb = emb.filter(F.col("vec_id") % k == 0)
-    exact = (
-        embedding_dedup_pairs(
-            emb.withColumn("_all", F.lit(1)), "vec_id", "embedding", "_all",
-            threshold=0.35,
-        )
-        .filter((F.col("a_id") % 10 == 0) | (F.col("b_id") % 10 == 0))
-        .select("a_id", "b_id")
+    exact = _all_embedding_pairs(emb, 0.35).filter(
+        (F.col("a_id") % 10 == 0) | (F.col("b_id") % 10 == 0)
     )
     got = dedup_incremental_embedding(spark, sf_dir)
     if k > 1:
@@ -3101,12 +3115,7 @@ def check_embedding_auto_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact verify step admits no false positives) and (b) recover >= 50%
     of them (2-nearest KMeans blocking recall; measured well above the
     bound at sf0.01 with the sqrt(N) cell default). Violations -> empty."""
-    from agnes_spark.operators.dedup import embedding_dedup_pairs
-
-    emb = _t(spark, sf_dir, "embeddings")
-    exact = embedding_dedup_pairs(
-        emb.withColumn("_all", F.lit(1)), "vec_id", "embedding", "_all", threshold=0.35
-    ).select("a_id", "b_id")
+    exact = _all_embedding_pairs(_t(spark, sf_dir, "embeddings"), 0.35)
     got = dedup_embedding_auto(spark, sf_dir)
     return _recall_violations(exact, got, ["a_id", "b_id"], 0.5, subset=True)
 
@@ -3524,8 +3533,7 @@ def _gate_scratch(name: str, sf_dir: str) -> str:
     a gate rewrites its files from its current inputs and never reads
     back a file of an earlier call; the parent directory is removed at
     interpreter exit, so repeated gate invocations across processes do
-    not accumulate /tmp copies (same pattern as
-    mlinterop._scratch_dir)."""
+    not accumulate /tmp copies."""
     import shutil
 
     if not _GATE_SCRATCH:

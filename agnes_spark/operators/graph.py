@@ -9,22 +9,20 @@ Two algorithms:
 
 - `connected_components`: min-label propagation (a DataFrame-native
   union-find). Rounds needed = component diameter — for dedup graphs
-  (tiny, dense clusters) that is 2-4. Each round runs exactly ONE job:
-  the changed-row count rides the materializing action as an observed
-  metric (pyspark Observation), instead of a separate count job.
+  (tiny, dense clusters) that is 2-4. The changed-label count rides
+  each round's materializing action as an observed metric.
 - `connected_components_star`: alternating large-star/small-star
   (Kiveris et al., "Connected Components in MapReduce and Beyond",
   SoCC'14) — O(log n) rounds regardless of diameter, for path-shaped /
   high-diameter graphs where label propagation would need O(n) rounds.
-  Convergence (edge-set fixpoint) is read from a count+hash signature
-  computed in the same job that materializes each round's edges.
+  Convergence (edge-set fixpoint) is a count+hash signature observed
+  on the action that materializes each round's edges.
 
-Scale notes: every round is shuffle-bounded (groupBy node / join on
-node); lineage is truncated EVERY round with localCheckpoint (served
-from the round's cache, so it never recomputes). This is mandatory,
-not a nicety: each star round references the previous edge frame
-~12-16 times, so without per-round truncation the logical plan grows
-16^rounds and the driver OOMs building plan strings within ~8 rounds.
+Every iterative operator here (both of the above, `pagerank`, `kcore`
+and `label_propagation`) runs its rounds through one loop, `_rounds`:
+one action per round, its convergence metrics observed on that action,
+lineage truncated on a fixed schedule; `_rounds` gives the reasons.
+Every round is shuffle-bounded (groupBy node / join on node).
 """
 
 from __future__ import annotations
@@ -57,6 +55,61 @@ def broadcast_if_small(spark, n_rows: int):
     return F.broadcast if n_rows <= cap else (lambda df: df)
 
 
+def _rounds(frame, step, max_iter: int, every: int, stop=None):
+    """Run up to `max_iter` rounds from `frame`; return (final frame,
+    rounds run, whether `stop` fired).
+
+    `step(frame, obs)` builds the next round's lazy frame and attaches
+    its convergence metrics with `.observe(obs, ...)`. The round is ONE
+    action: persist, then write to the `noop` sink, which fills the
+    cache and fires the observation without the final aggregation job
+    a count adds. AQE runs each query stage as its own job, so a round
+    is one action, not one job. `stop(metrics)` true ends the loop.
+
+    Every `every`-th round swaps the frame for a localCheckpoint of its
+    cache, truncating the lineage without recomputing it. A plan grows
+    by the times a round reads its predecessor: ~3x for label and rank
+    rounds, so they truncate every 3rd round (27x stays cheap to
+    analyze), but ~16x for a star round, which must truncate every
+    round (deferring 4 rounds OOMed the driver on a 2 GiB plan string).
+    The checkpoint follows the write because a localCheckpoint does not
+    fire an Observation; with no `stop` there is nothing to observe, so
+    such a round checkpoints its lazy frame directly. The last round
+    truncates too: Spark's ContextCleaner frees a dropped result's
+    checkpoint, while a persisted frame would stay in the cache manager
+    until unpersisted. Each superseded frame is freed through
+    `session.supersede`.
+    """
+    stopped, i = False, 0
+    for i in range(1, max_iter + 1):
+        obs = Observation()
+        nxt = step(frame, obs)
+        if stop is None and (i % every == 0 or i == max_iter):
+            nxt = nxt.localCheckpoint(eager=True)
+        else:
+            nxt = nxt.persist()
+            nxt.write.format("noop").mode("overwrite").save()
+            stopped = stop is not None and stop(obs.get)
+            if stopped or i % every == 0 or i == max_iter:
+                nxt = supersede(nxt, nxt.localCheckpoint())
+        frame = supersede(frame, nxt)
+        if stopped:
+            break
+    return frame, i, stopped
+
+
+def _repeats():
+    """A `stop` for `_rounds` that fires when a round's metrics equal
+    the previous round's."""
+    seen = [None]
+
+    def stop(metrics):
+        seen.append(metrics)
+        return seen[-1] == seen[-2]
+
+    return stop
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "a_id",
@@ -80,18 +133,14 @@ def connected_components(
         .persist()
     )
     labels = sym.select(F.col("u").alias("id")).distinct().withColumn("lbl", F.col("id"))
-    changed = 0
-    for i in range(max_iter):
+
+    def step(labels, obs):
         neighbor_min = (
             sym.join(labels, sym.v == labels.id)
             .groupBy("u")
             .agg(F.min("lbl").alias("nlbl"))
         )
-        # fold the convergence check into the materializing job: the
-        # changed-row count is an observed metric of the SAME action
-        # that caches the new labels — one job per round, not two.
-        obs = Observation()
-        new_labels = (
+        return (
             labels.join(neighbor_min, labels.id == neighbor_min.u, "left")
             .select(
                 "id",
@@ -102,28 +151,15 @@ def connected_components(
             )
             .observe(obs, F.sum("__chg").alias("changed"))
             .drop("__chg")
-            .persist()
         )
-        # count() is the round's one full job: it caches new_labels AND
-        # delivers the observed changed-count (localCheckpoint would not
-        # fire the observation listener, so checkpointing happens after,
-        # served from the cache — the plan is never recomputed)
-        new_labels.count()
-        changed = int(obs.get["changed"] or 0)
-        # truncate lineage every 3rd round: label-prop plans grow only
-        # ~3x per round (vs 16x for the star rounds, which truncate
-        # every round), so 3^3=27x between truncations stays cheap to
-        # analyze while skipping two checkpoint jobs out of three. The
-        # checkpoint reads the round's cache — never recomputes.
-        if i % 3 == 2:
-            new_labels = supersede(new_labels, new_labels.localCheckpoint())
-        labels = supersede(labels, new_labels)
-        if changed == 0:
-            break
-    if changed != 0:
+
+    labels, _, converged = _rounds(
+        labels, step, max_iter, every=3, stop=lambda m: not m["changed"]
+    )
+    if not converged:
         warnings.warn(
-            f"connected_components hit max_iter={max_iter} with {changed} labels "
-            "still changing — clusters are partially merged (over-segmented). "
+            f"connected_components hit max_iter={max_iter} with labels still "
+            "changing — clusters are partially merged (over-segmented). "
             "Raise max_iter or use connected_components_star for high-diameter "
             "graphs.",
             RuntimeWarning,
@@ -180,9 +216,9 @@ def connected_components_star(
     edges. Same output contract as `connected_components`:
     (id, cluster_id), isolated nodes omitted.
 
-    Convergence = edge-set fixpoint, detected by a (count, hash-sum)
-    signature computed in the SAME aggregation job that materializes
-    each round — no separate comparison pass.
+    Convergence = edge-set fixpoint: a round's (count, hash-sum)
+    signature, observed on the action that materializes it, equals the
+    previous round's.
     """
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -190,34 +226,23 @@ def connected_components_star(
         .distinct()
         .persist()
     )
-    prev_sig: tuple | None = None
-    converged = False
-    for i in range(max_iter):
-        new_e = _small_star(_large_star(e)).persist()
-        # one full job: materializes new_e and returns the fixpoint
-        # signature. pmod bounds each term to 2^30 so the sums can't
-        # overflow long under ANSI mode even with billions of edges.
-        # Two independently-seeded hash sums plus min/max widen the
-        # signature to ~2^-60 collision odds per round (a single 2^30
-        # sum colliding would silently declare convergence early).
-        row = new_e.agg(
+
+    def step(e, obs):
+        # pmod bounds each term to 2^30 so the sums can't overflow long
+        # under ANSI mode even with billions of edges. Two independently
+        # seeded hash sums plus min/max widen the signature to ~2^-60
+        # collision odds per round (a single 2^30 sum colliding would
+        # silently declare convergence early).
+        return _small_star(_large_star(e)).observe(
+            obs,
             F.count(F.lit(1)).alias("n"),
             F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(1 << 30))).alias("h1"),
             F.sum(F.pmod(F.xxhash64(F.lit(77), "u", "v"), F.lit(1 << 30))).alias("h2"),
             F.min(F.xxhash64("u", "v")).alias("lo"),
             F.max(F.xxhash64("u", "v")).alias("hi"),
-        ).first()
-        sig = (row["n"], row["h1"], row["h2"], row["lo"], row["hi"])
-        # truncate lineage EVERY round (reads the cache — no recompute).
-        # One star round references `e` ~12-16 times, so plan size is
-        # 16^k in uncheckpointed rounds: deferring even 4 rounds put the
-        # plan string at the 2 GiB cap and OOMed the driver.
-        new_e = supersede(new_e, new_e.localCheckpoint())
-        e = supersede(e, new_e)
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
+        )
+
+    e, _, converged = _rounds(e, step, max_iter, every=1, stop=_repeats())
     if not converged:
         warnings.warn(
             f"connected_components_star hit max_iter={max_iter} before the "
@@ -316,14 +341,11 @@ def pagerank(
     """PageRank (Brin & Page 1998) over an edge DataFrame; returns
     (id, rank) normalized so sum(rank) == node count.
 
-    Per-round shape (same discipline as connected_components): ONE
-    materializing job — the contribution join + per-dst sum, with the
+    Per-round shape: ONE materializing action (`_rounds`, every 3rd
+    round truncated) — the contribution join + per-dst sum, with the
     convergence signal (max |rank delta|) and the next round's dangling
-    mass riding the action as observed metrics, never separate jobs.
-    Lineage is truncated with localCheckpoint every 3rd round (rank
-    plans grow ~3x/round; see the module docstring for why unbounded
-    lineage kills iterative DataFrame jobs). Shuffles are bounded by
-    the edge partitioning on src/dst — nothing ever single-partitions.
+    mass observed on that action. Shuffles are bounded by the edge
+    partitioning on src/dst — nothing ever single-partitions.
 
     Dangling nodes (no out-edges) have their mass redistributed
     uniformly each round, the standard correction — so the rank sum is
@@ -352,78 +374,78 @@ def pagerank(
     )
     base = (
         nodes.join(outdeg, nodes.id == outdeg.u, "left")
-        .select("id", F.coalesce("deg", F.lit(0)).alias("deg"))
+        .select("id", F.coalesce("deg", F.lit(0)).alias("deg"), F.lit(1.0).alias("restart"))
         .persist()
     )
-    n_nodes = base.count()  # one job; also materializes base and e's build side
+    n_nodes = base.count()  # one action; also materializes base and e's build side
     if n_nodes == 0:
         e.unpersist()
         base.unpersist()
         return nodes.withColumn("rank", F.lit(1.0))
-    dangling_mass = float(
-        base.filter(F.col("deg") == 0).count()
-    )  # initial ranks are all 1.0
-    if tol <= 0 and dangling_mass == 0.0:
-        # Fixed-round schedule (tol=0) on a graph with NO dangling
-        # nodes: the per-round persist+count below exists only to feed
-        # the convergence signal (unused at tol=0) and the next round's
-        # dangling mass (0.0 forever when every node has an out-edge).
-        # What is left is personalized PageRank with every node a seed.
-        out = _fixed_round_ranks(
-            e, base.withColumn("restart", F.lit(1.0)), d, max_iter, n_nodes
-        )
-        e.unpersist()
-        base.unpersist()
-        out._agnes_iterations = max_iter
-        return out
-    ranks = base.withColumn("rank", F.lit(1.0))
-    for i in range(max_iter):
-        contrib = (
-            e.join(ranks.select(F.col("id").alias("u"), "rank"), "u")
-            .select("v", (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("v")
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        obs = Observation()
-        new_ranks = (
-            ranks.join(contrib, ranks.id == contrib.v, "left")
-            .select(
-                "id",
-                "deg",
-                (
-                    F.lit(1.0 - d)
-                    + F.lit(d)
-                    * (F.coalesce("in_mass", F.lit(0.0)) + F.lit(dangling_mass / n_nodes))
-                ).alias("rank"),
-                F.col("rank").alias("__old"),
+    n_dangling = float(base.filter(F.col("deg") == 0).count())
+    if tol <= 0 and n_dangling == 0.0:
+        # With no early exit and no dangling mass to carry, nothing is
+        # observed: personalized PageRank with every node a seed.
+        ranks = _fixed_round_ranks(e, base, d, max_iter, n_nodes)
+        rounds = max_iter
+    else:
+        hint = broadcast_if_small(e.sparkSession, n_nodes)
+        last = []  # the previous round's Observation
+
+        def step(ranks, obs):
+            # initial ranks are all 1.0, so the first round's dangling
+            # mass is the dangling node count
+            dangling = float(last.pop().get["dangling"] or 0.0) if last else n_dangling
+            last.append(obs)
+            return (
+                _rank_round(e, ranks, ranks, d, dangling / n_nodes, hint)
+                .observe(
+                    obs,
+                    F.max(F.abs(F.col("rank") - F.col("prev"))).alias("max_delta"),
+                    F.sum(F.when(F.col("deg") == 0, F.col("rank")).otherwise(0.0)).alias(
+                        "dangling"
+                    ),
+                )
+                .drop("prev")
             )
-            .withColumn("__delta", F.abs(F.col("rank") - F.col("__old")))
-            .observe(
-                obs,
-                F.max("__delta").alias("max_delta"),
-                F.sum(F.when(F.col("deg") == 0, F.col("rank")).otherwise(0.0)).alias(
-                    "dangling"
-                ),
-            )
-            .drop("__old", "__delta")
-            .persist()
+
+        ranks, rounds, _ = _rounds(
+            base.withColumn("rank", F.lit(1.0)),
+            step,
+            max_iter,
+            every=3,
+            stop=lambda m: (m["max_delta"] or 0.0) < tol,
         )
-        new_ranks.count()  # the round's one job: caches ranks + fires the observation
-        metrics = obs.get
-        max_delta = float(metrics["max_delta"] or 0.0)
-        dangling_mass = float(metrics["dangling"] or 0.0)
-        if i % 3 == 2:
-            new_ranks = supersede(new_ranks, new_ranks.localCheckpoint())
-        ranks = supersede(ranks, new_ranks)
-        if tol > 0 and max_delta < tol:
-            break
     e.unpersist()
     base.unpersist()
     out = ranks.select("id", "rank")
     # rounds actually run — lets tests/diagnostics pin that tol-based
     # early exit really fired (final ranks alone can't distinguish it)
-    out._agnes_iterations = i + 1 if max_iter > 0 else 0
+    out._agnes_iterations = rounds
     return out
+
+
+def _rank_round(e, ranks, base, d: float, dangling: float, hint) -> DataFrame:
+    """One round of PageRank with restart over out-edges `e` (u, v,
+    deg): rank' = (1-d) * restart + d * (in_mass + dangling), where
+    in_mass sums rank/deg of `ranks` (id, rank) over a node's in-edges
+    and `dangling` is the dangling mass each node receives. Returns
+    `base`'s rows (id, deg, restart, ...) with the new `rank`; a rank
+    `base` already carries is kept as `prev`. `hint` marks the
+    node-sized sides (`broadcast_if_small`)."""
+    contrib = (
+        e.join(hint(ranks.select(F.col("id").alias("u"), "rank")), "u")
+        .select("v", (F.col("rank") / F.col("deg")).alias("c"))
+        .groupBy("v")
+        .agg(F.sum("c").alias("in_mass"))
+    )
+    rank = F.lit(1.0 - d) * F.col("restart") + F.lit(d) * (
+        F.coalesce("in_mass", F.lit(0.0)) + F.lit(dangling)
+    )
+    return base.join(hint(contrib), base.id == contrib.v, "left").select(
+        *[F.col(c).alias("prev" if c == "rank" else c) for c in base.columns],
+        rank.alias("rank"),
+    )
 
 
 def within_group_pairs(
@@ -559,12 +581,14 @@ def kcore(
     so the per-round materialization is |V| rows instead of |E| —
     on the sf0.1 co-purchase graph (2.39M edges, 20k nodes) that cut
     the round cost from ~2-3s (persist + count of a 2.3M-row frame)
-    to the alive-set checkpoint. Restricting the FIXED edge set to
+    to the alive-set's. Restricting the FIXED edge set to
     alive_i is pointwise identical to peeling the previous round's
     edge frame (an edge survives round i iff both endpoints were
     alive every round so far, and aliveness is monotone decreasing),
     so degrees and survivors match the edge-frame formulation and the
-    oracle's unrolled rounds exactly.
+    oracle's unrolled rounds exactly. Each round is one action
+    (`_rounds`, every 3rd round truncated), the alive count observed
+    on it.
 
     Early exit at fixpoint is safe for any fixed-schedule twin:
     peeling is monotone, so extra rounds after the fixpoint are
@@ -577,46 +601,31 @@ def kcore(
         F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
     ).persist()
     e.count()
-    alive: DataFrame | None = None  # None = all nodes (round 0)
-    n_alive_prev = -1
-    deg = None
-    for _i in range(max_iter):
-        restricted = e
+
+    def degrees(uv, alive):
+        """(u, deg) over the edges between alive nodes (None = all)."""
         if alive is not None:
-            restricted = e.join(alive, "u", "left_semi").join(
+            uv = uv.join(alive, "u", "left_semi").join(
                 alive.withColumnRenamed("u", "v"), "v", "left_semi"
             )
-        deg = restricted.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-        alive = supersede(
-            alive, deg.filter(F.col("deg") >= k).select("u").localCheckpoint(eager=True)
+        return uv.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
+
+    def step(alive, obs):
+        return (
+            degrees(e, alive)
+            .filter(F.col("deg") >= k)
+            .select("u")
+            .observe(obs, F.count(F.lit(1)).alias("n"))
         )
-        n_alive = alive.count()
-        if n_alive == n_alive_prev:
-            break  # fixpoint: further rounds are identity
-        n_alive_prev = n_alive
-    # Drop the loop-local edge cache BEFORE building the returned
-    # frame: the final aggregate re-derives the trivial (u, v) cast
-    # projection from `edges` (for the gates, a scan of the
-    # already-materialized localCheckpoint), and the returned plan
-    # holds no reference to blocks this function leaked — repeated
-    # invocations in a long bench/driver session stay flat.
+
+    alive, _, _ = _rounds(None, step, max_iter, every=3, stop=_repeats())
+    # The final subgraph's degrees, re-derived from `edges` once `e` is
+    # freed, so the result holds only the alive-set's blocks. With
+    # max_iter <= 0 no peeling ran and `alive` is None: full degrees.
     e.unpersist()
-    # The final subgraph's degrees are the degrees among surviving
-    # nodes — one more restricted aggregate over the fixed edge list.
-    # With max_iter <= 0 no peeling ran and `alive` is still None
-    # (= all nodes): degrade gracefully to full-graph degrees, the
-    # behaviour of the pre-r12 edge-frame formulation.
-    src_uv = edges.select(
-        F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
+    return degrees(e, alive).select(
+        F.col("u").alias("id"), F.col("deg").cast("long").alias("degree")
     )
-    if alive is not None:
-        src_uv = src_uv.join(alive, "u", "left_semi").join(
-            alive.withColumnRenamed("u", "v"), "v", "left_semi"
-        )
-    out = src_uv.groupBy(F.col("u").alias("id")).agg(
-        F.count(F.lit(1)).cast("long").alias("degree")
-    )
-    return out
 
 
 def link_prediction(
@@ -848,12 +857,12 @@ def label_propagation(
     "unchanged" is the only safe stop and a fixed schedule keeps twin
     implementations bit-identical.
 
-    Each round materializes its (node, label) frame (one job): the
-    accurate runtime size of that |V|-row frame is what lets the next
-    round's labels->edges join stay a BROADCAST of the labels side
-    (lazy rounds were measured slower here — the unsized aggregate
-    output forced the planner to sort-merge, re-shuffling the edge
-    frame every round).
+    Each round materializes its (node, label) frame (one action,
+    `_rounds`, every 3rd round truncated): the accurate runtime size
+    of that |V|-row frame is what lets the next round's labels->edges
+    join stay a BROADCAST of the labels side (lazy rounds were
+    measured slower here — the unsized aggregate output forced the
+    planner to sort-merge, re-shuffling the edge frame every round).
     """
     e = edges.select(
         F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
@@ -861,13 +870,14 @@ def label_propagation(
     labels = (
         e.select(F.col("u").alias("id")).distinct().withColumn("lab", F.col("id"))
     )
-    for i in range(max_iter):
+
+    def step(labels, _obs):
         counts = (
             e.join(labels.select(F.col("id").alias("v"), "lab"), "v")
             .groupBy("u", "lab")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        nxt = (
+        return (
             counts.groupBy("u")
             .agg(
                 F.max_by(
@@ -877,12 +887,8 @@ def label_propagation(
             )
             .select(F.col("u").alias("id"), "lab")
         )
-        if i % 3 == 2:
-            nxt = nxt.localCheckpoint(eager=True)
-        else:
-            nxt = nxt.persist()
-        nxt.count()  # materialize; one job per round
-        labels = supersede(labels, nxt)
+
+    labels, _, _ = _rounds(labels, step, max_iter, every=3)
     e.unpersist()
     return labels.select("id", F.col("lab").alias("community"))
 
@@ -904,9 +910,10 @@ def personalized_pagerank(
     graph has no dangling nodes (symmetric co-occurrence graphs
     don't — callers with directed graphs handle dangling upstream).
 
-    Same per-round shape and lineage discipline as pagerank: one
-    contribution join + per-dst sum keyed by the edge partitioning,
-    localCheckpoint every 3rd round. Returns (id, rank)."""
+    The same round as pagerank (`_rank_round`: one contribution join +
+    per-dst sum keyed by the edge partitioning), run on
+    `_fixed_round_ranks`' lazy schedule: three rounds per eager
+    localCheckpoint. Returns (id, rank)."""
     d = float(damping)
     e0 = edges.select(
         F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
@@ -933,38 +940,20 @@ def personalized_pagerank(
 def _fixed_round_ranks(
     e: DataFrame, base: DataFrame, d: float, rounds: int, n_nodes: int
 ) -> DataFrame:
-    """`rounds` rounds of PageRank with restart, rank' = (1-d) *
-    restart + d * in_mass, over out-edges `e` (u, v, deg) from `base`
-    (id, deg, restart) of `n_nodes` rows; starts from rank = restart
-    and returns (id, rank) as a local checkpoint, so the result
-    survives the caller unpersisting `e` and `base`.
+    """`rounds` rounds of `_rank_round` with no dangling mass, over
+    out-edges `e` (u, v, deg) from `base` (id, deg, restart) of
+    `n_nodes` rows; starts from rank = restart and returns (id, rank)
+    as a local checkpoint, so the result survives the caller
+    unpersisting `e` and `base`.
 
-    Fixed rounds need no per-round job: three lazy rounds pipeline
-    into one eager localCheckpoint (plans grow ~3x per round, so 27x
-    between truncations stays cheap to analyze), 8 rounds cost 3
-    scheduling barriers, and the last round always checkpoints. The
-    rank and contribution frames are node-sized while `e` is
-    edge-sized, but post-checkpoint lineage is a LogicalRDD with no
-    stats, so both joins would fall back to sort-merge and re-sort the
-    edge table every round: broadcast the node-sized side while it
-    fits, else keep the shuffle plan that scales unconditionally."""
+    Fixed rounds need no per-round action: three lazy rounds pipeline
+    into one eager localCheckpoint (27x plan growth between truncations
+    stays cheap to analyze), so 8 rounds cost 3 scheduling barriers."""
     hint = broadcast_if_small(e.sparkSession, n_nodes)
     ranks = base.withColumn("rank", F.col("restart"))
     for first in range(0, rounds, 3):
         nxt = ranks
         for _ in range(min(3, rounds - first)):
-            contrib = (
-                e.join(hint(nxt.select(F.col("id").alias("u"), "rank")), "u")
-                .select("v", (F.col("rank") / F.col("deg")).alias("c"))
-                .groupBy("v")
-                .agg(F.sum("c").alias("in_mass"))
-            )
-            nxt = base.join(hint(contrib), base.id == contrib.v, "left").select(
-                "id",
-                (
-                    F.lit(1.0 - d) * F.col("restart")
-                    + F.lit(d) * F.coalesce("in_mass", F.lit(0.0))
-                ).alias("rank"),
-            )
+            nxt = _rank_round(e, nxt, base, d, 0.0, hint).select("id", "rank")
         ranks = supersede(ranks, nxt.localCheckpoint(eager=True))
     return ranks.select("id", "rank")

@@ -19,6 +19,8 @@ pass is one projection, no shuffle, no Python.
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -31,24 +33,6 @@ def with_ml_features(df: DataFrame, vec_col: str, out_col: str = "features") -> 
     from pyspark.ml.functions import array_to_vector
 
     return df.withColumn(out_col, array_to_vector(vec_double(F.col(vec_col))))
-
-
-_SCRATCH: list[str] = []
-
-
-def _scratch_dir() -> str:
-    """One per-process model scratch directory, removed at interpreter
-    exit — repeated fits reuse it (save() overwrites) instead of
-    leaking one mkdtemp per call across a long-lived session."""
-    if not _SCRATCH:
-        import atexit
-        import shutil
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="agnes_lr_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        _SCRATCH.append(d)
-    return _SCRATCH[0]
 
 
 def train_quality_classifier(
@@ -91,12 +75,14 @@ def train_quality_classifier(
     # closures of later scoring jobs (observed as a
     # NotSerializableException: ObservationManager, session-state
     # dependent). A loaded model is coefficients-only — also exactly
-    # what a serving job would use.
+    # what a serving job would use. load() reads the metadata and the
+    # coefficients eagerly, so the directory goes when it returns.
     from pyspark.ml.classification import LogisticRegressionModel
 
-    path = _scratch_dir() + "/model"
-    model.write().overwrite().save(path)
-    return LogisticRegressionModel.load(path), holdout
+    with tempfile.TemporaryDirectory(prefix="agnes_lr_") as d:
+        model.write().save(d + "/model")
+        model = LogisticRegressionModel.load(d + "/model")
+    return model, holdout
 
 
 def score_with_model(model, df: DataFrame, id_col: str, vec_col: str) -> DataFrame:

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from agnes_spark.operators.embeddings import gram_matrix_int
+from agnes_spark.session import supersede
 
 
 def _cov_rows(df: DataFrame, vec_col: str, scale: int) -> tuple[DataFrame, int]:
@@ -67,7 +68,9 @@ def _cov_rows(df: DataFrame, vec_col: str, scale: int) -> tuple[DataFrame, int]:
             lambda st: st.getField("c"),
         ).alias("carr")
     )
-    return crows.localCheckpoint(eager=True), n
+    crows = crows.localCheckpoint(eager=True)
+    supersede(qdf, None)  # the result reads only crows
+    return crows, n
 
 
 def _matvec_local(C: list[list[float]], v: list[float]) -> list[float]:

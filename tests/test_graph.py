@@ -180,6 +180,24 @@ def test_pagerank_converges_and_early_exits(spark):
     assert pagerank(edges, max_iter=7, tol=0)._agnes_iterations == 7
 
 
+def test_pagerank_observed_loop_matches_fixed_rounds(spark):
+    """Both pagerank schedules run the same round: on a graph with no
+    dangling node, tol=0 takes the lazy fixed-round schedule, while a
+    tol too small to stop within max_iter forces the observed loop for
+    all 7 rounds. The ranks agree to 1e-12."""
+    from agnes_spark.operators.graph import pagerank
+
+    # a triangle with a 12-node tail, both directions: no dangling node
+    und = [(1, 2), (2, 3), (1, 3)] + [(i, i + 1) for i in range(3, 15)]
+    edges = spark.createDataFrame(und + [(b, a) for a, b in und], "src long, dst long")
+    fixed = {r.id: r.rank for r in pagerank(edges, max_iter=7, tol=0.0).collect()}
+    observed = pagerank(edges, max_iter=7, tol=1e-300)
+    got = {r.id: r.rank for r in observed.collect()}
+    assert observed._agnes_iterations == 7
+    assert got.keys() == fixed.keys() and len(got) == 15
+    assert max(abs(got[n] - fixed[n]) for n in got) < 1e-12
+
+
 def test_within_group_pairs_matches_self_join(spark, sf_dir):
     """The array pair expansion must produce the IDENTICAL multiset of
     (a < b) pairs as the canonical equi self-join — including
@@ -417,6 +435,8 @@ def test_iterative_rounds_free_superseded_checkpoint_blocks(spark):
         "bpe_train",
         "dbscan_grid",
         "theil_sen",
+        "pca_power_top",
+        "kmeans_assign",
     ],
 )
 def test_iterative_ops_leave_one_persistent_rdd_per_result(spark, persistent_rdds, name):
@@ -424,15 +444,17 @@ def test_iterative_ops_leave_one_persistent_rdd_per_result(spark, persistent_rdd
     not read: after two calls, with both results collected and still
     referenced, the session holds at most one more persistent RDD per
     result. bpe_train returns a driver-local table, so it holds none.
-    dbscan_grid and theil_sen checkpoint intermediate frames and are
-    held to the same bound."""
+    dbscan_grid, theil_sen, pca_power_top and kmeans_assign checkpoint
+    intermediate frames and are held to the same bound."""
     from agnes_spark.operators.bpe import bpe_train
+    from agnes_spark.operators.clustering import kmeans_assign
     from agnes_spark.operators.graph import (
         kcore,
         label_propagation,
         pagerank,
         personalized_pagerank,
     )
+    from agnes_spark.operators.pca import pca_power_top
     from agnes_spark.operators.spatial import dbscan_grid
     from agnes_spark.operators.stats import theil_sen
 
@@ -447,6 +469,9 @@ def test_iterative_ops_leave_one_persistent_rdd_per_result(spark, persistent_rdd
         "id long, x long, y long",
     )
     line = spark.createDataFrame([(x, 3 * x + x % 3) for x in range(12)], "x long, y long")
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 5), i / 4]) for i in range(12)], "id long, v array<double>"
+    )
     op = {
         "pagerank_fixed_rounds": lambda: pagerank(edges, max_iter=7, tol=0.0),
         "pagerank_observed": lambda: pagerank(edges, max_iter=7),
@@ -460,6 +485,8 @@ def test_iterative_ops_leave_one_persistent_rdd_per_result(spark, persistent_rdd
         "bpe_train": lambda: bpe_train(docs, "text", merges=9),
         "dbscan_grid": lambda: dbscan_grid(pts, "id", "x", "y", radius=2, min_pts=3),
         "theil_sen": lambda: theil_sen(line, "x", "y"),
+        "pca_power_top": lambda: pca_power_top(vecs, "v", n_components_out=2),
+        "kmeans_assign": lambda: kmeans_assign(vecs, "id", "v", k=3),
     }[name]
     before = len(persistent_rdds())
     results = [op() for _ in range(2)]

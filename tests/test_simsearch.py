@@ -233,7 +233,12 @@ def test_quality_classifier_learns_separable_target(spark, sf_dir):
     """The ml-interop wiring: deterministic hash holdout, LR fit over
     array features, broadcast-model scoring — holdout accuracy on a
     derived separable target beats 0.8, and scoring covers every row
-    with confidence in (0, 1]."""
+    with confidence in (0, 1]. The fit's save/load round-trip leaves
+    no model directory behind, and the loaded model scores without it."""
+    import glob
+    import os
+    import tempfile
+
     from pyspark.sql import functions as F
 
     from agnes_spark.operators.mlinterop import (
@@ -245,7 +250,10 @@ def test_quality_classifier_learns_separable_target(spark, sf_dir):
         "target",
         ((F.element_at("embedding", 1) + F.element_at("embedding", 2)) > 0).cast("int"),
     )
+    model_dirs = os.path.join(tempfile.gettempdir(), "agnes_lr_*")
+    before = set(glob.glob(model_dirs))
     model, holdout = train_quality_classifier(emb, "vec_id", "embedding", "target")
+    assert set(glob.glob(model_dirs)) <= before
     acc = (
         model.transform(holdout)
         .agg(F.avg((F.col("prediction") == F.col("target").cast("double")).cast("double")))
