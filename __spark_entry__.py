@@ -400,7 +400,7 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agnes_spark.sources.csv import CsvSpec, load_csv
 
     nat = _t(spark, sf_dir, "nation")
-    out_dir = _gate_scratch("csv", sf_dir) + "/nation"
+    out_dir = _gate_scratch("csv") + "/nation"
     nat.coalesce(1).write.mode("overwrite").option("header", True).csv(out_dir)
     spec = CsvSpec(
         fields={
@@ -420,7 +420,7 @@ def xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agnes_spark.sources.formats import read_xml, write_xml
 
     nat = _t(spark, sf_dir, "nation")
-    out_dir = _gate_scratch("xml", sf_dir) + "/nation"
+    out_dir = _gate_scratch("xml") + "/nation"
     write_xml(nat.coalesce(1), out_dir, row_tag="nation", root_tag="nations")
     return read_xml(
         spark,
@@ -439,7 +439,7 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agnes_spark.sources.formats import read_orc, write_orc
 
     nat = _t(spark, sf_dir, "nation")
-    out_dir = _gate_scratch("orc", sf_dir) + "/nation"
+    out_dir = _gate_scratch("orc") + "/nation"
     write_orc(nat, out_dir)
     return read_orc(spark, out_dir).select("n_nationkey", "n_name", "n_regionkey")
 
@@ -482,7 +482,7 @@ def serialize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ords = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
-    base = _gate_scratch("ser", sf_dir)
+    base = _gate_scratch("ser")
     write_json(ords, base + "/j")
     write_parquet(ords, base + "/p")
     back_j = read_json(
@@ -2165,7 +2165,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     corpus, delta = _docs_corpus_delta(spark, sf_dir)
-    path = _gate_scratch("hashstore", sf_dir)
+    path = _gate_scratch("hashstore")
     write_exact_store(
         first_occurrences(corpus, "doc_id", "text"), "agnes_hash_store_gate", path=path
     )
@@ -2182,7 +2182,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus's persisted MinHash band index + shingle table (both
     round-tripped through parquet, as they would live at scale) — no
     corpus text rescan at probe time. Each call rebuilds the state from
-    the current corpus into one per-sf scratch directory.
+    the current corpus into a fresh scratch directory.
     Hash-based — rows-only check; check_incremental_minhash_parity
     pins equality with the full-corpus run."""
     from agnes_spark.operators.dedup_incremental import (
@@ -2192,7 +2192,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus, delta = _docs_corpus_delta(spark, sf_dir)
     bands, shingles = minhash_state(corpus, "doc_id", "text")
-    path = _gate_scratch("mhstate", sf_dir)
+    path = _gate_scratch("mhstate")
     bands.write.mode("overwrite").parquet(path + "/bands")
     shingles.write.mode("overwrite").parquet(path + "/shingles")
     # the delta's state is read three times by the probe: persisted
@@ -2217,7 +2217,7 @@ def dedup_incremental_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     IvfIndex's centers + the 2-nearest cell store, both parquet
     round-tripped (operators/dedup_incremental.py). No corpus vector
     rescan at probe time. Each call rebuilds the state from the current
-    corpus into one per-sf scratch directory. Iterative training
+    corpus into a fresh scratch directory. Iterative training
     underneath — rows-only check; check_incremental_embedding pins
     no-false-positives + recall vs the exhaustive pairs."""
     from agnes_spark.operators.dedup_incremental import (
@@ -2230,7 +2230,7 @@ def dedup_incremental_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.filter(F.col("vec_id") % 10 != 0)
     delta = emb.filter(F.col("vec_id") % 10 == 0)
     index = IvfIndex.build(corpus, "vec_id", "embedding", n_cells=8, max_iter=4)
-    path = _gate_scratch("embstate", sf_dir)
+    path = _gate_scratch("embstate")
     index.centers.write.mode("overwrite").parquet(path + "/centers")
     embedding_cell_store(index).write.mode("overwrite").partitionBy(
         "cell"
@@ -3060,7 +3060,7 @@ def check_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("month").isin("1995-03", "1996-07") & (F.col("o_orderkey") % 5 == 0)
     )
     v1 = orders.exceptAll(late)
-    base = _gate_scratch("roll", sf_dir)
+    base = _gate_scratch("roll")
     write_rollup(
         build_rollup(v1, "month", ["o_orderstatus"], aggs), base, "month"
     )
@@ -3524,30 +3524,29 @@ def moment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GATE_SCRATCH: list[str] = []
 
 
-def _gate_scratch(name: str, sf_dir: str) -> str:
-    """An empty per-process scratch subdirectory `<name>_<sf dir
-    basename>` for gates that write dataset copies, stream sources or
-    state (format round-trips, Z-order / compaction / schema-evolution
-    / partitioned layouts, stream checkpoints and sinks, dedup and
-    rollup state, binary fixtures). Each call clears it, so
-    a gate rewrites its files from its current inputs and never reads
-    back a file of an earlier call; the parent directory is removed at
+def _gate_scratch(name: str) -> str:
+    """A fresh empty directory `<name>_*` for one call of a gate that
+    writes dataset copies, stream sources or state (format round-trips,
+    Z-order / compaction / schema-evolution / partitioned layouts,
+    stream checkpoints and sinks, dedup and rollup state, binary
+    fixtures). The gate writes its files from its current inputs, and
+    the lazy result of an earlier call keeps reading its own files. All
+    of them sit in one per-process directory that is removed at
     interpreter exit, so repeated gate invocations across processes do
     not accumulate /tmp copies."""
-    import shutil
+    import tempfile
 
     if not _GATE_SCRATCH:
         import atexit
-        import tempfile
+        import shutil
 
         d = tempfile.mkdtemp(prefix="agnes_gates_")
         atexit.register(shutil.rmtree, d, ignore_errors=True)
         _GATE_SCRATCH.append(d)
-    sub = f"{name}_{os.path.basename(sf_dir.rstrip('/'))}"
-    path = os.path.join(_GATE_SCRATCH[0], sub)
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path)
-    return path
+    # the parent may have been emptied under us (a harness that wipes
+    # TMPDIR between calls)
+    os.makedirs(_GATE_SCRATCH[0], exist_ok=True)
+    return tempfile.mkdtemp(prefix=f"{name}_", dir=_GATE_SCRATCH[0])
 
 
 def _stream_source(name: str, sf_dir: str, table: str = "events") -> str:
@@ -3555,7 +3554,7 @@ def _stream_source(name: str, sf_dir: str, table: str = "events") -> str:
     directory under the gate's fresh `_gate_scratch` holding `table`'s
     parquet file (symlinked as part-0.parquet). The gate keeps its
     checkpoint, sinks and state next to it, in the parent directory."""
-    src = os.path.join(_gate_scratch(name, sf_dir), "src")
+    src = os.path.join(_gate_scratch(name), "src")
     os.makedirs(src)
     os.symlink(os.path.join(sf_dir, f"{table}.parquet"), os.path.join(src, "part-0.parquet"))
     return src
@@ -3571,7 +3570,7 @@ def zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agnes_spark.operators.partitioning import write_zordered
 
     ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type", "value")
-    path = _gate_scratch("zord", sf_dir) + "/events_z"
+    path = _gate_scratch("zord") + "/events_z"
     write_zordered(ev, path, ["user_id", "event_id"], bits=12, num_files=16)
     back = spark.read.parquet(path)
     return (
@@ -4080,7 +4079,7 @@ def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agnes_spark.operators.partitioning import compact_small_files
 
     ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type", "value")
-    base = _gate_scratch("compact", sf_dir)
+    base = _gate_scratch("compact")
     frag, out = base + "/fragmented", base + "/compacted"
     ev.repartition(64).write.mode("overwrite").parquet(frag)
     compact_small_files(spark, frag, out, target_file_bytes=8 * 1024 * 1024)
@@ -4102,7 +4101,7 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agnes_spark.sources.formats import read_parquet_merged
 
     o = _t(spark, sf_dir, "orders")
-    base = _gate_scratch("schemaevo", sf_dir)
+    base = _gate_scratch("schemaevo")
     p_old, p_new = base + "/b1", base + "/b2"
     o.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
@@ -4161,7 +4160,7 @@ def _orders_by_year_path(spark: SparkSession, sf_dir: str) -> str:
     """Write orders partitioned by o_year (the layout the static and
     dynamic partition-pruning gates read back); returns its path."""
     o = _t(spark, sf_dir, "orders")
-    path = _gate_scratch("partw", sf_dir) + "/orders_by_year"
+    path = _gate_scratch("partw") + "/orders_by_year"
     o.withColumn("o_year", F.year("o_orderdate")).write.mode(
         "overwrite"
     ).partitionBy("o_year").parquet(path)
@@ -5609,7 +5608,7 @@ def binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .collect()
     )
-    d = _gate_scratch("binfiles", sf_dir)
+    d = _gate_scratch("binfiles")
     for r in docs:
         with open(os.path.join(d, f"{r.doc_id}.bin"), "wb") as fh:
             fh.write(r.text.encode("utf-8"))
@@ -5655,7 +5654,7 @@ def image_header_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .collect()
     ]
-    d = _gate_scratch("imgfiles", sf_dir)
+    d = _gate_scratch("imgfiles")
     for i in ids:
         w, h = 16 + (i * 7) % 2048, 16 + (i * 13) % 2048
         v = (i // 25) % 8
@@ -7529,7 +7528,7 @@ def media_header_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .collect()
     ]
-    d = _gate_scratch("mediafiles", sf_dir)
+    d = _gate_scratch("mediafiles")
     for i in ids:
         ch = 1 + i % 3
         sr = (8000, 16000, 44100, 48000)[i % 4]

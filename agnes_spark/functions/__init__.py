@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from agnes_spark.sqltext import quote_ident
+
 
 # -- vectors ---------------------------------------------------------------
 
@@ -134,7 +136,10 @@ def hashed_shingles_udf(n: int = 3):
 
         return texts.apply(one)
 
-    return _h
+    # nondeterministic only to the optimizer: a size() filter on the
+    # sets (shingle_sets' own, an explode's inferred one) then stays
+    # above the UDF instead of running it a second time below it
+    return _h.asNondeterministic()
 
 
 def _splitmix64(x: int) -> int:
@@ -226,3 +231,21 @@ def pack_bits(bits_slice) -> Column:
 def hamming_bits(a, b) -> Column:
     """Hamming distance between two equal-length bit arrays."""
     return F.size(F.filter(F.zip_with(a, b, lambda x, y: x != y), lambda d: d))
+
+
+# -- pairs -----------------------------------------------------------------
+
+def unordered_pairs(items: str) -> Column:
+    """The pairs of the array column named `items` as
+    array<struct<a, b>>, a the least and b the greatest of the two
+    elements: one pair per two positions, skipping equal elements (a
+    value listed twice pairs once per copy). Callers collect a group's
+    members into an array and explode this, so the expansion runs
+    map-side after one shuffle and is bounded by the group size
+    squared. Elements must be orderable; structs order field by field."""
+    a = quote_ident(items)
+    return F.expr(
+        f"flatten(transform({a}, (x, i) -> transform("
+        f"array_remove(slice({a}, i + 2, size({a}) - i - 1), x), "
+        "y -> struct(least(x, y) AS a, greatest(x, y) AS b))))"
+    )

@@ -122,14 +122,7 @@ def ngram_jaccard_pairs(
     """Exact n-gram-shingle Jaccard similarity join (pairs >= threshold)
     — `jaccard_pairs_from_sets` over text shingles; see that function
     for the AllPairs/PPJoin prefix-filter design."""
-    shingle_udf = hashed_shingles_udf(n)
-    sets = (
-        # repartition BEFORE the Python stage: a single-file source
-        # otherwise runs the whole UDF serially in one worker
-        df.repartition(F.col(id_col))
-        .select(F.col(id_col), shingle_udf(F.col(text_col)).alias("shash"))
-    )
-    return jaccard_pairs_from_sets(sets, id_col, threshold)
+    return jaccard_pairs_from_sets(shingle_sets(df, id_col, text_col, n), id_col, threshold)
 
 
 def jaccard_pairs_from_sets(

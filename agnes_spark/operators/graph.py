@@ -32,6 +32,7 @@ import warnings
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from agnes_spark.functions import unordered_pairs
 from agnes_spark.session import supersede
 
 
@@ -457,25 +458,14 @@ def within_group_pairs(
     ordered-position pair whose values differ (identical multiset to
     the a.item < b.item equi self-join, measured at sf0.1, but with
     ONE shuffle instead of two join sides + a join: items collect per
-    group, pairs expand map-side inside codegen, bounded by
-    items-per-group squared). ~35% faster than the self-join at sf0.1
-    and strictly fewer network passes at any scale. Item ids are
-    handled as BIGINT (the null-branch struct type is fixed); other
-    id types are cast on the way in."""
+    group and `unordered_pairs` expands them map-side). ~35% faster
+    than the self-join at sf0.1 and strictly fewer network passes at
+    any scale. Item ids come out as BIGINT."""
     arr = df.groupBy(group_col).agg(
         F.collect_list(F.col(item_col).cast("long")).alias("__items")
     )
-    pairs = F.expr(
-        """
-        flatten(transform(__items, (x, i) ->
-          filter(transform(slice(__items, i + 2, size(__items) - i - 1), y ->
-            IF(x = y, CAST(NULL AS STRUCT<a: BIGINT, b: BIGINT>),
-               struct(least(x, y) AS a, greatest(x, y) AS b))),
-            p -> p IS NOT NULL)))
-        """
-    )
-    return arr.select(F.explode(pairs).alias("__p")).select(
-        F.col("__p.a").alias("a"), F.col("__p.b").alias("b")
+    return arr.select(F.explode(unordered_pairs("__items")).alias("__p")).select(
+        "__p.a", "__p.b"
     )
 
 

@@ -6,9 +6,9 @@ the baskets containing them overlap, scored by binary cosine
 similarity c_ab / sqrt(d_a * d_b) where c_ab counts shared baskets
 and d_x the item's basket degree.
 
-Scale shape: ONE shuffle collects each basket's distinct items as a
-sorted array (collect_set — no separate distinct pre-pass), pairs
-expand map-side from the upper triangle (bounded by items-per-basket
+Scale shape: ONE shuffle collects each basket's distinct items as an
+array (collect_set — no separate distinct pre-pass), pairs expand
+map-side (`functions.unordered_pairs`, bounded by items-per-basket
 squared — never item-cardinality squared), degrees and the basket
 count derive from the same arrays, and the top-k cut is a per-item
 window.
@@ -22,34 +22,36 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from agnes_spark.functions import unordered_pairs
 
-def _basket_arrays(df: DataFrame, basket_col: str, item_col: str) -> DataFrame:
-    """ONE shuffle shared by every consumer: the distinct items of each
-    basket as a sorted array. collect_set dedups (basket, item)
-    repeats inside the aggregate, so the separate `.distinct()`
-    pre-pass (a full (o, p) exchange of the fact rows) disappears —
-    pair expansion, per-item basket degrees and the basket count all
-    derive from this frame and share its exchange via ReuseExchange."""
-    return df.groupBy(F.col(basket_col).alias("o")).agg(
-        F.sort_array(
-            F.collect_set(F.col(item_col).cast("long"))
-        ).alias("items")
+
+def _basket_counts(
+    df: DataFrame, basket_col: str, item_col: str, min_common: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """ONE shuffle shared by every consumer, and the counts derived
+    from it: (baskets, deg, common). `baskets` holds the distinct
+    items of each basket as an array; collect_set dedups (basket,
+    item) repeats inside the aggregate, so no `.distinct()` pre-pass
+    (a full (o, p) exchange of the fact rows) is needed. `deg` (p, d)
+    counts each item's baskets and `common` (a, b, c) the baskets an
+    item pair a < b shares, kept when c >= `min_common`; both read the
+    baskets' exchange through ReuseExchange."""
+    arr = df.groupBy(F.col(basket_col).alias("o")).agg(
+        F.collect_set(F.col(item_col).cast("long")).alias("items")
     )
-
-
-def _pairs_expr():
-    """Upper-triangle (i < j) pair expansion over a sorted-distinct
-    items array: a < b holds by construction, no null-filter pass
-    needed (within_group_pairs needs one because its input arrays
-    carry duplicates; these are collect_set outputs). A function, not
-    a module constant: F.expr needs an active SparkContext."""
-    return F.expr(
-        """
-        flatten(transform(items, (x, i) ->
-          transform(slice(items, i + 2, size(items) - i - 1), y ->
-            struct(x AS a, y AS b))))
-        """
+    deg = (
+        arr.select(F.explode("items").alias("p"))
+        .groupBy("p")
+        .agg(F.count(F.lit(1)).cast("long").alias("d"))
     )
+    common = (
+        arr.select(F.explode(unordered_pairs("items")).alias("__p"))
+        .select("__p.a", "__p.b")
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+        .filter(F.col("c") >= min_common)
+    )
+    return arr, deg, common
 
 
 def itemitem_cosine(
@@ -63,19 +65,7 @@ def itemitem_cosine(
     with binary-cosine sim, at least `min_common` shared baskets,
     ties broken by ascending q. Duplicate (basket, item) rows
     collapse first so c and d count DISTINCT baskets."""
-    arr = _basket_arrays(df, basket_col, item_col)
-    deg = (
-        arr.select(F.explode("items").alias("p"))
-        .groupBy("p")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
-    common = (
-        arr.select(F.explode(_pairs_expr()).alias("__p"))
-        .select(F.col("__p.a").alias("a"), F.col("__p.b").alias("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .filter(F.col("c") >= min_common)
-    )
+    _, deg, common = _basket_counts(df, basket_col, item_col, min_common)
     sym = common.select(
         F.col("a").alias("p"), F.col("b").alias("q"), "c"
     ).unionByName(
@@ -113,20 +103,8 @@ def association_rules(
     top-`top` rules by (lift desc, antecedent, consequent). Same
     one-shuffle pair generation as itemitem_cosine; every score is a
     fixed expression over exact integers — bit-deterministic."""
-    arr = _basket_arrays(df, basket_col, item_col)
+    arr, deg, common = _basket_counts(df, basket_col, item_col, min_common)
     n_baskets = arr.agg(F.count(F.lit(1)).cast("long").alias("nb"))
-    deg = (
-        arr.select(F.explode("items").alias("p"))
-        .groupBy("p")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
-    common = (
-        arr.select(F.explode(_pairs_expr()).alias("__p"))
-        .select(F.col("__p.a").alias("a"), F.col("__p.b").alias("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .filter(F.col("c") >= min_common)
-    )
     directed = common.select(
         F.col("a").alias("ante"), F.col("b").alias("cons"), "c"
     ).unionByName(

@@ -12,7 +12,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from agnes_spark.functions import ws_tokens
+from agnes_spark.functions import unordered_pairs, ws_tokens
 
 # Stopword profiles for the n-gram/stopword language-ID heuristic.
 # Deliberately small: membership of high-frequency function words is
@@ -335,12 +335,10 @@ def winnow_fingerprints(
 
         return texts.apply(one)
 
-    return df.withColumn(out_col, _win(F.col(text_col)))
-
-
-# at most ONE cached exploded-fingerprint frame per process — see
-# winnow_overlap_pairs
-_WINNOW_FP_LAST: list = []
+    # nondeterministic only to the optimizer: an explode's inferred
+    # size() > 0 filter then stays above the UDF instead of running it
+    # a second time below it
+    return df.withColumn(out_col, _win.asNondeterministic()(F.col(text_col)))
 
 
 def winnow_overlap_pairs(
@@ -359,44 +357,33 @@ def winnow_overlap_pairs(
     this catches COPIED PASSAGES inside otherwise different documents,
     which whole-doc and shingle-set Jaccard both dilute away.
 
-    Same scale shape as every candidate join here: explode the
-    per-doc-distinct 8-byte fingerprints, equi self-join on the
-    fingerprint, count per pair. A fingerprint shared by m docs costs
-    m^2/2 pair rows — hot boilerplate fingerprints are the skew to
-    watch; cap them upstream with a document-frequency filter if the
-    corpus has mirrored headers (the interdoc_repetition signal).
-
-    Each doc's fingerprint COUNT is taken from the array before the
-    explode and rides both join sides, so there is no separate sizes
-    pass to join back. The exploded frame is persisted so the winnow
-    UDF runs once, not once per self-join side (ReuseExchange does not
-    canonicalize the two aliased subplans equal here, verified on the
-    executed adaptive plan) — and the cache is BOUNDED: each call
-    releases the previous call's frame, so a long-lived session holds
-    at most one fingerprint cache regardless of call count. (A
-    localCheckpoint variant was rejected: it made plan CONSTRUCTION
-    eagerly run the whole job and left unreleasable blocks.)
+    Scale shape of `graph.within_group_pairs`: each doc's distinct
+    8-byte fingerprints explode once, the docs holding a fingerprint
+    collect per fingerprint (ONE shuffle), their pairs expand map-side
+    (`unordered_pairs`) and are counted per doc pair. Each doc's
+    fingerprint COUNT rides along from the array, so there is no
+    separate sizes pass to join back. A fingerprint shared by m docs
+    costs m^2/2 pair rows — hot boilerplate fingerprints are the skew
+    to watch; cap them upstream with a document-frequency filter if
+    the corpus has mirrored headers (the interdoc_repetition signal).
     """
     fp = winnow_fingerprints(df, text_col, k=k, w=w).select(
-        F.col(id_col),
-        F.size("fingerprints").alias("n_fp"),
+        F.struct(
+            F.col(id_col).alias("id"), F.size("fingerprints").alias("n_fp")
+        ).alias("doc"),
         F.explode("fingerprints").alias("fp"),
-    ).persist()
-    while _WINNOW_FP_LAST:
-        _WINNOW_FP_LAST.pop().unpersist()
-    _WINNOW_FP_LAST.append(fp)
+    )
     return (
-        fp.alias("x")
-        .join(fp.alias("y"), "fp")
-        .filter(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
+        fp.groupBy("fp")
+        .agg(F.collect_list("doc").alias("docs"))
+        .select(F.explode(unordered_pairs("docs")).alias("p"))
         .groupBy(
-            F.col(f"x.{id_col}").alias("a_id"), F.col(f"y.{id_col}").alias("b_id")
+            F.col("p.a.id").alias("a_id"),
+            F.col("p.b.id").alias("b_id"),
+            F.col("p.a.n_fp").alias("a_fp"),
+            F.col("p.b.n_fp").alias("b_fp"),
         )
-        .agg(
-            F.count(F.lit(1)).alias("shared_fp"),
-            F.max("x.n_fp").alias("a_fp"),
-            F.max("y.n_fp").alias("b_fp"),
-        )
+        .agg(F.count(F.lit(1)).alias("shared_fp"))
         .filter(F.col("shared_fp") >= min_shared)
         .select("a_id", "b_id", "shared_fp", "a_fp", "b_fp")
     )
@@ -721,21 +708,17 @@ def ngram_novelty(
     n_novel, novelty) with exact integer counts.
 
     Shape: the distinct (doc, gram-hash) frame from the shared
-    shingle UDF, a min-over-gram window (one shuffle keyed by the
-    8-byte hash — the window-count-over-hash pattern, no join-back),
-    then a per-doc count aggregate. Gram strings never shuffle.
+    shingle sets (`dedup.shingle_sets`), a min-over-gram window (one
+    shuffle keyed by the 8-byte hash — the window-count-over-hash
+    pattern, no join-back), then a per-doc count aggregate. Gram
+    strings never shuffle.
     """
     from pyspark.sql import Window
 
-    from agnes_spark.functions import hashed_shingles_udf
+    from agnes_spark.operators.dedup import shingle_sets
 
-    sh = hashed_shingles_udf(n)
-    g = (
-        # explode_outer, NOT explode: the plain generator injects a
-        # size()>0 pre-filter that re-inlines (re-runs) the UDF
-        df.repartition(F.col(id_col))
-        .select(F.col(id_col), F.explode_outer(sh(F.col(text_col))).alias("h"))
-        .filter(F.col("h").isNotNull())
+    g = shingle_sets(df, id_col, text_col, n).select(
+        F.col(id_col), F.explode("shash").alias("h")
     )
     first = F.min(id_col).over(Window.partitionBy("h"))
     per = (

@@ -109,11 +109,6 @@ def sniff_and_load(spark: SparkSession, path: str, columns: Sequence[str] | None
     return df
 
 
-# one-slot cache: the latest tolerant parse's persisted relation
-# (bounded-cache convention; see load_csv_tolerant docstring)
-_TOLERANT_RAW_LAST: list = []
-
-
 def load_csv_tolerant(
     spark: SparkSession, path: str, spec: CsvSpec
 ) -> tuple[DataFrame, DataFrame]:
@@ -126,12 +121,11 @@ def load_csv_tolerant(
     Returns (good, bad): `good` has the spec'd fields typed and
     renamed from rows that parsed cleanly; `bad` has one `raw` string
     column holding each malformed line for quarantine/replay. The
-    split is one scan — both frames share the parsed relation. The
-    cache behind the split is one-outstanding-per-process (each call
-    unpersists the previous call's relation, same convention as
-    winnow_overlap_pairs): long-lived sessions do not accumulate
-    cached parses, at the cost that only the LATEST (good, bad) pair
-    stays cache-backed — recompute of an older pair re-parses.
+    split is one scan: both frames read one lazy local checkpoint of
+    the parse, which the first action over either fills and Spark
+    frees once neither frame is referenced. (It is also what lets
+    `bad` select only the corrupt-record column, which Spark refuses
+    on a raw CSV scan.)
 
     A row lands in `bad` when the parser cannot produce the declared
     source columns (wrong column count, unclosed quote). Type failures
@@ -151,10 +145,7 @@ def load_csv_tolerant(
         mode="PERMISSIVE",
         schema=src_schema + ", `_corrupt` string",
         columnNameOfCorruptRecord="_corrupt",
-    ).cache()  # one parse serves both sides of the split
-    while _TOLERANT_RAW_LAST:
-        _TOLERANT_RAW_LAST.pop().unpersist()
-    _TOLERANT_RAW_LAST.append(raw)
+    ).localCheckpoint(eager=False)
     good = raw.filter(F.col("_corrupt").isNull()).select(
         *[
             F.col(src).try_cast(spec.spark_type(label)).alias(label)

@@ -2,13 +2,17 @@
 
 Runs each __spark_entry__.queries() entry on Spark and its
 oracle_sql() twin on DuckDB at sf0.01 (or $SF_DIR), compares row
-count, column names, and an order-insensitive value multiset.
+count, column names, and an order-insensitive value multiset. A query
+with no oracle prints its row count and a sha256 of its normalized,
+sorted rows, so two checkouts' runs of a hash-based key compare by a
+diff of those lines.
 
 Usage: python scripts/check_oracle.py [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 import sys
@@ -73,7 +77,10 @@ def main() -> int:
             continue
         spark_s = _time.perf_counter() - t0
         if name not in oracles:
-            print(f"rows  {name}: {len(srows)} rows (no oracle) [{spark_s:.2f}s]")
+            digest = hashlib.sha256(
+                repr(to_multiset(scols, [tuple(r) for r in srows])).encode()
+            ).hexdigest()
+            print(f"rows  {name}: {len(srows)} rows (no oracle) sha256={digest} [{spark_s:.2f}s]")
             continue
         try:
             res = con.execute(oracles[name])

@@ -314,3 +314,19 @@ def test_byte_shingles_stay_jvm_side(spark):
         .toString()
     )
     assert "Python" not in plan
+
+
+def test_shingle_sets_run_the_udf_once_after_the_repartition(spark, sf_dir):
+    """The sets' size() filter stays above the shingle UDF: the
+    optimized plan evaluates the UDF once, and above the repartition
+    that spreads it over workers, never on the scan below it."""
+    from agnes_spark.operators.dedup import shingle_sets
+
+    plan = (
+        shingle_sets(_docs(spark, sf_dir), "doc_id", "text")
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    assert plan.count("ArrowEvalPython") == 1
+    assert plan.index("ArrowEvalPython") < plan.index("RepartitionByExpression")

@@ -203,8 +203,9 @@ def test_incremental_minhash_sets_only_path_matches(spark, sf_dir, persistent_rd
 
 def test_incremental_state_builds_leave_no_temp_dirs(spark, sf_dir):
     """The registry's incremental minhash / embedding ops rebuild their
-    corpus state on every call into one reused scratch directory, so
-    repeated calls create no new temp directory of their own."""
+    corpus state on every call inside the process's one gate scratch
+    directory, so repeated calls create no top-level temp directory of
+    their own."""
     import os
     import tempfile
 
@@ -222,3 +223,14 @@ def test_incremental_state_builds_leave_no_temp_dirs(spark, sf_dir):
         entrymod.dedup_incremental_minhash(spark, sf_dir)
         entrymod.dedup_incremental_embedding(spark, sf_dir)
     assert state_dirs() == before
+
+
+def test_dedup_incremental_result_outlives_the_next_call(spark, sf_dir):
+    """Each `dedup_incremental` call writes its hash store into its own
+    directory, so a result collected after a later call still reads its
+    store and gives the same rows."""
+    import __spark_entry__ as entrymod
+
+    first = entrymod.dedup_incremental(spark, sf_dir)
+    second = entrymod.dedup_incremental(spark, sf_dir)
+    assert first.collect() == second.collect()

@@ -261,6 +261,26 @@ def test_load_csv_tolerant_quarantines_malformed_rows(spark, tmp_path):
     assert any(r.startswith("4,date") for r in raws)
 
 
+def test_load_csv_tolerant_repeat_calls_each_read_their_parse(spark, tmp_path):
+    """Two calls over one path each return a (good, bad) pair that
+    collects, and a call after the file is rewritten reads the new
+    rows."""
+    from agnes_spark.sources.csv import CsvSpec, load_csv_tolerant
+
+    p = tmp_path / "messy.csv"
+    p.write_text("id,name\n1,apple\n2\n")
+    spec = CsvSpec(fields={"id": ("id", "i64"), "name": ("name", "string")})
+    first = load_csv_tolerant(spark, str(p), spec)
+    second = load_csv_tolerant(spark, str(p), spec)
+    for good, bad in (first, second):
+        assert [r["id"] for r in good.collect()] == [1]
+        assert [r["raw"] for r in bad.collect()] == ["2"]
+    p.write_text("id,name\n3,cherry\n4,date,extra\n5\n")
+    good, bad = load_csv_tolerant(spark, str(p), spec)
+    assert [r["id"] for r in good.collect()] == [3]
+    assert sorted(r["raw"] for r in bad.collect()) == ["4,date,extra", "5"]
+
+
 def test_catalog_sees_a_file_rewritten_at_the_same_path(spark, tmp_path):
     """The catalog reuses a resolved source only while the file's stat
     stamp holds: a rewrite with other rows and an added column is

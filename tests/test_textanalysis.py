@@ -298,3 +298,20 @@ def test_char_entropy_known_distributions(spark):
     assert out[1].n_chars == 4 and abs(out[1].entropy_nats) < 1e-15
     assert abs(out[2].entropy_nats - math.log(2)) < 1e-12
     assert abs(out[3].entropy_nats - math.log(4)) < 1e-12
+
+
+def test_repeat_winnow_overlap_pairs_runs_the_udf_once(spark, sf_dir, persistent_rdds):
+    """A second call over the same input is a lazy plan of its own: it
+    persists nothing, evaluates the winnow UDF on one plan branch and
+    gives the first call's rows."""
+    from agnes_spark.operators.textanalysis import winnow_overlap_pairs
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    before = persistent_rdds()
+    first = winnow_overlap_pairs(docs, "doc_id", "text", k=20, w=8, min_shared=3)
+    second = winnow_overlap_pairs(docs, "doc_id", "text", k=20, w=8, min_shared=3)
+    plan = second._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
+    assert "InMemoryRelation" not in plan
+    assert sorted(first.collect()) == sorted(second.collect())
+    assert persistent_rdds() - before == set()
